@@ -71,17 +71,21 @@ def events_sessionized(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     events = load_table(spark, sf_dir, "events")
-    from ..functions.timeutil import epoch_s as _epoch_s
+    from ..functions.timeutil import epoch_us as _epoch_us
 
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     # tz-independent wall-clock gap (ts is TIMESTAMP_NTZ; unix_timestamp
-    # would coerce through the session timezone or crash)
-    gap = col("_ts_s") - F.lag("_ts_s").over(w)
-    marked = events.withColumn("_ts_s", _epoch_s("ts")).select(
+    # would coerce through the session timezone or crash), in microseconds:
+    # the oracle compares fractional epoch() seconds, so whole seconds
+    # would read a 1800.5 s gap as 1800 and miss the session start
+    gap = col("_ts_us") - F.lag("_ts_us").over(w)
+    marked = events.withColumn("_ts_us", _epoch_us("ts")).select(
         "user_id",
         "event_id",
         "ts",
-        F.when(gap.isNull() | (gap > _SESSION_GAP_S), 1).otherwise(0).alias("is_start"),
+        F.when(gap.isNull() | (gap > _SESSION_GAP_S * 1_000_000), 1)
+        .otherwise(0)
+        .alias("is_start"),
     )
     numbered = marked.select(
         "user_id",

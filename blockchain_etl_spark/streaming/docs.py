@@ -29,6 +29,7 @@ from pyspark.sql.functions import col
 from ..operators.chunk_index import ChunkDFIndex
 from ..operators.lsh_index import MinHashIndex
 from ..operators.merge import ParquetMergeTarget, merge_latest
+from .fanout import run_tasks
 
 MIN_TOKENS = 10
 MIN_DISTINCT_FP = 150_000
@@ -379,7 +380,7 @@ class DocIngest:
         # cheap count on the ≤GATE-batch frame) before the fan-out.
         if len(sh_consumers) > 1:
             sh.count()
-        self._run_plane_tasks(tasks)
+        run_tasks(tasks)
         # the hash-inventory merge commits LAST: its watermark is the
         # replay guard at the top, so every index upsert above must be
         # durable before it advances — a crash anywhere in this method
@@ -393,47 +394,6 @@ class DocIngest:
             ),
             watermark=batch_id,
         )
-
-    @staticmethod
-    def _run_plane_tasks(tasks) -> None:
-        """Run the independent plane folds concurrently (driver threads —
-        Spark's scheduler runs their jobs side by side). ALL tasks run to
-        completion before any failure is re-raised, so a crash leaves
-        every surviving plane durably committed (the straggler subset the
-        doctor heals), never a thread still writing while the caller
-        unwinds. Single task → run inline (no thread overhead)."""
-        if not tasks:
-            return
-        if len(tasks) == 1:
-            tasks[0][1]()
-            return
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=len(tasks)) as ex:
-            futures = [(name, ex.submit(fn)) for name, fn in tasks]
-            errs = []
-            for name, fut in futures:
-                err = fut.exception()
-                if err is not None:
-                    errs.append((name, err))
-        if errs:
-            first_name, first_err = errs[0]
-            if len(errs) > 1:
-                # a multi-plane incident must surface EVERY failed plane,
-                # not just whichever future was polled first. Raise a NEW
-                # summary error with the first failure as __cause__ —
-                # mutating first_err.args would silently drop the summary
-                # for exception types whose __str__ does not render from
-                # args (OSError(errno, strerror), Py4J errors — i.e. the
-                # disk-full incidents this exists for).
-                summary = "; ".join(
-                    f"{n}: {type(e).__name__}: {e}" for n, e in errs
-                )
-                raise RuntimeError(
-                    f"{len(errs)} concurrent plane failures "
-                    f"(first: {first_name}): {summary}"
-                ) from first_err
-            raise first_err
 
     def _fold_vector_plane(self, spark, fresh, batch_id: int) -> None:
         # retrieval plane: every fresh doc's chunks feature-hashed to

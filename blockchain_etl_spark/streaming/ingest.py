@@ -10,12 +10,20 @@ Reference semantics being emulated (and how):
 - One DB transaction per block spanning all 12 handlers
   (src/be_db_follower.erl:86-108): Spark has no multi-table transaction, so
   the guarantee is weakened to "every table write is idempotent (same block
-  range overwrites the same directory), and the `_sync/height.json`
-  watermark is written last" — a crash mid-batch replays the whole range and
-  converges (SURVEY §7.4 T1).
+  range overwrites the same directory), every inventory merge skips itself
+  on its own watermark, and the `_sync/height.json` watermark is written
+  last" — a crash mid-batch replays the whole range and converges
+  (SURVEY §7.4 T1).
 - Handler fan-out sharing the exploded txn frame (SURVEY §3.1 "Spark
-  shape"): the parsed transactions batch is cached once; every derived
-  table (actors, rewards, packets, dc_burns, oracle_prices) reads the cache.
+  shape"): the parsed transactions batch is cached once — the bounds probe
+  fills the cache, so the source is read once per microbatch — and every
+  derived table (actors, rewards, packets, dc_burns, oracle_prices) reads
+  the cache.
+- Concurrent handlers: the 10 table writes and the inventory merges share
+  no output, so they run side by side on driver threads
+  (streaming/fanout.py). Every task runs to completion before a failure is
+  re-raised; the handlers that succeeded stay committed, the watermark does
+  not move, and the replay of the range converges.
 
 Scale notes: each microbatch writes `blockrange=<min>-<max>` directories —
 append-only, no small-file rewrite of history; at 100 TB compaction is a
@@ -26,6 +34,7 @@ from __future__ import annotations
 
 import json
 import os
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -34,6 +43,7 @@ from pyspark.sql.functions import col
 from ..operators.actors import extract_actors
 from ..sources.blockchain import FIELDS_SCHEMAS
 from .entities import gateway_history, oui_history, validator_history, vars_history
+from .fanout import run_tasks
 
 TABLES = (
     "transactions",
@@ -215,86 +225,122 @@ class BlockIngest:
 
     # -- batch processing ---------------------------------------------
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
-        """foreachBatch body: order-check, derive, write tables, advance
-        the watermark last."""
-        bounds = batch.agg(
-            F.min("block").alias("lo"), F.max("block").alias("hi")
-        ).first()
-        if bounds.lo is None:
-            return
-        stored = self.sync_height()
-        if bounds.lo > stored + 1:
-            # mirror of the reference's height assert
-            # (src/be_db_block.erl:96-100): no gaps, ever.
-            raise ValueError(
-                f"non-contiguous batch: first height {bounds.lo} > stored {stored}+1"
-            )
+        """foreachBatch body: order-check, derive, commit every handler,
+        advance the watermark last.
+
+        The 10 table writes and the inventory merges (``accounts`` plus
+        ``INVENTORIES``, each followed by its stats view when
+        ``maintain_stats`` is on) run concurrently, one driver thread each
+        (``fanout.run_tasks``). ``_sync/height.json`` is written only
+        after every task has succeeded. On a failure every other task
+        still runs to completion and stays committed, the failure is
+        re-raised (several are summarised in one error) and the watermark
+        stays put; replaying the range
+        converges, since each table write overwrites its own
+        ``blockrange=`` directory and each merge skips itself on its own
+        watermark."""
         batch = batch.cache()
         try:
+            # the probe scans every partition, so it also fills the cache:
+            # the source is read once per microbatch
+            bounds = batch.agg(
+                F.min("block").alias("lo"), F.max("block").alias("hi")
+            ).first()
+            if bounds.lo is None:
+                return
+            stored = self.sync_height()
+            if bounds.lo > stored + 1:
+                # mirror of the reference's height assert
+                # (src/be_db_block.erl:96-100): no gaps, ever.
+                raise ValueError(
+                    f"non-contiguous batch: first height {bounds.lo} > stored {stored}+1"
+                )
             tables = derive_tables(batch)
             rng = f"blockrange={bounds.lo}-{bounds.hi}"
-            for name, df in tables.items():
+
+            def write(name: str, df: DataFrame) -> None:
                 # same range → same directory → replay overwrites, making
                 # the batch idempotent (the reference's ON CONFLICT).
                 df.write.mode("overwrite").parquet(
                     os.path.join(self.out_dir, name, rng)
                 )
-            if self.maintain_inventories:
-                # accounts: ASSOCIATIVE aggregate state (counts/min/max/
-                # role set) — merged additively, not latest-wins.
-                from ..operators.merge import merge_accumulate, merge_latest
-                from .entities import account_inventory_from_actors
 
-                self.inventory_target("accounts").merge_with(
-                    batch.sparkSession,
-                    account_inventory_from_actors(tables["transaction_actors"]),
-                    lambda target, upd: merge_accumulate(
-                        target,
-                        upd,
-                        keys=["address"],
-                        sum_cols=["n_txns"],
-                        min_cols=["first_block"],
-                        max_cols=["last_block"],
-                        set_cols=["roles"],
-                    ),
-                    watermark=int(bounds.hi),
-                    changelog_keys=["address"] if self.maintain_stats else None,
+            tasks = [(name, partial(write, name, df)) for name, df in tables.items()]
+            if self.maintain_inventories:
+                tasks += self._inventory_tasks(
+                    batch.sparkSession, tables, int(bounds.hi)
                 )
-                for name, (keys, coalesce_cols) in INVENTORIES.items():
-                    self.inventory_target(name).merge_with(
-                        batch.sparkSession,
-                        tables[name],
-                        lambda target, upd, keys=keys, cc=coalesce_cols: merge_latest(
-                            target,
-                            upd,
-                            keys=keys,
-                            # hash breaks same-block ties → deterministic
-                            # fold at any partition count, so a replayed
-                            # merge is a no-op (ties favor the update side).
-                            order=["block", "hash"],
-                            coalesce_cols=cc,
-                            first_col="first_block",
-                            last_col="last_block",
-                        ),
-                        watermark=int(bounds.hi),
-                        changelog_keys=keys if self.maintain_stats else None,
-                    )
-                if self.maintain_stats:
-                    for name in ("accounts", *INVENTORIES):
-                        # catch_up, not fold: enabling maintain_stats on a
-                        # directory whose inventories already merged
-                        # versions WITHOUT changelog_keys (or whose
-                        # vacuum() outran the view) must seed the view
-                        # from a one-time snapshot count — a bare fold()
-                        # raises on the missing changelog segment and
-                        # wedges ingestion.
-                        self._stats_view(name).catch_up(
-                            batch.sparkSession, self.inventory_target(name)
-                        )
+            run_tasks(tasks)
             if bounds.hi > stored:
                 self._write_sync_height(bounds.hi)
         finally:
             batch.unpersist()
+
+    def _inventory_tasks(
+        self, spark: SparkSession, tables: dict[str, DataFrame], watermark: int
+    ) -> list:
+        """One task per inventory: its MERGE, then (``maintain_stats``) its
+        row-count view."""
+        from ..operators.merge import merge_accumulate, merge_latest
+        from .entities import account_inventory_from_actors
+
+        # accounts: ASSOCIATIVE aggregate state (counts/min/max/role set)
+        # — merged additively, not latest-wins.
+        specs = {
+            "accounts": (
+                account_inventory_from_actors(tables["transaction_actors"]),
+                ["address"],
+                lambda target, upd: merge_accumulate(
+                    target,
+                    upd,
+                    keys=["address"],
+                    sum_cols=["n_txns"],
+                    min_cols=["first_block"],
+                    max_cols=["last_block"],
+                    set_cols=["roles"],
+                ),
+            )
+        }
+        for name, (keys, coalesce_cols) in INVENTORIES.items():
+            specs[name] = (
+                tables[name],
+                keys,
+                lambda target, upd, keys=keys, cc=coalesce_cols: merge_latest(
+                    target,
+                    upd,
+                    keys=keys,
+                    # hash breaks same-block ties → deterministic fold at
+                    # any partition count, so a replayed merge is a no-op
+                    # (ties favor the update side).
+                    order=["block", "hash"],
+                    coalesce_cols=cc,
+                    first_col="first_block",
+                    last_col="last_block",
+                ),
+            )
+
+        def task(name, updates, keys, fold):
+            target = self.inventory_target(name)
+            target.merge_with(
+                spark,
+                updates,
+                fold,
+                watermark=watermark,
+                changelog_keys=keys if self.maintain_stats else None,
+            )
+            if self.maintain_stats:
+                # catch_up, not fold: enabling maintain_stats on a
+                # directory whose inventories already merged versions
+                # WITHOUT changelog_keys (or whose vacuum() outran the
+                # view) must seed the view from a one-time snapshot count
+                # — a bare fold() raises on the missing changelog segment
+                # and wedges ingestion.
+                self._stats_view(name).catch_up(spark, target)
+
+        return [
+            (f"{name}_inventory", partial(task, name, *spec))
+            for name, spec in specs.items()
+        ]
 
     def inventory_target(self, name: str):
         from ..operators.merge import ParquetMergeTarget

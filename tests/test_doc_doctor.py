@@ -14,6 +14,7 @@ from pyspark.sql import Row
 from pyspark.sql.functions import col
 
 from blockchain_etl_spark.streaming.docs import DocIngest
+from blockchain_etl_spark.streaming.fanout import run_tasks
 
 ALL_PLANES = dict(
     vector_index=True,
@@ -443,7 +444,7 @@ def test_vector_compact_crash_after_flip_with_pending_batch_heals(
 
 def test_plane_task_pool_surfaces_every_concurrent_failure():
     """A multi-plane incident must not triage as a single-plane error:
-    _run_plane_tasks aggregates the other planes' exceptions into the
+    run_tasks aggregates the other planes' exceptions into the
     first one it re-raises (round-10 advice)."""
 
     def ok():
@@ -456,7 +457,7 @@ def test_plane_task_pool_surfaces_every_concurrent_failure():
         raise ValueError("schema drift")
 
     with pytest.raises(Exception) as ei:
-        DocIngest._run_plane_tasks(
+        run_tasks(
             [("lexical", fail_a), ("chunk_df", ok), ("novelty", fail_b)]
         )
     msg = str(ei.value)
@@ -466,7 +467,7 @@ def test_plane_task_pool_surfaces_every_concurrent_failure():
 
 def test_plane_task_pool_single_failure_unwrapped():
     with pytest.raises(RuntimeError, match="^disk full$"):
-        DocIngest._run_plane_tasks(
+        run_tasks(
             [("lexical", lambda: (_ for _ in ()).throw(RuntimeError("disk full"))),
              ("chunk_df", lambda: None)]
         )

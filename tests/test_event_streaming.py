@@ -431,3 +431,44 @@ def test_scd2_stream_matches_batch_closed_intervals(spark, tmp_path):
     }
     assert stream_closed == batch_closed
     assert len(stream_closed) > 0
+
+
+def test_events_sessionized_gap_keeps_fractional_seconds(spark, tmp_path):
+    """A 1800.5 s gap exceeds the 30-minute threshold and starts a new
+    session: the gap is compared in microseconds, as the oracle's
+    fractional epoch() difference is, not in whole seconds."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from blockchain_etl_spark.plans.registry import get_oracle_sql, get_queries
+
+    events = pa.table(
+        {
+            "event_id": pa.array([1, 2], pa.int64()),
+            "ts": pa.array(
+                [
+                    datetime.fromisoformat("2024-01-01 00:00:00.200000"),
+                    datetime.fromisoformat("2024-01-01 00:30:00.700000"),
+                ],
+                pa.timestamp("us"),
+            ),
+            "user_id": pa.array([7, 7], pa.int64()),
+            "event_type": pa.array(["view", "view"]),
+            "value": pa.array([1.0, 1.0]),
+            "props": pa.array(["{}", "{}"]),
+        }
+    )
+    pq.write_table(events, str(tmp_path / "events.parquet"))
+    plan = get_queries()["events_sessionized"]
+    got = sorted(
+        (r.session_no, r.n_events) for r in plan(spark, str(tmp_path)).collect()
+    )
+    assert got == [(1, 1), (2, 1)]
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW events AS SELECT * FROM "
+        f"read_parquet('{tmp_path / 'events.parquet'}')"
+    )
+    oracle = con.execute(get_oracle_sql()["events_sessionized"]).fetchall()
+    assert len(oracle) == 2

@@ -229,3 +229,61 @@ def test_compaction_replay_after_crash_is_idempotent(spark, txn_df, tmp_path):
     assert ing.compact(spark, "transactions", blocks_per_bucket=50) == 0
     assert os.path.isdir(bucket) and not os.path.isdir(bucket + ".old")
     assert _table_set(ing.read_table(spark, "transactions")) == want
+
+
+def test_failed_handler_keeps_watermark_and_replay_converges(
+    spark, txn_df, tmp_path, monkeypatch
+):
+    """The handlers of a batch run concurrently: when one inventory merge
+    fails, the batch raises, the sync height stays put, every other
+    handler's output is committed, and replaying the range after the fault
+    is gone converges to a clean run — the committed accounts merge is
+    skipped on its watermark, not double-counted."""
+    from blockchain_etl_spark.operators.merge import ParquetMergeTarget
+    from blockchain_etl_spark.streaming.ingest import INVENTORIES
+
+    first = txn_df.filter(F.col("block") <= 40)
+    second = txn_df.filter((F.col("block") > 40) & (F.col("block") <= 80))
+    clean = BlockIngest(str(tmp_path / "clean"), maintain_inventories=True)
+    ing = BlockIngest(str(tmp_path / "faulty"), maintain_inventories=True)
+    for i, b in enumerate((first, second)):
+        clean.process_batch(b, i)
+    ing.process_batch(first, 0)
+
+    def inventories(follower):
+        return {
+            name: _table_set(follower.read_inventory(spark, name))
+            for name in ("accounts", *INVENTORIES)
+        }
+
+    def tables(follower):
+        return {name: _table_set(follower.read_table(spark, name)) for name in TABLES}
+
+    merge_with = ParquetMergeTarget.merge_with
+
+    def failing_merge(self, *args, **kwargs):
+        if os.path.basename(self.path) == "validators_inventory":
+            raise OSError("disk full")
+        return merge_with(self, *args, **kwargs)
+
+    want_tables, want_inventories = tables(clean), inventories(clean)
+    monkeypatch.setattr(ParquetMergeTarget, "merge_with", failing_merge)
+    with pytest.raises(OSError, match="disk full"):
+        ing.process_batch(second, 1)
+    assert ing.sync_height() == 40
+    assert tables(ing) == want_tables
+    got = inventories(ing)
+    assert got.pop("validators") != want_inventories["validators"]
+    assert got == {k: v for k, v in want_inventories.items() if k != "validators"}
+    assert ing.inventory_target("validators").watermark() == 40
+
+    monkeypatch.setattr(ParquetMergeTarget, "merge_with", merge_with)
+    ing.process_batch(second, 1)  # replay
+    assert ing.sync_height() == 80
+    assert tables(ing) == want_tables
+    assert inventories(ing) == want_inventories
+
+    def n_txns(follower):
+        return follower.read_inventory(spark, "accounts").agg(F.sum("n_txns")).first()[0]
+
+    assert n_txns(ing) == n_txns(clean)

@@ -4,14 +4,18 @@
 Runs the exact verify the driver runs — vanilla SparkSession (NOT
 session.get_spark), every registered query at sf0.01 compared against its
 DuckDB oracle on row count + column names + order-insensitive values —
-and APPENDS one audit record to GATELOG_r14.json:
+and APPENDS one audit record to the JSON log named on the command line:
 
-    {"commit": <git HEAD>, "tree_dirty": bool, "n_queries": N,
-     "n_ok": N, "fails": [...], "session_conf_hash": md5-of-confs,
-     "queries": {name: true/false}}
+    python tools/gate_log.py GATELOG.json
 
-Requested by the r13 verdict (#3): the builder's own 200/200 gate runs
-become judge-auditable artifacts instead of prose claims.
+    {"commit": <git HEAD>, "tree_dirty": bool,
+     "tree_diff_sha256": sha256 of `git diff HEAD` (null on a clean tree),
+     "n_queries": N, "n_ok": N, "fails": [...],
+     "session_conf_hash": md5-of-confs, "queries": {name: true/false}}
+
+A dirty-tree record names its exact tree: HEAD plus the diff whose hash
+it carries (untracked files are not part of `git diff HEAD`; add them to
+the index first to have them covered).
 """
 
 from __future__ import annotations
@@ -25,12 +29,37 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_GATE_SF_DIR", "/root/testdata/sf0.01")
-LOG = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "GATELOG_r14.json"
-)
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def main() -> int:
+def _git(*args, cwd: str = REPO) -> str:
+    try:
+        return subprocess.run(
+            ["git", *args], capture_output=True, text=True, cwd=cwd
+        ).stdout
+    except OSError:
+        return ""
+
+
+def tree_record(repo: str = REPO) -> dict:
+    """The tree the gate ran on: HEAD, whether it was dirty and, if so,
+    the sha256 of `git diff HEAD` that turns HEAD into it."""
+    dirty = bool(_git("status", "--porcelain", cwd=repo).strip())
+    diff = _git("diff", "HEAD", "--binary", cwd=repo) if dirty else ""
+    return {
+        "commit": _git("rev-parse", "HEAD", cwd=repo).strip(),
+        "tree_dirty": dirty,
+        "tree_diff_sha256": hashlib.sha256(diff.encode()).hexdigest() if dirty else None,
+    }
+
+
+def main(argv: "list[str] | None" = None) -> int:
+    import argparse
+
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("log", help="JSON gate log to append the record to")
+    log_path = ap.parse_args(argv).log
+
     import duckdb
     import pandas as pd
     from pyspark.sql import SparkSession
@@ -92,18 +121,8 @@ def main() -> int:
         print(name, "OK" if ok else "FAIL", flush=True)
     fails = sorted(n for n, ok in results.items() if not ok)
 
-    def _git(*args):
-        try:
-            return subprocess.run(
-                ["git", *args], capture_output=True, text=True,
-                cwd=os.path.dirname(LOG),
-            ).stdout.strip()
-        except OSError:
-            return ""
-
     record = {
-        "commit": _git("rev-parse", "HEAD"),
-        "tree_dirty": bool(_git("status", "--porcelain")),
+        **tree_record(),
         "sf_dir": SF_DIR,
         "n_queries": len(results),
         "n_ok": sum(results.values()),
@@ -112,11 +131,11 @@ def main() -> int:
         "queries": results,
     }
     log = []
-    if os.path.exists(LOG):
-        with open(LOG) as f:
+    if os.path.exists(log_path):
+        with open(log_path) as f:
             log = json.load(f)
     log.append(record)
-    with open(LOG, "w") as f:
+    with open(log_path, "w") as f:
         json.dump(log, f, indent=1, sort_keys=True)
     print(f"GATE {record['n_ok']}/{record['n_queries']} FAILS: {fails}")
     spark.stop()
