@@ -9,6 +9,8 @@ stragglers forward from the durable corpus chunks."""
 
 from __future__ import annotations
 
+import shutil
+
 import pytest
 from pyspark.sql import Row
 from pyspark.sql.functions import col
@@ -51,16 +53,14 @@ def _corpus(spark):
     )
 
 
-def _ingest(spark, path, crash_at=None):
-    """Build an all-plane DocIngest over the two batches; when
-    ``crash_at=(plane_attr, method)`` is given, that plane's commit
-    raises during batch 2 (simulating a crash between the previous
-    plane's commit and this one's) and the partially-committed ingest is
-    returned un-healed."""
-    b1, b2, bench = _corpus(spark)
-    ing = DocIngest(str(path), **ALL_PLANES)
-    ing.contamination.build(spark, bench)
-    ing.process_batch(b1, 1)
+def _ingest(spark, path, batch1_lake, crash_at=None):
+    """Ingest batch 2 into a copy of ``batch1_lake`` (an all-plane lake
+    that holds batch 1); when ``crash_at=(plane_attr, method)`` is given,
+    that plane's commit raises during batch 2 (simulating a crash between
+    the previous plane's commit and this one's) and the
+    partially-committed ingest is returned un-healed."""
+    _, b2, _ = _corpus(spark)
+    ing = _copy_lake(batch1_lake, path)
     if crash_at is None:
         ing.process_batch(b2, 2)
         return ing
@@ -79,6 +79,13 @@ def _ingest(spark, path, crash_at=None):
         ing.process_batch(b2, 2)
     setattr(obj, crash_at[1], orig)
     return ing
+
+
+def _copy_lake(src, path):
+    """An all-plane DocIngest over a copy of the lake at ``src`` (every
+    plane keeps its state under the lake directory, by relative path)."""
+    shutil.copytree(src, path)
+    return DocIngest(str(path), **ALL_PLANES)
 
 
 def _state(spark, ing):
@@ -129,10 +136,46 @@ def _state(spark, ing):
 
 
 @pytest.fixture(scope="module")
-def golden(spark, tmp_path_factory):
-    ing = _ingest(spark, tmp_path_factory.mktemp("golden") / "lake")
+def batch1_lake(spark, tmp_path_factory):
+    """A lake holding batch 1 only, shared by the tests that crash or
+    replay batch 2 (each works on its own copy)."""
+    b1, _, bench = _corpus(spark)
+    path = tmp_path_factory.mktemp("batch1") / "lake"
+    ing = DocIngest(str(path), **ALL_PLANES)
+    ing.contamination.build(spark, bench)
+    ing.process_batch(b1, 1)
+    return path
+
+
+@pytest.fixture(scope="module")
+def golden_lake(spark, tmp_path_factory, batch1_lake):
+    """The never-crashed lake over both batches (tests copy it before
+    changing it)."""
+    path = tmp_path_factory.mktemp("golden") / "lake"
+    ing = _ingest(spark, path, batch1_lake)
     assert ing.audit()["consistent"]
-    return _state(spark, ing)
+    return path
+
+
+@pytest.fixture(scope="module")
+def golden(spark, golden_lake):
+    return _state(spark, DocIngest(str(golden_lake), **ALL_PLANES))
+
+
+@pytest.fixture(scope="module")
+def no_lexical_lake(spark, tmp_path_factory):
+    """Both batches ingested with every plane except the lexical index —
+    the lake a mid-life ``lexical_index=True`` opens over (tests copy
+    it)."""
+    b1, b2, bench = _corpus(spark)
+    plain = dict(ALL_PLANES)
+    plain.pop("lexical_index")
+    path = tmp_path_factory.mktemp("no_lexical") / "lake"
+    ing = DocIngest(str(path), **plain)
+    ing.contamination.build(spark, bench)
+    ing.process_batch(b1, 1)
+    ing.process_batch(b2, 2)
+    return path
 
 
 # one crash point between every adjacent pair of plane commits, in the
@@ -152,9 +195,9 @@ CRASH_POINTS = [
 
 @pytest.mark.parametrize("point", CRASH_POINTS, ids=[p[0] for p in CRASH_POINTS])
 def test_crash_between_plane_commits_heals_to_golden(
-    spark, tmp_path, golden, point
+    spark, tmp_path, golden, batch1_lake, point
 ):
-    ing = _ingest(spark, tmp_path / "lake", crash_at=point)
+    ing = _ingest(spark, tmp_path / "lake", batch1_lake, crash_at=point)
     rep = ing.audit()
     assert not rep["consistent"]
     assert rep["target"] == 2
@@ -167,8 +210,10 @@ def test_crash_between_plane_commits_heals_to_golden(
     assert ing.doctor(spark) == []
 
 
-def test_new_batch_on_divergent_planes_is_refused(spark, tmp_path):
-    ing = _ingest(spark, tmp_path / "lake", crash_at=("lexical", "upsert"))
+def test_new_batch_on_divergent_planes_is_refused(spark, tmp_path, batch1_lake):
+    ing = _ingest(
+        spark, tmp_path / "lake", batch1_lake, crash_at=("lexical", "upsert")
+    )
     _, b2, _ = _corpus(spark)
     b3 = b2.withColumn("doc_id", col("doc_id") + 100)
     # a NEW batch id would advance the stragglers past the crashed batch
@@ -182,15 +227,15 @@ def test_new_batch_on_divergent_planes_is_refused(spark, tmp_path):
     assert ing.audit()["consistent"]
 
 
-def test_lost_chunk_after_crash_reads_as_ahead(spark, tmp_path):
+def test_lost_chunk_after_crash_reads_as_ahead(spark, tmp_path, batch1_lake):
     """If the crashed batch's chunk dir is ALSO lost, the committed
     planes are simply AHEAD of a corpus that no longer holds the batch —
     doctor has nothing to roll forward and the source replay (same
     batch id) converges, rewriting the chunk and catching up the
     stragglers through their guards."""
-    import shutil
-
-    ing = _ingest(spark, tmp_path / "lake", crash_at=("lexical", "upsert"))
+    ing = _ingest(
+        spark, tmp_path / "lake", batch1_lake, crash_at=("lexical", "upsert")
+    )
     shutil.rmtree(tmp_path / "lake" / "docs" / "chunk=2")
     rep = ing.audit()
     assert not rep["consistent"] and not rep["stragglers"]
@@ -211,20 +256,14 @@ def test_lost_chunk_after_crash_reads_as_ahead(spark, tmp_path):
     assert ing.audit()["consistent"]
 
 
-def test_unhealable_when_retention_ate_a_needed_chunk(spark, tmp_path):
+def test_unhealable_when_retention_ate_a_needed_chunk(
+    spark, tmp_path, no_lexical_lake
+):
     """A mid-lake backfill needs the full chunk history; when retention
     deleted a chunk the new plane can never see those docs — audit says
     which batches are lost and doctor refuses instead of building a
     silently incomplete index."""
-    import shutil
-
-    b1, b2, bench = _corpus(spark)
-    plain = dict(ALL_PLANES)
-    plain.pop("lexical_index")
-    ing = DocIngest(str(tmp_path / "lake"), **plain)
-    ing.contamination.build(spark, bench)
-    ing.process_batch(b1, 1)
-    ing.process_batch(b2, 2)
+    shutil.copytree(no_lexical_lake, tmp_path / "lake")
     shutil.rmtree(tmp_path / "lake" / "docs" / "chunk=1")
     ing2 = DocIngest(str(tmp_path / "lake"), **ALL_PLANES)
     rep = ing2.audit()
@@ -237,15 +276,13 @@ def test_unhealable_when_retention_ate_a_needed_chunk(spark, tmp_path):
         ing2.doctor(spark)
 
 
-def test_ahead_plane_waits_for_source_replay(spark, tmp_path):
+def test_ahead_plane_waits_for_source_replay(spark, tmp_path, batch1_lake):
     """A crash between screen_gated's evidence commit and the chunk
     write leaves the contamination plane AHEAD of the corpus: audit
     reports it, doctor has nothing to roll forward, and the source
     replay of the same batch converges."""
-    b1, b2, bench = _corpus(spark)
-    ing = DocIngest(str(tmp_path / "lake"), **ALL_PLANES)
-    ing.contamination.build(spark, bench)
-    ing.process_batch(b1, 1)
+    _, b2, _ = _corpus(spark)
+    ing = _copy_lake(batch1_lake, tmp_path / "lake")
     # simulate: evidence for batch 2 committed, then death before the
     # quarantine/chunk writes
     ing.contamination.screen_gated(
@@ -260,7 +297,9 @@ def test_ahead_plane_waits_for_source_replay(spark, tmp_path):
     assert ing.audit()["consistent"]
 
 
-def test_run_stream_full_planes_survives_kill_and_restart(spark, tmp_path):
+def test_run_stream_full_planes_survives_kill_and_restart(
+    spark, tmp_path, golden
+):
     """The PRODUCTION configuration end-to-end: run_stream with every
     plane enabled (including the quarantine gate), KILLED mid-stream
     between two plane commits of the second microbatch, then restarted —
@@ -302,8 +341,7 @@ def test_run_stream_full_planes_survives_kill_and_restart(spark, tmp_path):
     ing.run_stream(spark, in_dir + "/c*.parquet", b1.schema)
     assert ing.audit()["consistent"]
 
-    golden_ing = _ingest(spark, tmp_path / "golden")
-    got, want = _state(spark, ing), _state(spark, golden_ing)
+    got, want = _state(spark, ing), dict(golden)
     # curve rows and vocab stamps carry BATCH IDS, which legitimately
     # differ between the stream's base+epoch ids (0, 1) and the golden's
     # (1, 2) — compare the id-free columns, curve in fold order
@@ -314,38 +352,33 @@ def test_run_stream_full_planes_survives_kill_and_restart(spark, tmp_path):
     assert got == want
 
 
-def test_doctor_backfills_plane_enabled_mid_lake(spark, tmp_path):
+def test_doctor_backfills_plane_enabled_mid_lake(
+    spark, tmp_path, golden, no_lexical_lake
+):
     """Enabling a new plane over an existing lake = construct + doctor():
     the new plane replays the whole durable chunk history while every
     committed plane's guards skip — a backfill, not a re-ingest."""
-    b1, b2, bench = _corpus(spark)
-    plain = dict(ALL_PLANES)
-    plain.pop("lexical_index")
-    ing = DocIngest(str(tmp_path / "lake"), **plain)
-    ing.contamination.build(spark, bench)
-    ing.process_batch(b1, 1)
-    ing.process_batch(b2, 2)
+    shutil.copytree(no_lexical_lake, tmp_path / "lake")
     ing2 = DocIngest(str(tmp_path / "lake"), **ALL_PLANES)
     rep = ing2.audit()
     assert rep["stragglers"] == {"lex_index": -1}
     assert ing2.doctor(spark) == [1, 2]
     assert ing2.audit()["consistent"]
     # backfilled postings equal an all-plane-from-the-start ingest's
-    golden = _ingest(spark, tmp_path / "golden")
     assert sorted(
         tuple(r) for r in ing2.lexical.postings.read(spark).collect()
-    ) == sorted(tuple(r) for r in golden.lexical.postings.read(spark).collect())
+    ) == golden["postings"]
 
 
-def test_doctor_detects_lost_chunk_even_when_consistent(spark, tmp_path):
+def test_doctor_detects_lost_chunk_even_when_consistent(
+    spark, tmp_path, golden_lake
+):
     """Retention (or an accident) deletes a chunk whose id no watermark
     records and whose docs every plane already folded: the id-based
     audit reads CONSISTENT — only doctor()'s doc-coverage probe (hash
     inventory vs surviving chunks, run on every invocation) can prove
     the corpus lost admitted documents."""
-    import shutil
-
-    ing = _ingest(spark, tmp_path / "lake")
+    ing = _copy_lake(golden_lake, tmp_path / "lake")
     assert ing.audit()["consistent"]
     shutil.rmtree(tmp_path / "lake" / "docs" / "chunk=1")
     assert ing.audit()["consistent"]  # watermarks keep only the high mark
@@ -370,7 +403,9 @@ def _vec_state(spark, ing):
     return live, ids, ing.vectors._inventory().watermark()
 
 
-def test_vector_compact_crash_before_pointer_flip_converges(spark, tmp_path):
+def test_vector_compact_crash_before_pointer_flip_converges(
+    spark, tmp_path, golden_lake
+):
     """Round-10 verdict #7: compact() writes a whole new generation and
     commits with one pointer flip — inject a crash BETWEEN the generation
     write and the flip, with a pending batch still to ingest. The orphan
@@ -378,7 +413,7 @@ def test_vector_compact_crash_before_pointer_flip_converges(spark, tmp_path):
     pending batch folds into it at the carried watermark, doctor() finds
     nothing to heal, and the vector plane equals a never-compacted golden
     ingest of the same batches."""
-    ing = _ingest(spark, tmp_path / "lake")
+    ing = _copy_lake(golden_lake, tmp_path / "lake")
     assert ing.audit()["consistent"]
     g0 = ing.vectors._gen()
 
@@ -399,20 +434,20 @@ def test_vector_compact_crash_before_pointer_flip_converges(spark, tmp_path):
     assert ing.doctor(spark) == []  # nothing to heal
     assert ing.audit()["consistent"]
 
-    golden = _ingest(spark, tmp_path / "golden")
+    golden = _copy_lake(golden_lake, tmp_path / "golden")
     golden.process_batch(_b3(spark), 3)
     assert _vec_state(spark, ing) == _vec_state(spark, golden)
 
 
 def test_vector_compact_crash_after_flip_with_pending_batch_heals(
-    spark, tmp_path
+    spark, tmp_path, golden_lake
 ):
     """The other side of the flip: compact commits (pointer at gen=1) but
     crashes before retiring gen=0 — a disk leak, never a correctness
     event. A pending batch then crashes mid-commit in ANOTHER plane;
     doctor() must heal it INTO THE NEW GENERATION (watermarks carried
     across the flip), ending bit-equal to a golden compacted ingest."""
-    ing = _ingest(spark, tmp_path / "lake")
+    ing = _copy_lake(golden_lake, tmp_path / "lake")
     g0 = ing.vectors._gen()
 
     class Boom(Exception):
@@ -436,7 +471,7 @@ def test_vector_compact_crash_after_flip_with_pending_batch_heals(
     assert ing.doctor(spark) == [3]
     assert ing.audit()["consistent"]
 
-    golden = _ingest(spark, tmp_path / "golden")
+    golden = _copy_lake(golden_lake, tmp_path / "golden")
     golden.vectors.compact(spark)
     golden.process_batch(_b3(spark), 3)
     assert _vec_state(spark, ing) == _vec_state(spark, golden)

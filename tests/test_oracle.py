@@ -40,10 +40,8 @@ def _values_equal(a, b) -> bool:
 
 
 @pytest.mark.parametrize("name", ORACLE_NAMES)
-def test_query_matches_oracle(spark, duck, name):
-    q = QUERIES[name]
-    spark_pdf = q.fn(spark, SF_DIR).toPandas()
-    duck_pdf = duck.execute(q.sql).fetchdf()
+def test_query_matches_oracle(oracle_results, name):
+    spark_pdf, duck_pdf = oracle_results(name)
 
     assert sorted(spark_pdf.columns) == sorted(duck_pdf.columns), (
         f"{name}: column mismatch spark={sorted(spark_pdf.columns)} "

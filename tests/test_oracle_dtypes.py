@@ -11,11 +11,9 @@ the class. Tolerated (observed green in driver rounds): integer widths
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 
 from blockchain_etl_spark.plans.registry import QUERIES, get_queries
-from tests.conftest import SF_DIR
 
 get_queries()
 ORACLE_NAMES = [n for n, q in QUERIES.items() if q.sql is not None]
@@ -33,22 +31,9 @@ def _dclass(dtype: str) -> str:
     return dtype
 
 
-@pytest.fixture(scope="module")
-def con():
-    c = duckdb.connect()
-    from blockchain_etl_spark.sources.testdata import TABLES
-
-    for t in TABLES:
-        c.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
-    return c
-
-
 @pytest.mark.parametrize("name", ORACLE_NAMES)
-def test_dtype_classes_match(name, spark, con):
-    sdf = QUERIES[name].fn(spark, SF_DIR).toPandas()
-    odf = con.execute(QUERIES[name].sql).df()
+def test_dtype_classes_match(name, oracle_results):
+    sdf, odf = oracle_results(name)
     assert sorted(sdf.columns) == sorted(odf.columns), name
     mismatches = {
         c: (str(sdf[c].dtype), str(odf[c].dtype))

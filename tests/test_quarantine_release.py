@@ -10,6 +10,8 @@ be lost."""
 
 from __future__ import annotations
 
+import shutil
+
 import pytest
 from pyspark.sql import Row
 
@@ -54,29 +56,43 @@ def _data(spark):
     )
 
 
-def _run(spark, path, threshold, release_to=None):
-    b1, b2, bench = _data(spark)
-    ing = DocIngest(
+def _lake(path, threshold):
+    return DocIngest(
         str(path),
         lexical_index=True,
         drift_state=True,
         contamination_screen=True,
         contamination_quarantine=threshold,
     )
-    ing.contamination.build(spark, bench)
-    ing.process_batch(b1, 1)
-    ing.process_batch(b2, 2)
+
+
+def _run(spark, path, threshold, release_to=None, lake=None):
+    """Ingest both batches under ``threshold`` (or start from a copy of
+    ``lake``, a lake that already holds them under it), then optionally
+    release the quarantine under ``release_to``."""
+    if lake is None:
+        b1, b2, bench = _data(spark)
+        ing = _lake(path, threshold)
+        ing.contamination.build(spark, bench)
+        ing.process_batch(b1, 1)
+        ing.process_batch(b2, 2)
+    else:
+        shutil.copytree(lake, path)
+        ing = _lake(path, threshold)
     if release_to is not None:
-        relaxed = DocIngest(
-            str(path),
-            lexical_index=True,
-            drift_state=True,
-            contamination_screen=True,
-            contamination_quarantine=release_to,
-        )
+        relaxed = _lake(path, release_to)
         relaxed.release_quarantine(spark, 3)
         return relaxed
     return ing
+
+
+@pytest.fixture(scope="module")
+def strict_lake(spark, tmp_path_factory):
+    """Both batches ingested at the strict threshold 2 (docs 7, 8 and 15
+    quarantined); tests copy it before changing it."""
+    path = tmp_path_factory.mktemp("strict") / "lake"
+    _run(spark, path, 2)
+    return path
 
 
 def _invariant_state(spark, ing):
@@ -105,24 +121,30 @@ def _invariant_state(spark, ing):
     }
 
 
-def test_release_under_relaxed_policy_equals_fresh_ingest(spark, tmp_path):
+def test_release_under_relaxed_policy_equals_fresh_ingest(
+    spark, tmp_path, strict_lake
+):
     strict, relaxed = 2, 1000
     # strict run quarantines the contaminated docs
-    ing = _run(spark, tmp_path / "strict", strict)
+    ing = _lake(strict_lake, strict)
     qd = {r.doc_id for r in ing.read_quarantine(spark).collect()}
     assert qd == {7, 8, 15}
     # release everything under a threshold nothing reaches
-    healed = _run(spark, tmp_path / "released", strict, release_to=relaxed)
+    healed = _run(
+        spark, tmp_path / "released", strict, release_to=relaxed, lake=strict_lake
+    )
     golden = _run(spark, tmp_path / "golden", relaxed)
     assert _invariant_state(spark, healed) == _invariant_state(spark, golden)
     assert healed.read_quarantine(spark).count() == 0
     assert healed.audit()["consistent"]
 
 
-def test_release_requarantines_still_contaminated_docs(spark, tmp_path):
+def test_release_requarantines_still_contaminated_docs(
+    spark, tmp_path, strict_lake
+):
     # release under the SAME strict policy: every doc is re-flagged into
     # the new batch's chunk, nothing enters the corpus, nothing is lost
-    ing = _run(spark, tmp_path / "lake", 2, release_to=2)
+    ing = _run(spark, tmp_path / "lake", 2, release_to=2, lake=strict_lake)
     q = {
         (r.doc_id, r.n_bench_shingles)
         for r in ing.read_quarantine(spark).collect()
@@ -146,21 +168,23 @@ def test_release_requires_the_gate(spark, tmp_path):
         ing.release_quarantine(spark, 1)
 
 
-def test_release_with_stale_batch_id_refuses(spark, tmp_path):
+def test_release_with_stale_batch_id_refuses(spark, tmp_path, strict_lake):
     # a stale id would make process_batch a silent replay no-op and the
     # cleanup would then delete the ONLY copy of the quarantined docs
-    ing = _run(spark, tmp_path / "lake", 2)
+    ing = _run(spark, tmp_path / "lake", 2, lake=strict_lake)
     with pytest.raises(ValueError, match="watermark"):
         ing.release_quarantine(spark, 2)
     assert {r.doc_id for r in ing.read_quarantine(spark).collect()} == {7, 8, 15}
 
 
-def test_release_under_live_stream_checkpoint_refuses(spark, tmp_path):
+def test_release_under_live_stream_checkpoint_refuses(
+    spark, tmp_path, strict_lake
+):
     # a streaming checkpoint owns the lake's batch-id space (base+epoch):
     # consuming an id here would silently drop a future crawl file
     import os
 
-    ing = _run(spark, tmp_path / "lake", 2)
+    ing = _run(spark, tmp_path / "lake", 2, lake=strict_lake)
     os.makedirs(
         os.path.join(str(tmp_path / "lake"), "_stream_checkpoint"),
         exist_ok=True,
