@@ -21,14 +21,7 @@ import os
 from pyspark.sql import SparkSession
 
 
-def get_spark(
-    app_name: str = "blockchain-etl-spark",
-    master: str | None = None,
-    conf: "dict[str, str] | None" = None,
-) -> SparkSession:
-    """The engine's session; ``conf`` adds or overrides settings (applied
-    last, so static ones such as ``spark.default.parallelism`` take effect
-    when this call starts the context)."""
+def get_spark(app_name: str = "blockchain-etl-spark", master: str | None = None) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)
@@ -66,8 +59,6 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/spark-graft-warehouse"),
         )
     )
-    for key, value in (conf or {}).items():
-        builder = builder.config(key, value)
     return builder.getOrCreate()
 
 

@@ -380,7 +380,7 @@ class DocIngest:
         # cheap count on the ≤GATE-batch frame) before the fan-out.
         if len(sh_consumers) > 1:
             sh.count()
-        run_tasks(tasks)
+        run_tasks(spark, tasks)
         # the hash-inventory merge commits LAST: its watermark is the
         # replay guard at the top, so every index upsert above must be
         # durable before it advances — a crash anywhere in this method

@@ -5,7 +5,10 @@ Both ingests (``BlockIngest`` table writes and inventory merges,
 ``run_tasks``. Each task is a driver thread that submits its own Spark
 jobs; the scheduler runs those jobs side by side, so a microbatch of many
 tiny writes pays the per-job driver latency once per wave instead of once
-per write.
+per write. Each task runs under the submitting thread's Spark local
+properties (job group, job tags, scheduler pool) and session tags, as it
+would inline, so cancelling the caller's job group (a stopped streaming
+query) reaches the task's jobs too.
 """
 
 from __future__ import annotations
@@ -13,8 +16,13 @@ from __future__ import annotations
 from concurrent.futures import ThreadPoolExecutor
 from typing import Callable, Sequence
 
+from pyspark import inheritable_thread_target
+from pyspark.sql import SparkSession
 
-def run_tasks(tasks: Sequence[tuple[str, Callable[[], object]]]) -> None:
+
+def run_tasks(
+    spark: SparkSession, tasks: Sequence[tuple[str, Callable[[], object]]]
+) -> None:
     """Run the named tasks concurrently (pool width = number of tasks).
     ALL tasks run to completion before any failure is re-raised, so a
     crash leaves every surviving task durably committed (the straggler
@@ -27,7 +35,12 @@ def run_tasks(tasks: Sequence[tuple[str, Callable[[], object]]]) -> None:
         tasks[0][1]()
         return
     with ThreadPoolExecutor(max_workers=len(tasks)) as ex:
-        futures = [(name, ex.submit(fn)) for name, fn in tasks]
+        # one wrapper per task: each copies the caller's properties, so
+        # the tasks never share (and race on) one properties object
+        futures = [
+            (name, ex.submit(inheritable_thread_target(spark)(fn)))
+            for name, fn in tasks
+        ]
         errs = []
         for name, fut in futures:
             err = fut.exception()

@@ -34,7 +34,6 @@ from __future__ import annotations
 
 import json
 import os
-from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -258,19 +257,22 @@ class BlockIngest:
             tables = derive_tables(batch)
             rng = f"blockrange={bounds.lo}-{bounds.hi}"
 
-            def write(name: str, df: DataFrame) -> None:
-                # same range → same directory → replay overwrites, making
-                # the batch idempotent (the reference's ON CONFLICT).
-                df.write.mode("overwrite").parquet(
-                    os.path.join(self.out_dir, name, rng)
+            # same range → same directory → replay overwrites, making the
+            # batch idempotent (the reference's ON CONFLICT).
+            tasks = [
+                (
+                    name,
+                    lambda df=df, path=os.path.join(self.out_dir, name, rng): (
+                        df.write.mode("overwrite").parquet(path)
+                    ),
                 )
-
-            tasks = [(name, partial(write, name, df)) for name, df in tables.items()]
+                for name, df in tables.items()
+            ]
             if self.maintain_inventories:
                 tasks += self._inventory_tasks(
                     batch.sparkSession, tables, int(bounds.hi)
                 )
-            run_tasks(tasks)
+            run_tasks(batch.sparkSession, tasks)
             if bounds.hi > stored:
                 self._write_sync_height(bounds.hi)
         finally:
@@ -284,42 +286,7 @@ class BlockIngest:
         from ..operators.merge import merge_accumulate, merge_latest
         from .entities import account_inventory_from_actors
 
-        # accounts: ASSOCIATIVE aggregate state (counts/min/max/role set)
-        # — merged additively, not latest-wins.
-        specs = {
-            "accounts": (
-                account_inventory_from_actors(tables["transaction_actors"]),
-                ["address"],
-                lambda target, upd: merge_accumulate(
-                    target,
-                    upd,
-                    keys=["address"],
-                    sum_cols=["n_txns"],
-                    min_cols=["first_block"],
-                    max_cols=["last_block"],
-                    set_cols=["roles"],
-                ),
-            )
-        }
-        for name, (keys, coalesce_cols) in INVENTORIES.items():
-            specs[name] = (
-                tables[name],
-                keys,
-                lambda target, upd, keys=keys, cc=coalesce_cols: merge_latest(
-                    target,
-                    upd,
-                    keys=keys,
-                    # hash breaks same-block ties → deterministic fold at
-                    # any partition count, so a replayed merge is a no-op
-                    # (ties favor the update side).
-                    order=["block", "hash"],
-                    coalesce_cols=cc,
-                    first_col="first_block",
-                    last_col="last_block",
-                ),
-            )
-
-        def task(name, updates, keys, fold):
+        def merge(name, updates, keys, fold) -> None:
             target = self.inventory_target(name)
             target.merge_with(
                 spark,
@@ -337,10 +304,52 @@ class BlockIngest:
                 # and wedges ingestion.
                 self._stats_view(name).catch_up(spark, target)
 
-        return [
-            (f"{name}_inventory", partial(task, name, *spec))
-            for name, spec in specs.items()
+        # accounts: ASSOCIATIVE aggregate state (counts/min/max/role set)
+        # — merged additively, not latest-wins.
+        accounts = account_inventory_from_actors(tables["transaction_actors"])
+        tasks = [
+            (
+                "accounts_inventory",
+                lambda: merge(
+                    "accounts",
+                    accounts,
+                    ["address"],
+                    lambda target, upd: merge_accumulate(
+                        target,
+                        upd,
+                        keys=["address"],
+                        sum_cols=["n_txns"],
+                        min_cols=["first_block"],
+                        max_cols=["last_block"],
+                        set_cols=["roles"],
+                    ),
+                ),
+            )
         ]
+        for name, (keys, coalesce_cols) in INVENTORIES.items():
+            tasks.append(
+                (
+                    f"{name}_inventory",
+                    lambda name=name, keys=keys, cc=coalesce_cols: merge(
+                        name,
+                        tables[name],
+                        keys,
+                        lambda target, upd: merge_latest(
+                            target,
+                            upd,
+                            keys=keys,
+                            # hash breaks same-block ties → deterministic
+                            # fold at any partition count, so a replayed
+                            # merge is a no-op (ties favor the update side).
+                            order=["block", "hash"],
+                            coalesce_cols=cc,
+                            first_col="first_block",
+                            last_col="last_block",
+                        ),
+                    ),
+                )
+            )
+        return tasks
 
     def inventory_target(self, name: str):
         from ..operators.merge import ParquetMergeTarget

@@ -23,14 +23,14 @@ def spark():
     # one task per core per stage and writes as many files. Cap it at 8,
     # the test shuffle width below (measured with local[32] on a 4-core
     # host: test_quarantine_release + test_cdc_view 592 s -> 324 s).
-    spark = get_spark(
-        "blockchain-etl-spark-tests",
-        conf={
-            "spark.default.parallelism": str(min(int(cpus), 8))
-            if cpus.isdigit()
-            else "8"
-        },
+    # The setting is static, so it goes in through the submit args the
+    # JVM starts with; a caller's own PYSPARK_SUBMIT_ARGS wins.
+    width = str(min(int(cpus), 8)) if cpus.isdigit() else "8"
+    os.environ.setdefault(
+        "PYSPARK_SUBMIT_ARGS",
+        f"--conf spark.default.parallelism={width} pyspark-shell",
     )
+    spark = get_spark("blockchain-etl-spark-tests")
     # Test-session shuffle width: the suite runs byte-tiny frames on
     # local[8]; the production default (32) schedules 4 waves of empty
     # tasks per exchange, which is pure wall-clock on a ~1000-test

@@ -477,7 +477,7 @@ def test_vector_compact_crash_after_flip_with_pending_batch_heals(
     assert _vec_state(spark, ing) == _vec_state(spark, golden)
 
 
-def test_plane_task_pool_surfaces_every_concurrent_failure():
+def test_plane_task_pool_surfaces_every_concurrent_failure(spark):
     """A multi-plane incident must not triage as a single-plane error:
     run_tasks aggregates the other planes' exceptions into the
     first one it re-raises (round-10 advice)."""
@@ -493,16 +493,17 @@ def test_plane_task_pool_surfaces_every_concurrent_failure():
 
     with pytest.raises(Exception) as ei:
         run_tasks(
-            [("lexical", fail_a), ("chunk_df", ok), ("novelty", fail_b)]
+            spark, [("lexical", fail_a), ("chunk_df", ok), ("novelty", fail_b)]
         )
     msg = str(ei.value)
     assert "lexical" in msg and "novelty" in msg, msg
     assert "disk full" in msg and "schema drift" in msg, msg
 
 
-def test_plane_task_pool_single_failure_unwrapped():
+def test_plane_task_pool_single_failure_unwrapped(spark):
     with pytest.raises(RuntimeError, match="^disk full$"):
         run_tasks(
+            spark,
             [("lexical", lambda: (_ for _ in ()).throw(RuntimeError("disk full"))),
              ("chunk_df", lambda: None)]
         )

@@ -287,3 +287,27 @@ def test_failed_handler_keeps_watermark_and_replay_converges(
         return follower.read_inventory(spark, "accounts").agg(F.sum("n_txns")).first()[0]
 
     assert n_txns(ing) == n_txns(clean)
+
+
+def test_fanout_tasks_run_in_the_callers_job_group(spark):
+    """A batch's handler threads carry the caller's job group and session
+    tags, so cancelling either (a stopped streaming query) reaches their
+    jobs."""
+    from blockchain_etl_spark.streaming.fanout import run_tasks
+
+    sc = spark.sparkContext
+    seen = {}
+
+    def task(name):
+        seen[name] = (sc.getLocalProperty("spark.jobGroup.id"), spark.getTags())
+        spark.range(4).count()
+
+    sc.setJobGroup("follower-batch", "fan-out test")
+    spark.addTag("follower")
+    try:
+        run_tasks(spark, [(n, lambda n=n: task(n)) for n in ("a", "b", "c")])
+    finally:
+        spark.removeTag("follower")
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert seen == {n: ("follower-batch", {"follower"}) for n in ("a", "b", "c")}

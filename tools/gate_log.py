@@ -9,13 +9,14 @@ and APPENDS one audit record to the JSON log named on the command line:
     python tools/gate_log.py GATELOG.json
 
     {"commit": <git HEAD>, "tree_dirty": bool,
-     "tree_diff_sha256": sha256 of `git diff HEAD` (null on a clean tree),
+     "tree_diff_sha256": sha256 of `git diff HEAD` and the untracked
+                         files (null on a clean tree),
      "n_queries": N, "n_ok": N, "fails": [...],
      "session_conf_hash": md5-of-confs, "queries": {name: true/false}}
 
-A dirty-tree record names its exact tree: HEAD plus the diff whose hash
-it carries (untracked files are not part of `git diff HEAD`; add them to
-the index first to have them covered).
+A dirty-tree record names its exact tree: HEAD plus the changes whose
+hash it carries, the tracked diff and every untracked, not ignored file
+(path and content). The tree is recorded before the gate runs.
 """
 
 from __future__ import annotations
@@ -32,24 +33,36 @@ SF_DIR = os.environ.get("SPARK_GRAFT_GATE_SF_DIR", "/root/testdata/sf0.01")
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def _git(*args, cwd: str = REPO) -> str:
+def _git(*args, cwd: str = REPO) -> bytes:
     try:
-        return subprocess.run(
-            ["git", *args], capture_output=True, text=True, cwd=cwd
-        ).stdout
+        return subprocess.run(["git", *args], capture_output=True, cwd=cwd).stdout
     except OSError:
-        return ""
+        return b""
 
 
 def tree_record(repo: str = REPO) -> dict:
-    """The tree the gate ran on: HEAD, whether it was dirty and, if so,
-    the sha256 of `git diff HEAD` that turns HEAD into it."""
+    """The tree the gate runs on: HEAD, whether it is dirty and, if so,
+    the sha256 of the changes that turn HEAD into it — `git diff HEAD`
+    plus each untracked file's path and content."""
     dirty = bool(_git("status", "--porcelain", cwd=repo).strip())
-    diff = _git("diff", "HEAD", "--binary", cwd=repo) if dirty else ""
+    digest = None
+    if dirty:
+        h = hashlib.sha256(_git("diff", "HEAD", "--binary", cwd=repo))
+        untracked = _git("ls-files", "--others", "--exclude-standard", "-z", cwd=repo)
+        for rel in sorted(filter(None, untracked.split(b"\0"))):
+            path = os.path.join(os.fsencode(repo), rel)
+            if os.path.islink(path):
+                body = os.readlink(path)
+            else:
+                with open(path, "rb") as f:
+                    body = f.read()
+            for part in (rel, body):
+                h.update(len(part).to_bytes(8, "big") + part)
+        digest = h.hexdigest()
     return {
-        "commit": _git("rev-parse", "HEAD", cwd=repo).strip(),
+        "commit": _git("rev-parse", "HEAD", cwd=repo).decode().strip(),
         "tree_dirty": dirty,
-        "tree_diff_sha256": hashlib.sha256(diff.encode()).hexdigest() if dirty else None,
+        "tree_diff_sha256": digest,
     }
 
 
@@ -59,6 +72,7 @@ def main(argv: "list[str] | None" = None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("log", help="JSON gate log to append the record to")
     log_path = ap.parse_args(argv).log
+    tree = tree_record()
 
     import duckdb
     import pandas as pd
@@ -122,7 +136,7 @@ def main(argv: "list[str] | None" = None) -> int:
     fails = sorted(n for n, ok in results.items() if not ok)
 
     record = {
-        **tree_record(),
+        **tree,
         "sf_dir": SF_DIR,
         "n_queries": len(results),
         "n_ok": sum(results.values()),
