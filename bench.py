@@ -326,11 +326,12 @@ def _bench_ingest(spark) -> float:
     """Ingest-throughput bench: the reference's only implicit performance
     contract is block-ingest latency (be_db_follower.erl:103-107 — keep up
     with mainnet, ~1 block/min). Time the FULL follower path — JSONL block
-    archives -> blockfiles stream source (ordered offsets) -> txn explode
-    -> foreachBatch derive of all 10 tables + incremental inventory MERGE —
-    and report blocks/sec. The corpus is generated once (deterministic
-    fixture txns across all 20 reference txn types); each timed run starts
-    from a fresh checkpoint/output dir so nothing is warm-started.
+    archives -> the contiguous run above the sync watermark, read with
+    Spark's JSON reader -> txn explode -> derive of all 10 tables +
+    incremental inventory MERGE — and report blocks/sec. The corpus is
+    generated once (deterministic fixture txns across all 20 reference txn
+    types); each timed run starts from a fresh output dir so nothing is
+    warm-started.
 
     SPARK_GRAFT_BENCH_BLOCKS sets corpus size (default 240, ~12 archives);
     SPARK_GRAFT_BENCH_BLOCKS=0 disables the ingest bench."""

@@ -310,7 +310,7 @@ class ParquetMergeTarget:
             # flips last, so a crash between state, changelog, and
             # publish leaves only unreferenced directories — the same
             # write-audit-publish guarantee as before.
-            new = spark.read.parquet(os.path.join(self.path, f"v={next_v}"))
+            new = self._read_written(spark, merged, next_v)
             self._write_changelog(target, new, list(changelog_keys), next_v)
         os.makedirs(self.path, exist_ok=True)
         tmp = self._pointer + ".tmp"
@@ -329,7 +329,17 @@ class ParquetMergeTarget:
         with open(tmp, "w") as f:
             json.dump(meta, f)
         os.replace(tmp, self._pointer)  # publish: atomic pointer flip
-        return self.read(spark)
+        return self._read_written(spark, merged, next_v)
+
+    def _read_written(
+        self, spark: SparkSession, merged: DataFrame, version: int
+    ) -> DataFrame:
+        """The ``v=<version>`` files just written from ``merged``, read
+        with its schema: an inferred read would run a Spark job to learn
+        what the fold already states."""
+        return spark.read.schema(merged.schema).parquet(
+            os.path.join(self.path, f"v={version}")
+        )
 
     def _write_changelog(
         self,

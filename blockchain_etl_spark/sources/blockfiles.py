@@ -21,7 +21,9 @@ DataFrame planning instead of living in ad-hoc driver code:
   prefix of newly landed files; a file starting beyond next_height is NOT
   consumed (a gap means an archive is late — the reference stalls rather
   than skips; replaying an already-consumed range is a no-op because the
-  offset only moves forward).
+  offset only moves forward). ``contiguous_files`` is that rule; the block
+  follower (``BlockIngest.run_blockfiles_stream``) applies it from its sync
+  watermark and reads the run with Spark's JSON reader instead of a stream.
 
 File format: JSON lines, one block per line, with at least
 ``{"height": N, "block_hash": "...", "time": T, "txns": [...]}`` —
@@ -81,6 +83,22 @@ def list_block_files(path: str) -> list[_BlockFile]:
             out.append(_BlockFile(os.path.join(path, name), int(m.group(1)), int(m.group(2))))
     out.sort(key=lambda f: f.lo)
     return out
+
+
+def contiguous_files(path: str, next_height: int) -> list[_BlockFile]:
+    """The contiguous run of landed files from ``next_height``: files
+    wholly below it are skipped (already consumed — replay-safe), and the
+    run stops at the first gap (a later archive landed first — stall,
+    never skip)."""
+    run = []
+    for f in list_block_files(path):
+        if f.hi < next_height:
+            continue
+        if f.lo > next_height:
+            break
+        run.append(f)
+        next_height = f.hi + 1
+    return run
 
 
 def _rows_from_file(path: str):
@@ -168,20 +186,9 @@ class BlockFilesStreamReader(SimpleDataSourceStreamReader):
     def initialOffset(self):  # noqa: N802
         return {"next_height": self.start_height}
 
-    def _contiguous(self, next_height: int) -> list[_BlockFile]:
-        run = []
-        for f in list_block_files(self.path):
-            if f.hi < next_height:
-                continue  # already consumed (replay-safe)
-            if f.lo > next_height:
-                break  # gap: a later archive landed first — stall, not skip
-            run.append(f)
-            next_height = f.hi + 1
-        return run
-
     def read(self, start: dict):
         next_height = int(start["next_height"])
-        run = self._contiguous(next_height)
+        run = contiguous_files(self.path, next_height)
         if not run:
             return iter([]), start
         rows = [

@@ -6,7 +6,7 @@ Reference semantics being emulated (and how):
 
 - Strict N+1 ordering with an assert (src/be_db_block.erl:96-100): each
   microbatch must start at or below stored_height+1 — replays are allowed
-  (idempotent), gaps raise.
+  (idempotent), a batch that starts past a gap raises.
 - One DB transaction per block spanning all 12 handlers
   (src/be_db_follower.erl:86-108): Spark has no multi-table transaction, so
   the guarantee is weakened to "every table write is idempotent (same block
@@ -24,6 +24,15 @@ Reference semantics being emulated (and how):
   (streaming/fanout.py). Every task runs to completion before a failure is
   re-raised; the handlers that succeeded stay committed, the watermark does
   not move, and the replay of the range converges.
+- One offset: the archive follower (``run_blockfiles_stream``) runs no
+  streaming query. The sync watermark is its only offset: each call reads
+  the contiguous run of landed archives above it in one batch and ingests
+  it as one microbatch; a missing archive stalls the catch-up below the
+  gap instead of raising. A replayable source plus idempotent writes and
+  a watermark written last already give exactly-once, so a second offset
+  log would add nothing. The archive follower writes no ``_checkpoint/``;
+  one it left in an earlier version may be deleted (``run_stream``, the
+  parquet-file follower, still keeps its stream offsets there).
 
 Scale notes: each microbatch writes `blockrange=<min>-<max>` directories —
 append-only, no small-file rewrite of history; at 100 TB compaction is a
@@ -175,6 +184,26 @@ def derive_tables(txns: DataFrame) -> dict[str, DataFrame]:
     out["ouis"] = oui_history(txns)
     out["vars"] = vars_history(txns)
     return out
+
+
+def explode_txns(blocks: DataFrame) -> DataFrame:
+    """Block rows in the ``blockfiles`` schema → one row per transaction
+    in the ingest shape (block, hash, time, type, fields). Runs in the
+    JVM: each entry's polymorphic payload stays an opaque JSON string
+    ('fields')."""
+    return blocks.select(
+        col("height").alias("block"),
+        "time",
+        F.explode(
+            F.from_json("txns", "array<struct<hash:string,type:string,fields:string>>")
+        ).alias("t"),
+    ).select(
+        "block",
+        col("t.hash").alias("hash"),
+        "time",
+        col("t.type").alias("type"),
+        col("t.fields").alias("fields"),
+    )
 
 
 class BlockIngest:
@@ -576,41 +605,32 @@ class BlockIngest:
     def run_blockfiles_stream(
         self, spark: SparkSession, input_dir: str, start_height: int = 1
     ) -> None:
-        """S1 through the `blockfiles` source plugin (sources/blockfiles.py):
-        the follower archive feed arrives as height-ordered JSONL block
-        files; the source enforces contiguity (gap = stall) and height
-        offsets, this wrapper fans each block's txn array out to the same
-        ordered foreachBatch pipeline as run_stream. Each txn entry carries
-        its polymorphic payload as an opaque JSON string ('fields') — the
-        from_json explode stays fully JVM-side."""
-        from ..sources.blockfiles import BlockFilesDataSource
+        """S1 from the block archive feed (sources/blockfiles.py): catch
+        the follower up to the landed tip as ONE microbatch.
 
-        spark.dataSource.register(BlockFilesDataSource)
+        The sync watermark is the only offset. The catch-up takes the
+        contiguous run of landed archives from
+        ``max(sync_height() + 1, start_height)`` (``contiguous_files``: a
+        gap stalls the catch-up at the height below it, without error; the
+        run resumes once the late archive lands). The run is decoded in the
+        JVM by Spark's JSON reader in FAILFAST mode, so a corrupt line
+        raises and the watermark stays put. The rows go through
+        ``explode_txns`` to ``process_batch``. With nothing new the call
+        returns before any Spark job. A replayed range converges for the
+        same reason a crashed batch does: every write is idempotent and the
+        watermark is written last. No ``_checkpoint/`` is written; one this
+        follower left in an earlier version, when it ran as a streaming
+        query, is ignored and may be deleted."""
+        from ..sources.blockfiles import SCHEMA, contiguous_files
+
+        next_height = max(self.sync_height() + 1, start_height)
+        run = contiguous_files(input_dir, next_height)
+        if not run:
+            return
         blocks = (
-            spark.readStream.format("blockfiles")
-            .option("path", input_dir)
-            .option("startHeight", start_height)
-            .load()
+            spark.read.schema(SCHEMA)
+            .option("mode", "FAILFAST")
+            .json([f.path for f in run])
+            .filter(col("height") >= next_height)
         )
-        txns = blocks.select(
-            col("height").alias("block"),
-            "time",
-            F.explode(
-                F.from_json(
-                    "txns", "array<struct<hash:string,type:string,fields:string>>"
-                )
-            ).alias("t"),
-        ).select(
-            "block",
-            col("t.hash").alias("hash"),
-            "time",
-            col("t.type").alias("type"),
-            col("t.fields").alias("fields"),
-        )
-        q = (
-            txns.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", os.path.join(self.out_dir, "_checkpoint"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        self.process_batch(explode_txns(blocks), next_height)

@@ -137,65 +137,281 @@ def test_stream_read_end_to_end(spark, blockdir, tmp_path):
     assert df.agg({"height": "max"}).first()[0] == 40
 
 
-def test_blockfiles_stream_feeds_ingest(spark, tmp_path):
-    """The full follower path through the source plugin: JSONL block
-    archives -> blockfiles stream -> txn explode -> ordered foreachBatch
-    ingest == the batch pipeline over the same transactions."""
-    from pyspark.sql import Row
-
-    from blockchain_etl_spark.sources.blockchain import SCHEMAS
-    from blockchain_etl_spark.streaming.ingest import TABLES, BlockIngest, derive_tables
+@pytest.fixture(scope="module")
+def chain():
+    """The fixture chain as (block rows by height, block time by height,
+    txn dicts)."""
     from tests.fixtures_blockchain import gen_transactions
 
     blocks, txns = gen_transactions()
     by_height: dict[int, list] = {}
     for t in txns:
         by_height.setdefault(t["block"], []).append(t)
-    block_time = {b["height"]: b["time"] for b in blocks}
+    return by_height, {b["height"]: b["time"] for b in blocks}, txns
+
+
+def _write_chain_archive(dirpath: str, chain, lo: int, hi: int) -> None:
+    by_height, block_time, _ = chain
+    with open(os.path.join(dirpath, f"blocks_{lo}_{hi}.jsonl"), "w") as f:
+        for h in range(lo, hi + 1):
+            f.write(
+                json.dumps(
+                    {
+                        "height": h,
+                        "block_hash": f"bh{h:05d}",
+                        "time": block_time[h],
+                        "txns": [
+                            {"hash": t["hash"], "type": t["type"], "fields": t["fields"]}
+                            for t in by_height.get(h, [])
+                        ],
+                    }
+                )
+                + "\n"
+            )
+
+
+def _set(df):
+    return {
+        tuple(tuple(v) if isinstance(v, list) else v for v in r)
+        for r in df.collect()
+    }
+
+
+def _chain_txns(spark, chain, hi: int):
+    """The chain's transactions of blocks 1..hi as the ingest's frame."""
+    from pyspark.sql import Row
+
+    from blockchain_etl_spark.sources.blockchain import SCHEMAS
+
+    rows = [Row(**t) for t in chain[2] if t["block"] <= hi]
+    return spark.createDataFrame(rows, schema=SCHEMAS["transactions"])
+
+
+def test_blockfiles_stream_feeds_ingest(spark, chain, tmp_path):
+    """The full follower path from the archive feed: JSONL block archives
+    -> contiguous run -> txn explode -> ordered ingest == the batch
+    pipeline over the same transactions."""
+    from blockchain_etl_spark.streaming.ingest import TABLES, BlockIngest, derive_tables
 
     d = str(tmp_path / "archive")
     os.makedirs(d)
     # three archives covering 1..120 contiguously
     for lo, hi in ((1, 40), (41, 90), (91, 120)):
-        with open(os.path.join(d, f"blocks_{lo}_{hi}.jsonl"), "w") as f:
-            for h in range(lo, hi + 1):
-                f.write(
-                    json.dumps(
-                        {
-                            "height": h,
-                            "block_hash": f"bh{h:05d}",
-                            "time": block_time[h],
-                            "txns": [
-                                {
-                                    "hash": t["hash"],
-                                    "type": t["type"],
-                                    "fields": t["fields"],
-                                }
-                                for t in by_height.get(h, [])
-                            ],
-                        }
-                    )
-                    + "\n"
-                )
+        _write_chain_archive(d, chain, lo, hi)
 
     out_dir = str(tmp_path / "out")
     ing = BlockIngest(out_dir)
     ing.run_blockfiles_stream(spark, d)
-
-    txn_df = spark.createDataFrame([Row(**t) for t in txns], schema=SCHEMAS["transactions"])
-    batch_tables = derive_tables(txn_df)
     assert ing.sync_height() == 120
+    assert not os.path.exists(os.path.join(out_dir, "_checkpoint"))
 
-    def _set(df):
-        return {
-            tuple(tuple(v) if isinstance(v, list) else v for v in r)
-            for r in df.collect()
-        }
-
+    want = derive_tables(_chain_txns(spark, chain, 120))
     for name in TABLES:
         got = _set(ing.read_table(spark, name))
-        want = _set(batch_tables[name])
-        assert got == want, f"{name}: {len(got)} vs {len(want)}"
+        assert got == _set(want[name]), f"{name}: {len(got)}"
+
+
+def test_follower_gap_stalls_then_resumes(spark, chain, tmp_path):
+    """A late archive stalls the catch-up below the gap without error and
+    without skipping; once it lands the next call takes the whole rest."""
+    from blockchain_etl_spark.streaming.ingest import BlockIngest
+
+    d = str(tmp_path / "feed")
+    os.makedirs(d)
+    _write_chain_archive(d, chain, 1, 20)
+    _write_chain_archive(d, chain, 41, 60)
+    ing = BlockIngest(str(tmp_path / "out"))
+    ing.run_blockfiles_stream(spark, d)
+    assert ing.sync_height() == 20
+
+    _write_chain_archive(d, chain, 21, 40)
+    ing.run_blockfiles_stream(spark, d)
+    assert ing.sync_height() == 60
+    assert _set(ing.read_table(spark, "transactions")) == _set(_chain_txns(spark, chain, 60))
+
+
+def test_follower_corrupt_line_raises_and_keeps_watermark(spark, chain, tmp_path):
+    """A corrupt archive line fails the catch-up loudly, never skips a
+    block, and leaves the sync height where it was."""
+    from blockchain_etl_spark.streaming.ingest import BlockIngest
+
+    d = str(tmp_path / "feed")
+    os.makedirs(d)
+    _write_chain_archive(d, chain, 1, 20)
+    ing = BlockIngest(str(tmp_path / "out"))
+    ing.run_blockfiles_stream(spark, d)
+    assert ing.sync_height() == 20
+
+    with open(os.path.join(d, "blocks_21_22.jsonl"), "w") as f:
+        f.write('{"height": 21, "block_hash": "h21", "time": 1, "txns": []}\n')
+        f.write("THIS IS NOT JSON\n")
+    with pytest.raises(Exception, match="(?i)malformed"):
+        ing.run_blockfiles_stream(spark, d)
+    assert ing.sync_height() == 20
+
+
+def test_follower_nothing_new_runs_no_spark_job(spark, chain, tmp_path, monkeypatch):
+    """A catch-up with no archive above the watermark returns before any
+    Spark job and without a ``process_batch`` call."""
+    from blockchain_etl_spark.streaming.ingest import BlockIngest
+
+    d = str(tmp_path / "feed")
+    os.makedirs(d)
+    _write_chain_archive(d, chain, 1, 20)
+    ing = BlockIngest(str(tmp_path / "out"))
+    ing.run_blockfiles_stream(spark, d)
+    assert ing.sync_height() == 20
+
+    sc = spark.sparkContext
+    calls = []
+    process_batch = BlockIngest.process_batch
+
+    def counting(self, batch, batch_id):
+        calls.append(batch_id)
+        return process_batch(self, batch, batch_id)
+
+    monkeypatch.setattr(BlockIngest, "process_batch", counting)
+    sc.setJobGroup("follower-idle", "nothing-new catch-up")
+    try:
+        ing.run_blockfiles_stream(spark, d)
+        idle_jobs = list(sc.statusTracker().getJobIdsForGroup("follower-idle"))
+        # the probe sees jobs when there is work
+        _write_chain_archive(d, chain, 21, 40)
+        ing.run_blockfiles_stream(spark, d)
+        busy_jobs = list(sc.statusTracker().getJobIdsForGroup("follower-idle"))
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert idle_jobs == []
+    assert calls == [21] and busy_jobs
+    assert ing.sync_height() == 40
+
+
+def test_follower_start_height(spark, chain, tmp_path, monkeypatch):
+    """``start_height`` picks the first height on a fresh lake (where the
+    order check then refuses a start past genesis) and is ignored at or
+    below the sync watermark."""
+    from blockchain_etl_spark.streaming.ingest import BlockIngest
+
+    d = str(tmp_path / "feed")
+    os.makedirs(d)
+    _write_chain_archive(d, chain, 1, 20)
+    _write_chain_archive(d, chain, 21, 40)
+    firsts = []
+    process_batch = BlockIngest.process_batch
+
+    def spy(self, batch, batch_id):
+        firsts.append((batch_id, batch.agg({"block": "min"}).first()[0]))
+        return process_batch(self, batch, batch_id)
+
+    monkeypatch.setattr(BlockIngest, "process_batch", spy)
+    fresh = BlockIngest(str(tmp_path / "fresh"))
+    with pytest.raises(ValueError, match="first height 25 > stored 0"):
+        fresh.run_blockfiles_stream(spark, d, start_height=25)
+    assert firsts == [(25, 25)] and fresh.sync_height() == 0
+
+    ing = BlockIngest(str(tmp_path / "out"))
+    ing.run_blockfiles_stream(spark, d)
+    _write_chain_archive(d, chain, 41, 60)
+    ing.run_blockfiles_stream(spark, d, start_height=5)
+    assert firsts[1:] == [(1, 1), (41, 41)]
+    assert ing.sync_height() == 60
+
+
+def test_follower_resumes_from_sync_height_past_old_checkpoint(spark, chain, tmp_path):
+    """A lake left by the streaming follower, with its ``_checkpoint/``,
+    resumes from the sync watermark; the checkpoint is neither read nor
+    written."""
+    from blockchain_etl_spark.streaming.ingest import BlockIngest, explode_txns
+
+    d = str(tmp_path / "feed")
+    os.makedirs(d)
+    _write_chain_archive(d, chain, 1, 20)
+    out = str(tmp_path / "out")
+    ing = BlockIngest(out)
+    ckpt = os.path.join(out, "_checkpoint")
+    spark.dataSource.register(BlockFilesDataSource)
+    q = (
+        explode_txns(
+            spark.readStream.format("blockfiles").option("path", d).load()
+        )
+        .writeStream.foreachBatch(ing.process_batch)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    assert ing.sync_height() == 20
+
+    def listing():
+        return sorted(
+            (os.path.relpath(os.path.join(root, n), ckpt), os.path.getmtime(os.path.join(root, n)))
+            for root, _, names in os.walk(ckpt)
+            for n in names
+        )
+
+    before = listing()
+    assert before
+    _write_chain_archive(d, chain, 21, 40)
+    ing.run_blockfiles_stream(spark, d)
+    assert ing.sync_height() == 40
+    assert listing() == before
+    assert _set(ing.read_table(spark, "transactions")) == _set(_chain_txns(spark, chain, 40))
+
+
+def test_follower_decode_equals_blockfiles_source(spark, tmp_path, monkeypatch):
+    """The follower's JVM decode of the archives yields the same txn rows
+    as the ``blockfiles`` DataSource plus the same explode, on the edge
+    shapes of the feed: empty and missing txn arrays, non-ASCII text
+    (escaped and raw UTF-8), and object-valued ``fields``."""
+    from blockchain_etl_spark.streaming.ingest import BlockIngest, explode_txns
+
+    d = str(tmp_path / "feed")
+    os.makedirs(d)
+    blocks = [
+        {"height": 1, "block_hash": "b1", "time": 11, "txns": []},
+        {"height": 2, "block_hash": "b2", "time": 12},
+        {
+            "height": 3,
+            "block_hash": "b3",
+            "time": 13,
+            "txns": [
+                {"hash": "t3a", "type": "payment_v2", "fields": json.dumps({"payer": "Zoë ✓"})},
+                {
+                    "hash": "t3b",
+                    "type": "vars_v1",
+                    "fields": {"vars": {"name": "größe", "v": [1, 2.5, None]}, "nonce": 7},
+                },
+            ],
+        },
+        {
+            "height": 4,
+            "block_hash": "b4",
+            "time": 14,
+            "txns": [{"hash": "t4", "type": "oui_v1", "fields": {"owner": "été", "addresses": []}}],
+        },
+    ]
+    with open(os.path.join(d, "blocks_1_2.jsonl"), "w") as f:
+        for b in blocks[:2]:
+            f.write(json.dumps(b) + "\n")
+    with open(os.path.join(d, "blocks_3_4.jsonl"), "w", encoding="utf-8") as f:
+        f.write(json.dumps(blocks[2]) + "\n")  # non-ASCII escaped
+        f.write(json.dumps(blocks[3], ensure_ascii=False) + "\n")  # raw UTF-8
+
+    got = []
+    monkeypatch.setattr(
+        BlockIngest, "process_batch", lambda self, batch, batch_id: got.extend(batch.collect())
+    )
+    BlockIngest(str(tmp_path / "out")).run_blockfiles_stream(spark, d)
+
+    spark.dataSource.register(BlockFilesDataSource)
+    want = explode_txns(spark.read.format("blockfiles").option("path", d).load()).collect()
+    assert sorted(got) == sorted(want)
+    assert len(want) == 3
+    fields = {r["hash"]: r["fields"] for r in want}
+    assert json.loads(fields["t3a"]) == {"payer": "Zoë ✓"}
+    assert json.loads(fields["t3b"])["vars"]["name"] == "größe"
+    assert json.loads(fields["t4"]) == {"owner": "été", "addresses": []}
 
 
 def test_stream_restart_resumes_from_checkpoint(spark, blockdir, tmp_path):
