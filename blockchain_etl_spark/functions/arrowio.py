@@ -1,89 +1,107 @@
-"""Driver-side parquet writes for gate-scoped bounded frames.
+"""The one lane rule for maintained-state writes: driver or distributed.
 
-Inside a maintained-plane driver gate (session.gate_shuffle) every state
-frame is bounded by the fixed gate corpus (sources/testdata.py:
-GATE_DOC_CAP) — a few thousand rows regardless of sf. Spark's parquet
-writer is built for the opposite regime: a write job schedules output
-tasks, runs the Hadoop commit protocol (_temporary staging + renames),
-and pays a few hundred ms of fixed cost per commit even for a 1-row
-table — and the five doc gates commit dozens of plane versions each.
-Routing those bounded writes through ``DataFrame.toArrow()`` (one
-collect-style job executing the same fold lineage) plus a single
-pyarrow file write removes the committer round trip entirely, with a
-byte-identical read path (``spark.read.parquet`` on the directory).
+Every versioned merge (operators/merge.py), DocIngest chunk write
+(streaming/docs.py) and IVM segment write (operators/ivm.py) asks this
+module which lane its frame takes, whatever the load and whether or not
+a query gate is running:
 
-Same class of move as the bounded driver union-find
-(operators/component_index.py): legitimate BECAUSE the gate corpus is
-size-invariant by design. Production ingest never enters a gate scope
-and keeps the distributed writer.
+- **driver lane** — ``DataFrame.toArrow()`` through a ``LIMIT`` of
+  ``_DRIVER_ROWS_CAP + 1`` (one collect-style job executing the fold
+  lineage) plus one pyarrow file write. No write job, no Hadoop commit
+  protocol (``_temporary`` staging and renames), whose fixed few hundred
+  ms per commit dominate small state writes. The read path is
+  byte-identical (``spark.read.parquet`` on the directory).
+- **distributed lane** — Spark's parquet writer, taken when the collected
+  frame is over ``_DRIVER_ROWS_CAP`` rows or ``_DRIVER_BYTES_CAP`` Arrow
+  bytes, when its schema does not convert to Arrow, or (merge targets)
+  when the state already on disk is over the byte bound, which costs no
+  job to find out.
+
+The decision is made from the size of the frame alone, so the path a test
+or a benchmark times is the path a production load of the same size runs.
 """
 
 from __future__ import annotations
 
+import logging
 import os
 import shutil
-import sys
 
 from pyspark.sql import DataFrame
 
-# Hard bound on rows collected driver-side, enforcing the "bounded gate
-# corpus" invariant structurally instead of by convention: the collect
-# runs through a LIMIT of cap+1, so even a runaway fold lineage can
-# never materialize more than cap+1 rows on the driver — same
-# legitimacy class as the union-find collect cap
-# (operators/component_index.py:_DRIVER_UF_CAP). Sized ~4 orders above
-# the GATE_DOC_CAP=1200 doc-grain frames so shingle-grain planes
-# (postings ~ docs x distinct shingles) and the 10x scaling probe stay
-# on the fast path, while anything lake-proportional falls back to the
-# distributed writer.
+_log = logging.getLogger(__name__)
+
+# Hard bound on rows collected driver-side: the collect runs through a
+# LIMIT of cap+1, so even a runaway fold lineage never materializes more
+# than cap+1 rows on the driver.
 _DRIVER_ROWS_CAP = 5_000_000
+
+# Bound on the Arrow bytes (``pyarrow.Table.nbytes``) of a driver-lane
+# frame, and on the parquet bytes of a merge target's current version on
+# disk. The largest frame the lane collects is 8.9 MB in the 12-batch
+# ingest of tools/scaling_probe_maintained.py and 1.5 MB on the perfbench
+# `pipelines` queries at sf0.1 (its IVM gate); 64 MiB leaves a 7x margin
+# over the first and stays small next to a 2 GiB driver heap, so state
+# that grows with the lake goes to Spark's writer.
+_DRIVER_BYTES_CAP = 64 * 1024 * 1024
+
+
+def collect_arrow_capped(df: DataFrame):
+    """``df`` → a ``pyarrow.Table``, or None when the frame is not for
+    the driver lane: its schema doesn't round-trip through Arrow, or the
+    LIMIT-guarded collect is over ``_DRIVER_ROWS_CAP`` rows or
+    ``_DRIVER_BYTES_CAP`` bytes. One execution of the lineage either way
+    (the limit rides the same job), so a caller that gets a table back
+    has already paid the fold exactly once. Both caps are read at call
+    time."""
+    import pyarrow.lib
+    from pyspark.errors import PySparkTypeError
+
+    try:
+        tbl = df.limit(_DRIVER_ROWS_CAP + 1).toArrow()
+    except (PySparkTypeError, pyarrow.lib.ArrowException) as exc:
+        # ONLY Arrow-conversion misses route to the fallback: an
+        # execution failure in the fold lineage propagates (the
+        # distributed writer would fail identically).
+        _log.info("toArrow() miss (%s): distributed lane", type(exc).__name__)
+        return None
+    if tbl.num_rows > _DRIVER_ROWS_CAP or tbl.nbytes > _DRIVER_BYTES_CAP:
+        _log.info(
+            "frame (%d rows, %d bytes) is over the driver bound "
+            "(%d rows, %d bytes): distributed lane",
+            tbl.num_rows, tbl.nbytes, _DRIVER_ROWS_CAP, _DRIVER_BYTES_CAP,
+        )
+        return None
+    return tbl
+
+
+def dir_bytes(directory: str) -> int:
+    """Bytes of the files under ``directory`` (0 when it is missing)."""
+    return sum(
+        os.path.getsize(os.path.join(root, name))
+        for root, _, files in os.walk(directory)
+        for name in files
+    )
 
 
 def write_parquet_driver(
     df: DataFrame, directory: str, success_marker: bool = False
 ) -> bool:
-    """Overwrite ``directory`` with ``df``'s rows as ONE parquet file,
-    collected through the Arrow path. Returns False (writing nothing)
-    when the frame's schema doesn't round-trip through Arrow OR the
-    frame overflows ``_DRIVER_ROWS_CAP`` — the caller falls back to
-    the distributed writer either way. Matches
-    ``df.write.mode("overwrite").parquet(directory)`` semantics: the
-    target directory is replaced atomically-enough for the merge
-    targets' publish model (the version pointer flip is the real
-    commit; an orphan directory above the pointer is already ignored
-    by readers). ``success_marker``: also write the ``_SUCCESS`` file
-    Spark's committer leaves — LAST, after the data file, preserving
-    the chunk-commit protocol consumers like
-    DocIngest._complete_chunks rely on (a crash mid-write leaves a
-    marker-less dir = in-flight debris, exactly as with the
-    distributed writer)."""
-    import pyarrow.lib
+    """Overwrite ``directory`` with ``df``'s rows as ONE parquet file on
+    the driver lane. Returns False, writing nothing, when
+    ``collect_arrow_capped`` refuses the frame. The target directory is
+    replaced atomically enough for the merge targets' publish model (the
+    version pointer flip is the real commit; an orphan directory above
+    the pointer is already ignored by readers). ``success_marker``: also
+    write the ``_SUCCESS`` file Spark's committer leaves, LAST, after the
+    data file, preserving the chunk-commit protocol
+    DocIngest._complete_chunks relies on (a crash mid-write leaves a
+    marker-less dir = in-flight debris, exactly as with the distributed
+    writer)."""
     import pyarrow.parquet as pq
-    from pyspark.errors import PySparkTypeError
 
-    try:
-        # LIMIT cap+1 bounds the collect structurally (one execution —
-        # the limit rides the same job); a frame that overflows it is
-        # not a gate-bounded frame and takes the distributed writer.
-        tbl = df.limit(_DRIVER_ROWS_CAP + 1).toArrow()
-    except (PySparkTypeError, pyarrow.lib.ArrowException) as exc:
-        # ONLY Arrow-conversion misses route to the fallback — an
-        # execution failure in the fold lineage propagates (the
-        # distributed writer would fail identically; retrying it
-        # would just mask the real error with duplicated work).
-        print(
-            f"# arrowio: toArrow() miss ({type(exc).__name__}), "
-            f"falling back to the distributed writer for {directory}",
-            file=sys.stderr,
-        )
-        return False
-    if tbl.num_rows > _DRIVER_ROWS_CAP:
-        print(
-            f"# arrowio: frame exceeds _DRIVER_ROWS_CAP="
-            f"{_DRIVER_ROWS_CAP} rows, falling back to the distributed "
-            f"writer for {directory}",
-            file=sys.stderr,
-        )
+    tbl = collect_arrow_capped(df)
+    if tbl is None:
         return False
     shutil.rmtree(directory, ignore_errors=True)
     os.makedirs(directory, exist_ok=True)
@@ -94,37 +112,24 @@ def write_parquet_driver(
     return True
 
 
-def collect_arrow_capped(df: DataFrame, cap: "int | None" = None):
-    """``df`` → a ``pyarrow.Table``, or None when the frame is not
-    driver-bounded: schema doesn't round-trip through Arrow, or the
-    LIMIT-guarded collect overflows ``cap`` rows. One execution of the
-    lineage either way (the limit rides the same job), so a caller that
-    gets a table back has ALREADY paid the fold exactly once — the
-    maintained-state operators use this to fuse their emptiness probe,
-    bucket-list collect and segment write into a single job
-    (operators/ivm.py, round 14)."""
-    import pyarrow.lib
-    from pyspark.errors import PySparkTypeError
-
-    if cap is None:
-        cap = _DRIVER_ROWS_CAP  # read at call time so tests can pin it
-    try:
-        tbl = df.limit(cap + 1).toArrow()
-    except (PySparkTypeError, pyarrow.lib.ArrowException) as exc:
-        print(
-            f"# arrowio: toArrow() miss ({type(exc).__name__}), "
-            f"caller falls back to the distributed path",
-            file=sys.stderr,
-        )
-        return None
-    if tbl.num_rows > cap:
-        print(
-            f"# arrowio: frame exceeds cap={cap} rows, "
-            f"caller falls back to the distributed path",
-            file=sys.stderr,
-        )
-        return None
-    return tbl
+def write_parquet(
+    df: DataFrame,
+    directory: str,
+    success_marker: bool = False,
+    state_dir: "str | None" = None,
+) -> None:
+    """Overwrite ``directory`` with ``df`` through the lane the size rule
+    picks. ``state_dir``: the directory of the state ``df`` folds in
+    (a merge target's current version); when its bytes on disk are
+    already over ``_DRIVER_BYTES_CAP`` the driver lane is not tried, so a
+    lake-sized state never pays a collect before its distributed write.
+    The distributed writer always leaves ``_SUCCESS``."""
+    if state_dir is None or dir_bytes(state_dir) <= _DRIVER_BYTES_CAP:
+        # resolved at call time through the module, so a wrapper installed
+        # on ``write_parquet_driver`` sees every driver-lane attempt
+        if write_parquet_driver(df, directory, success_marker=success_marker):
+            return
+    df.write.mode("overwrite").parquet(directory)
 
 
 def write_table_partitioned(tbl, directory: str, part_col: str) -> "list[int]":

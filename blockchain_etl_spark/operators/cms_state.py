@@ -45,14 +45,12 @@ class CMSTopKState:
     maintained top-k read."""
 
     def __init__(self, path: str, key: str = "user_id", n_candidates: int = 64):
-        # driver_write: both states are bounded by the SKETCH STRUCTURE,
-        # not the stream — cells is exactly d*w rows (1024) and cand at
-        # most n_candidates rows at any scale — so every versioned merge
-        # skips the distributed commit protocol for a driver-side Arrow
-        # write (identical files, capped collect with distributed
-        # fallback; see ParquetMergeTarget.driver_write).
-        self.cells = ParquetMergeTarget(os.path.join(path, "cells"), driver_write=True)
-        self.cand = ParquetMergeTarget(os.path.join(path, "cand"), driver_write=True)
+        # both states are bounded by the SKETCH STRUCTURE, not the
+        # stream (cells is exactly d*w rows, cand at most n_candidates),
+        # so the size rule (functions/arrowio.py) keeps every versioned
+        # merge on the driver lane at any scale
+        self.cells = ParquetMergeTarget(os.path.join(path, "cells"))
+        self.cand = ParquetMergeTarget(os.path.join(path, "cand"))
         self.key = key
         self.n_candidates = n_candidates
 

@@ -80,7 +80,8 @@ def _fresh_split(c):
 # solver now live beside the distributed loop (operators/components.py);
 # re-exported here because tests and the fold route reference them as
 # module attributes of this file.
-from .components import _DRIVER_UF_CAP, _driver_union_find  # noqa: E402
+from . import components as _components  # noqa: E402
+from .components import _driver_union_find  # noqa: E402
 
 
 def _propagate_with_singletons(nodes: DataFrame, edges: DataFrame) -> DataFrame:
@@ -91,7 +92,7 @@ def _propagate_with_singletons(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     members without edges label themselves outside the loop.
 
     Fast path: the fold's subgraph is bounded (batch + touched anchors),
-    so when it collects under _DRIVER_UF_CAP rows the components are
+    so when it collects under _GRAPH_DRIVER_CAP rows the components are
     solved with a driver-side union-find — the same class of move as
     broadcasting a bounded join side, replacing the O(diameter) round
     loop (one Spark job per round) with two bounded collects. Labels are
@@ -112,7 +113,8 @@ def _propagate_with_singletons(nodes: DataFrame, edges: DataFrame) -> DataFrame:
         .unionAll(n_nodes.agg(F.count(F.lit(1)).alias("n")))
         .collect()
     )
-    if sizes[0].n <= _DRIVER_UF_CAP and sizes[1].n <= _DRIVER_UF_CAP:
+    cap = _components._GRAPH_DRIVER_CAP
+    if sizes[0].n <= cap and sizes[1].n <= cap:
         from ..functions.localframe import local_df
 
         # ONE tagged collect for both bounded frames (the checkpoints
@@ -147,10 +149,9 @@ def _propagate_with_singletons(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     # batch-sized subgraph: clamp the loop frames (see propagate_min_labels)
     labels_p = propagate_min_labels(
         endpoints, edges, id_col="doc_id", loop_partitions=8,
-        # thread THIS module's cap through so monkeypatching it (tests)
-        # disables the nested fast path too; endpoints can be bounded
-        # even when the batch node set overflowed the cap above
-        driver_cap=_DRIVER_UF_CAP,
+        # the same cap as above: endpoints can be bounded even when the
+        # batch node set overflowed it
+        driver_cap=cap,
     )
     singles = nodes.join(endpoints, ["doc_id"], "left_anti").select(
         "doc_id", col("doc_id").alias("label")

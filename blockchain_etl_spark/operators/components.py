@@ -23,12 +23,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col
 
-# Hard bound on rows collected driver-side for the union-find fast path:
-# same legitimacy class as a broadcast join side (the subgraph must be
-# bounded for the collect to be sound; oversized graphs take the
-# distributed loop below). Shared with the incremental maintainer
-# (operators/component_index.py imports both names).
-_DRIVER_UF_CAP = int(os.environ.get("SPARK_GRAFT_GRAPH_DRIVER_CAP", "200000"))
+# Hard bound on rows collected driver-side for the bounded graph fast
+# paths: the union-find here and in operators/component_index.py, and the
+# triangle census, LPA sweeps and k-core peel in plans/olap.py. Same
+# legitimacy class as a broadcast join side (the subgraph must be bounded
+# for the collect to be sound; oversized graphs take the distributed
+# loops). Every user reads it at call time, so one monkeypatch (or
+# SPARK_GRAFT_GRAPH_DRIVER_CAP) moves every graph route.
+_GRAPH_DRIVER_CAP = int(os.environ.get("SPARK_GRAFT_GRAPH_DRIVER_CAP", "200000"))
 
 
 def _driver_union_find(
@@ -67,7 +69,7 @@ def propagate_min_labels(
     id_col: str = "doc_id",
     max_rounds: int = 30,
     loop_partitions: int | None = None,
-    driver_cap: int | None = _DRIVER_UF_CAP,
+    driver_cap: int | None = None,
 ) -> DataFrame:
     """``nodes``: one row per vertex with column ``id_col``;
     ``edges``: (src, dst) directed pairs (symmetrized internally).
@@ -96,7 +98,10 @@ def propagate_min_labels(
     one collect job. Labels are identical by construction (min reachable
     id; pinned by tests/test_components.py fast≡distributed). Oversized
     graphs fall through to the distributed loop — the 100 TB path is
-    unchanged. Pass None/0 to force the distributed loop."""
+    unchanged. None (default) reads ``_GRAPH_DRIVER_CAP``; pass 0 to
+    force the distributed loop."""
+    if driver_cap is None:
+        driver_cap = _GRAPH_DRIVER_CAP
     if driver_cap:
         spark = nodes.sparkSession
         # Checkpoint BEFORE sizing: a bare count on the raw lineage would

@@ -84,25 +84,11 @@ class IncrementalJoinView:
         path: str,
         join_keys: Sequence[str],
         n_buckets: int = 32,
-        driver_write: "bool | None" = None,
     ):
-        """``driver_write``: route delta-sized segment materialization
-        through ONE capped driver-side Arrow collect per store (emptiness
-        probe + bucket list + parquet write fused into a single job, no
-        Hadoop commit round trip — functions/arrowio.py). Cap-guarded: a
-        delta that overflows the arrowio rows cap (or whose schema does
-        not round-trip through Arrow) falls back to the distributed
-        checkpoint+write path unchanged, so the 100 TB regime keeps its
-        shape — same legitimacy class as a broadcast-join threshold.
-        Default reads SPARK_GRAFT_IVM_DRIVER_WRITE (on unless "0"), which
-        doubles as the forced-distributed bench lane."""
         self.path = path
         self.join_keys = list(join_keys)
         self.n_buckets = n_buckets
         self._stores = ("a_state", "b_state", "view")
-        if driver_write is None:
-            driver_write = os.environ.get("SPARK_GRAFT_IVM_DRIVER_WRITE", "1") != "0"
-        self.driver_write = bool(driver_write)
 
     # -- manifest ----------------------------------------------------------
     @property
@@ -136,9 +122,9 @@ class IncrementalJoinView:
     ) -> "list[int]":
         """Write one segment and return the distinct bucket list it wrote —
         recorded in the manifest so pruning never has to probe storage.
-        ``df`` is either a DataFrame (distributed write) or a collected
-        ``pyarrow.Table`` (driver_write path — one pyarrow write, no
-        commit protocol, byte-identical directory layout).
+        ``df`` is either a DataFrame (distributed lane) or a collected
+        ``pyarrow.Table`` (driver lane — one pyarrow write, no commit
+        protocol, byte-identical directory layout).
         ``buckets``: pass the list when the caller already collected it
         (apply() collects each delta's buckets for store pruning) so the
         write does not schedule a duplicate distinct+collect job."""
@@ -262,42 +248,30 @@ class IncrementalJoinView:
         # with no parquet files, which poisons later reads) but still
         # advance the watermark below: the batch WAS processed, its net
         # effect is nil.
-        # Driver path (round 14): ONE capped Arrow collect per delta side
-        # fuses the consolidate execution, the emptiness guard, the
-        # pruning bucket list AND the segment write into a single job —
-        # the r13 shape paid localCheckpoint + distinct/collect +
-        # distributed write commit per side. The collected table becomes
-        # a JVM local relation for the join terms (exact stats, broadcast-
-        # friendly); overflow/Arrow-miss falls back to the r13 shape.
-        # One job per delta side covers BOTH the emptiness guard and the
-        # pruning bucket list (round 13): a consolidated delta is empty
-        # exactly when its distinct bucket list is — the separate
-        # isEmpty() probe each side previously paid is fused away.
+        # Driver lane (functions/arrowio.py): ONE capped Arrow collect per
+        # delta side fuses the consolidate execution, the emptiness guard,
+        # the pruning bucket list AND the segment write into a single job.
+        # The collected table becomes a JVM local relation for the join
+        # terms (exact stats, broadcast-friendly). A delta over the
+        # driver bound takes the distributed lane: checkpoint, then one
+        # bucket-list job that doubles as the emptiness guard (a
+        # consolidated delta is empty exactly when its bucket list is).
         from ..functions.arrowio import collect_arrow_capped
 
-        da_tbl = db_tbl = None
+        def collect_side(d):
+            """(join frame, or None when empty; write payload; buckets)"""
+            tbl = collect_arrow_capped(d)
+            if tbl is not None:
+                buckets = sorted({int(v) for v in tbl.column(_BUCKET).to_pylist()})
+                return (spark.createDataFrame(tbl) if buckets else None), tbl, buckets
+            d = d.localCheckpoint()
+            buckets = [r[0] for r in d.select(_BUCKET).distinct().collect()]
+            return (d if buckets else None), d, buckets
+
         if da is not None:
-            if self.driver_write:
-                da_tbl = collect_arrow_capped(da)
-            if da_tbl is not None:
-                a_buckets = sorted({int(v) for v in da_tbl.column(_BUCKET).to_pylist()})
-                da = spark.createDataFrame(da_tbl) if a_buckets else None
-            else:
-                da = da.localCheckpoint()
-                a_buckets = [r[0] for r in da.select(_BUCKET).distinct().collect()]
-                if not a_buckets:
-                    da = None
+            da, da_out, a_buckets = collect_side(da)
         if db is not None:
-            if self.driver_write:
-                db_tbl = collect_arrow_capped(db)
-            if db_tbl is not None:
-                b_buckets = sorted({int(v) for v in db_tbl.column(_BUCKET).to_pylist()})
-                db = spark.createDataFrame(db_tbl) if b_buckets else None
-            else:
-                db = db.localCheckpoint()
-                b_buckets = [r[0] for r in db.select(_BUCKET).distinct().collect()]
-                if not b_buckets:
-                    db = None
+            db, db_out, b_buckets = collect_side(db)
         terms = []
         if da is not None:
             b_old = self._read_store(
@@ -320,52 +294,34 @@ class IncrementalJoinView:
         bmap: dict[str, dict] = {s: dict(m["buckets"][s]) for s in self._stores}
         # The three segment writes are mutually independent (the view
         # delta joins the deltas against the OLD committed state, never
-        # the files being written here) and each pays the full parquet
-        # commit round trip — run them concurrently from a small driver
-        # pool so the commits overlap instead of serializing; the
-        # manifest flip below still happens strictly after every write
-        # returns, so the crash/publish model is unchanged (orphan
-        # segment dirs above the manifest are already ignored debris).
-        # Delta bucket lists were collected once above for store pruning
-        # and are passed through so no write schedules a duplicate
-        # distinct+collect job.
-        writes: "list[tuple[str, object, list | None]]" = []
+        # the files being written here), so they run concurrently
+        # (streaming/fanout.py); the manifest flip below still happens
+        # strictly after every write returns, so the crash/publish model
+        # is unchanged (orphan segment dirs above the manifest are
+        # already ignored debris). Delta bucket lists were collected once
+        # above for store pruning and are passed through so no write
+        # schedules a duplicate distinct+collect job.
+        writes: "list[tuple[str, object, list]]" = []
         if da is not None:
-            writes.append(("a_state", da_tbl if da_tbl is not None else da, a_buckets))
+            writes.append(("a_state", da_out, a_buckets))
         if db is not None:
-            writes.append(("b_state", db_tbl if db_tbl is not None else db, b_buckets))
+            writes.append(("b_state", db_out, b_buckets))
         if terms:
             dj = terms[0]
             for t in terms[1:]:
                 dj = dj.unionByName(t)
-            dj = _consolidate(dj)
-            # driver path: the view delta's join+consolidate lineage
-            # executes ONCE inside the capped Arrow collect, which also
-            # serves as emptiness guard + bucket list + write payload
-            dj_tbl = collect_arrow_capped(dj) if self.driver_write else None
-            if dj_tbl is not None:
-                dj_buckets = sorted({int(v) for v in dj_tbl.column(_BUCKET).to_pylist()})
-                if dj_buckets:
-                    writes.append(("view", dj_tbl, dj_buckets))
-            else:
-                dj = dj.localCheckpoint()
-                # same fusion as the delta sides: the bucket list doubles as
-                # the emptiness guard AND feeds _write_segment, which would
-                # otherwise schedule its own distinct+collect
-                dj_buckets = [r[0] for r in dj.select(_BUCKET).distinct().collect()]
-                if dj_buckets:
-                    writes.append(("view", dj, dj_buckets))
-        if writes:
-            from concurrent.futures import ThreadPoolExecutor
+            # the view delta's join+consolidate lineage executes ONCE,
+            # and its bucket list is the emptiness guard + write payload
+            dj, dj_out, dj_buckets = collect_side(_consolidate(dj))
+            if dj is not None:
+                writes.append(("view", dj_out, dj_buckets))
+        from ..streaming.fanout import run_tasks
 
-            def _do_write(task):
-                store, frame, buckets = task
-                return store, self._write_segment(frame, store, seg, buckets)
+        def write(store, frame, buckets):
+            bmap[store][str(seg)] = self._write_segment(frame, store, seg, buckets)
+            wrote[store].append(seg)
 
-            with ThreadPoolExecutor(max_workers=len(writes)) as pool:
-                for store, blist in pool.map(_do_write, writes):
-                    bmap[store][str(seg)] = blist
-                    wrote[store].append(seg)
+        run_tasks(spark, [(w[0], lambda w=w: write(*w)) for w in writes])
 
         os.makedirs(self.path, exist_ok=True)
         wms = dict(m["watermarks"])
@@ -604,20 +560,13 @@ class IncrementalJoinAggregate:
         group_keys: Sequence[str],
         sum_cols: Sequence[str] = (),
         n_buckets: int = 32,
-        driver_write: "bool | None" = None,
     ):
         from .merge import ParquetMergeTarget
 
         self.view = IncrementalJoinView(
-            os.path.join(path, "join"), join_keys, n_buckets, driver_write=driver_write
+            os.path.join(path, "join"), join_keys, n_buckets
         )
-        # the aggregate target inherits the view's (cap-guarded, fallback-
-        # tested) driver-write routing: its state is group-key grain, and
-        # write_parquet_driver degrades to the distributed writer past the
-        # arrowio rows cap, so the opt-in is scale-safe by construction
-        self.agg = ParquetMergeTarget(
-            os.path.join(path, "agg"), driver_write=self.view.driver_write
-        )
+        self.agg = ParquetMergeTarget(os.path.join(path, "agg"))
         self.group_keys = list(group_keys)
         self.sum_cols = list(sum_cols)
 

@@ -70,24 +70,27 @@ class LexicalIndex:
 
         # The two merges touch DIFFERENT targets and both derive from the
         # checkpointed tf frame, so their read→fold→write→flip sequences
-        # are independent — run them concurrently from a driver pool so
-        # the two parquet commits overlap instead of serializing. Replay
+        # are independent — run them concurrently (streaming/fanout.py)
+        # so the two writes overlap instead of serializing. Replay
         # stays exactly-once per table (each target's own watermark
         # guard; `replace` is idempotent), and a crash that lands the two
         # tables at different watermarks is the SAME state an inter-merge
         # crash of the serial form produced — delete()'s sync guard
         # already refuses it until the batch replays.
         dl = tf.groupBy("doc_id").agg(F.sum("tf").cast("long").alias("dl"))
-        from concurrent.futures import ThreadPoolExecutor
+        from ..streaming.fanout import run_tasks
 
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fp = pool.submit(
-                self.postings.merge_with, spark, tf, replace, watermark=watermark
-            )
-            fd = pool.submit(
-                self.doclen.merge_with, spark, dl, replace, watermark=watermark
-            )
-            fp.result(), fd.result()
+        run_tasks(
+            spark,
+            [
+                ("postings", lambda: self.postings.merge_with(
+                    spark, tf, replace, watermark=watermark
+                )),
+                ("doclen", lambda: self.doclen.merge_with(
+                    spark, dl, replace, watermark=watermark
+                )),
+            ],
+        )
 
     def delete(self, spark: SparkSession, doc_ids: DataFrame) -> None:
         """Drop documents from the index (unwatermarked maintenance fold —

@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col
 
+from ..functions import arrowio
+
 
 def merge_latest(
     target: DataFrame | None,
@@ -98,21 +100,12 @@ class ParquetMergeTarget:
     Layout: ``<path>/v=<n>/`` data directories plus ``<path>/_current.json``
     holding the live version — readers always see a complete table, and a
     replayed merge simply writes the next version (idempotent at the
-    pipeline level because merge_latest is deterministic).
+    pipeline level because merge_latest is deterministic). Each version
+    is written through the lane functions/arrowio.py picks from its size.
     """
 
-    def __init__(self, path: str, driver_write: bool = False):
-        """``driver_write``: opt in to the driver-side Arrow write path
-        (functions/arrowio.py) for every merge of this target, not just
-        gate-scoped ones. ONLY for state whose size is bounded by the
-        operator's own structure — sketch tables like CMS cells (d*w
-        rows by construction) or capped candidate lists — never for
-        state proportional to the lake. The arrowio rows cap still
-        guards the collect: an oversized frame falls back to the
-        distributed writer, so a mis-tagged target degrades to the old
-        path rather than collecting unbounded rows."""
+    def __init__(self, path: str):
         self.path = path
-        self.driver_write = bool(driver_write)
 
     @property
     def _pointer(self) -> str:
@@ -160,7 +153,7 @@ class ParquetMergeTarget:
         any committed version (pinned by tests/test_arrowio.py); the
         gate-scoped audit reports use it to turn eleven tiny count
         scans into driver-side metadata reads — the read-side mirror of
-        the gate's driver-side Arrow writes. None when no version is
+        the driver-lane Arrow writes. None when no version is
         committed (mirrors ``read`` returning None)."""
         import glob as _glob
 
@@ -281,26 +274,18 @@ class ParquetMergeTarget:
         if watermark is not None and watermark <= self._meta().get("watermark", -1):
             return target
         merged = fold(target, updates)
-        next_v = self.current_version() + 1
-        # Gate scope: the state is bounded by the fixed gate corpus, so
-        # the fold executes through ONE Arrow collect and a driver-side
-        # file write — skipping the Hadoop commit protocol that
-        # dominates tiny writes (functions/arrowio.py). Identical rows,
-        # identical read path; production merges never run in a gate.
-        wrote = False
-        if changelog_keys is None:
-            from ..session import gate_scope_active
-
-            if self.driver_write or gate_scope_active():
-                from ..functions.arrowio import write_parquet_driver
-
-                wrote = write_parquet_driver(
-                    merged, os.path.join(self.path, f"v={next_v}")
-                )
-        if not wrote:
-            merged.write.mode("overwrite").parquet(
-                os.path.join(self.path, f"v={next_v}")
-            )
+        cur_v = self.current_version()
+        next_v = cur_v + 1
+        # the size rule (functions/arrowio.py) picks the lane: a small
+        # fold runs as one Arrow collect and a driver-side file write,
+        # skipping the Hadoop commit protocol that dominates small
+        # writes; a state already over the byte bound on disk goes
+        # straight to Spark's writer
+        arrowio.write_parquet(
+            merged,
+            os.path.join(self.path, f"v={next_v}"),
+            state_dir=os.path.join(self.path, f"v={cur_v}") if cur_v else None,
+        )
         if changelog_keys is not None:
             # The v=N+1 write above IS the fold's materialization: diff
             # the COMMITTED files against the old state instead of

@@ -1082,15 +1082,14 @@ _TRI_MIN_COORDER = 2  # edge = parts co-ordered in >= this many baskets
 
 # Bounded driver fast path for the loops over the c_ab-filtered
 # co-purchase graph (triangle census, LPA sweeps): when the DISTINCT edge
-# list counts under this cap, collect it once and run the exact integer
-# algorithm driver-side — the same legitimacy class as a broadcast join
-# side and the same move as the union-find fast path in
-# operators/components.py (_DRIVER_UF_CAP, judged sound with boundary
-# tests on both routes). Oversized graphs take the unchanged distributed
-# loop, so the 100 TB path keeps its shape. The UNfiltered co-purchase
-# graph (part_kcore_census, basket_part_pairs) is ~300x larger at every
-# scale and never routes here.
-_GRAPH_DRIVER_CAP = int(os.environ.get("SPARK_GRAFT_GRAPH_DRIVER_CAP", "200000"))
+# list counts under operators/components.py:_GRAPH_DRIVER_CAP (read at
+# call time), collect it once and run the exact integer algorithm
+# driver-side — the same legitimacy class as a broadcast join side and
+# the same move as the union-find fast path there (judged sound with
+# boundary tests on both routes). Oversized graphs take the unchanged
+# distributed loop, so the 100 TB path keeps its shape. The UNfiltered
+# co-purchase graph (part_kcore_census, basket_part_pairs) is ~300x
+# larger at every scale and never routes here.
 
 
 def _bounded_edge_collect(
@@ -1100,8 +1099,10 @@ def _bounded_edge_collect(
     checkpointed edge frame sizes it; under the cap the collect reads the
     cached blocks. Over the cap returns (None, e0) so the distributed
     loop reuses the checkpoint instead of re-deriving the pair expansion."""
+    from ..operators import components
+
     e0 = edges.localCheckpoint(eager=False)
-    if e0.count() > _GRAPH_DRIVER_CAP:
+    if e0.count() > components._GRAPH_DRIVER_CAP:
         return None, e0
     return [(r[0], r[1]) for r in e0.collect()], e0
 
@@ -2208,7 +2209,7 @@ def part_kcore_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Driver-state peel (round 13, second pass): the degree STATE is
     # node-grain — |V| (n, d) pairs, part-dimension sized — while the
-    # EDGES (the payload the _GRAPH_DRIVER_CAP doc forbids collecting for
+    # EDGES (the payload the graph-cap doc forbids collecting for
     # this ~300x-larger graph) stay distributed in the checkpointed
     # adjacency. Under the node cap, hold the degree dict on the driver:
     # each non-empty round costs ONE small job (adjacency of the peeled
@@ -2223,8 +2224,11 @@ def part_kcore_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (over the cap, CollectLimit short-circuits after cap+1 rows). Routes
     # identical by tests/test_graph_props.py; over the cap the unchanged
     # distributed loop below runs.
-    probe = adj.select("n", "d0").limit(_GRAPH_DRIVER_CAP + 1).collect()
-    if len(probe) <= _GRAPH_DRIVER_CAP:
+    from ..operators import components
+
+    cap = components._GRAPH_DRIVER_CAP
+    probe = adj.select("n", "d0").limit(cap + 1).collect()
+    if len(probe) <= cap:
         d = {r[0]: r[1] for r in probe}
         rows = [(0, len(d), sum(d.values()) // 2)]
         for r in range(1, _KCORE_ROUNDS + 1):

@@ -1901,8 +1901,8 @@ def _pipeline_watermark_audit_body(
         # every plane's row count comes off its committed parquet
         # FOOTERS (ParquetMergeTarget.fast_count — exact by the parquet
         # spec, equality with read().count() pinned in
-        # tests/test_arrowio.py), the read-side mirror of the gate's
-        # driver-side Arrow writes. The report frame is a literal
+        # tests/test_arrowio.py), the read-side mirror of the
+        # driver-lane Arrow writes. The report frame is a literal
         # VALUES relation, so it carries no lineage into the tempdir
         # deleted below (the localCheckpoint the scan-based report
         # needed) and the bench's terminal .count() schedules no scan.

@@ -72,14 +72,6 @@ from contextlib import contextmanager
 _GATE_SHUFFLE_ACTIVE = False
 
 
-def gate_scope_active() -> bool:
-    """True while a gate_shuffle scope holds the session — operators use
-    this to route bounded gate-state writes through the driver-side
-    Arrow path (functions/arrowio.py) instead of a full Spark write
-    commit. Never true during production ingest."""
-    return _GATE_SHUFFLE_ACTIVE
-
-
 @contextmanager
 def gate_shuffle(spark: SparkSession, partitions: int = 1):
     """Pin a small static shuffle width (and AQE off) for the duration of
@@ -98,9 +90,11 @@ def gate_shuffle(spark: SparkSession, partitions: int = 1):
     plan runs each action as ONE job with one task per stage — measured
     (round 12) another ~20% off the four-gate total vs 4 partitions,
     with zero parallelism lost at the gates' ~1200-doc scale.
-    Production ingest of a real lake keeps the session defaults: this
-    pinning is correct BECAUSE the gate corpus is size-invariant by
-    design, not a general small-data tweak.
+    The scope pins confs and nothing else: no write route reads it
+    (maintained-state writes pick their lane by size alone,
+    functions/arrowio.py). Production ingest of a real lake keeps the
+    session defaults: this pinning is correct BECAUSE the gate corpus is
+    size-invariant by design, not a general small-data tweak.
 
     NOT reentrant / NOT thread-safe: the override is session-global, so a
     nested or concurrent gate would restore the wrong values (or run a

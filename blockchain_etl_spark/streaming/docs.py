@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col
 
+from ..functions import arrowio
 from ..operators.chunk_index import ChunkDFIndex
 from ..operators.lsh_index import MinHashIndex
 from ..operators.merge import ParquetMergeTarget, merge_latest
@@ -33,21 +34,6 @@ from .fanout import run_tasks
 
 MIN_TOKENS = 10
 MIN_DISTINCT_FP = 150_000
-
-
-def _chunk_write(df: DataFrame, directory: str) -> None:
-    """Overwrite-idempotent chunk write. Inside a driver gate the chunk
-    is bounded by the gate corpus and goes through the driver-side Arrow
-    writer (functions/arrowio.py — one collect job, no Hadoop commit);
-    production ingest keeps the distributed writer."""
-    from ..session import gate_scope_active
-
-    if gate_scope_active():
-        from ..functions.arrowio import write_parquet_driver
-
-        if write_parquet_driver(df, directory, success_marker=True):
-            return
-    df.write.mode("overwrite").parquet(directory)
 
 
 def quality_features(docs: DataFrame) -> DataFrame:
@@ -231,11 +217,12 @@ class DocIngest:
             # verdict: a flagged doc never reaches the corpus, so its
             # text survives ONLY here — release_quarantine() re-admits
             # from these rows when the policy later relaxes
-            _chunk_write(
+            arrowio.write_parquet(
                 firsts.join(flagged, ["doc_id"]).drop(
                     "h", "n_tokens", "distinct_fp"
                 ),
                 os.path.join(self.out_dir, "quarantine", f"chunk={batch_id}"),
+                success_marker=True,
             )
             firsts = firsts.join(flagged.select("doc_id"), ["doc_id"], "left_anti")
         # chunk write is overwrite-idempotent; replays rewrite the same dir.
@@ -244,9 +231,10 @@ class DocIngest:
         # lazy — the chunk write right below materializes it inside its own
         # job instead of paying a separate barrier (A/B: ~8-10% docs/sec)
         fresh = firsts.localCheckpoint(eager=False)
-        _chunk_write(
+        arrowio.write_parquet(
             fresh.drop("h", "n_tokens", "distinct_fp"),
             os.path.join(self.out_dir, "docs", f"chunk={batch_id}"),
+            success_marker=True,
         )
         self._fold_planes(
             spark, fresh, batch_id, screen_evidence=self.quarantine_threshold is None
@@ -880,7 +868,7 @@ class DocIngest:
     def corpus_row_count(self) -> int:
         """Admitted crawl rows across every chunk (``read_corpus``'s
         count), read off the parquet footers driver-side — no Spark job
-        (the read-side mirror of the gate's driver-side chunk writes;
+        (the read-side mirror of the driver-lane chunk writes;
         equality with read_corpus().count() pinned by
         tests/test_arrowio.py)."""
         import glob as _glob

@@ -3,6 +3,9 @@ probe, and recall against the exact brute-force baseline."""
 
 from __future__ import annotations
 
+import shutil
+
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col
 
@@ -37,10 +40,31 @@ def _brute_topk(spark, emb, qids, k):
     return {(r.qid, r.vec_id) for r in top.collect()}
 
 
-def test_build_query_prune_and_recall(spark, tmp_path):
+@pytest.fixture(scope="module")
+def built(spark, tmp_path_factory):
+    """``built(path, below=None)``: an IVFIndex at ``path``, a copy of the
+    N_CELLS index over the vectors with vec_id < ``below`` (every vector
+    when None). Each distinct build runs once per module; the index keeps
+    every path relative to its root, so a copy serves as the original."""
+    root = tmp_path_factory.mktemp("ivf_built")
+    cache = {}
+
+    def copy(path, below=None):
+        if below not in cache:
+            cache[below] = str(root / f"below_{below}")
+            emb = _emb(spark)
+            if below is not None:
+                emb = emb.filter(col("vec_id") < below)
+            IVFIndex(cache[below]).build(spark, emb, n_cells=N_CELLS)
+        shutil.copytree(cache[below], str(path))
+        return IVFIndex(str(path))
+
+    return copy
+
+
+def test_build_query_prune_and_recall(spark, tmp_path, built):
     emb = _emb(spark).cache()
-    idx = IVFIndex(str(tmp_path / "ivf"))
-    idx.build(spark, emb, n_cells=N_CELLS)
+    idx = built(tmp_path / "ivf")
 
     # every vector landed in exactly one cell partition
     data = spark.read.option("basePath", idx._data).parquet(idx._data)
@@ -98,12 +122,11 @@ def test_build_is_deterministic(spark, tmp_path):
     assert da == db
 
 
-def test_upsert_folds_new_vectors_without_rebuild(spark, tmp_path):
+def test_upsert_folds_new_vectors_without_rebuild(spark, tmp_path, built):
     emb = _emb(spark).cache()
     half = emb.filter(col("vec_id") < 40)
     rest = emb.filter(col("vec_id") >= 40)
-    idx = IVFIndex(str(tmp_path / "ivf_up"))
-    idx.build(spark, half, n_cells=N_CELLS)
+    idx = built(tmp_path / "ivf_up", below=40)
     assert idx.upsert(spark, rest, watermark=1)
 
     queries = emb.filter(col("vec_id") < N_QUERIES).select(
@@ -116,12 +139,11 @@ def test_upsert_folds_new_vectors_without_rebuild(spark, tmp_path):
     assert not idx.upsert(spark, rest, watermark=1)
 
 
-def test_upsert_supersedes_stale_copies(spark, tmp_path):
+def test_upsert_supersedes_stale_copies(spark, tmp_path, built):
     """A re-crawled vector whose embedding moved to another cell must
     never be served from its old cell."""
     emb = _emb(spark).cache()
-    idx = IVFIndex(str(tmp_path / "ivf_stale"))
-    idx.build(spark, emb, n_cells=N_CELLS)
+    idx = built(tmp_path / "ivf_stale")
 
     # re-crawl vec 7 with a very different embedding (another vector's,
     # which guarantees a plausible different cell assignment)
@@ -148,15 +170,14 @@ def test_upsert_supersedes_stale_copies(spark, tmp_path):
             assert r.cosine > 0.999, r
 
 
-def test_rebuild_after_upserts_serves_all_vectors(spark, tmp_path):
+def test_rebuild_after_upserts_serves_all_vectors(spark, tmp_path, built):
     """build() over a previously-upserted index must supersede the old
     inventory entries (rebuild seg outranks every prior seg) — a rebuilt
     copy of an upserted id must be served, not staleness-filtered away."""
     emb = _emb(spark).cache()
     half = emb.filter(col("vec_id") < 40)
     rest = emb.filter(col("vec_id") >= 40)
-    idx = IVFIndex(str(tmp_path / "ivf_rebuild"))
-    idx.build(spark, half, n_cells=N_CELLS)
+    idx = built(tmp_path / "ivf_rebuild", below=40)
     assert idx.upsert(spark, rest, watermark=1)
 
     # full rebuild over the whole corpus
@@ -175,7 +196,7 @@ def test_rebuild_after_upserts_serves_all_vectors(spark, tmp_path):
     assert any(i >= 40 for v in per_q.values() for i in v)
 
 
-def test_crashed_upsert_replay_serves_no_duplicates(spark, tmp_path):
+def test_crashed_upsert_replay_serves_no_duplicates(spark, tmp_path, built):
     """Crash between the data write and the inventory merge, then replay:
     the seg partition is overwritten (not appended), so no duplicate
     neighbors are ever served."""
@@ -184,8 +205,7 @@ def test_crashed_upsert_replay_serves_no_duplicates(spark, tmp_path):
     emb = _emb(spark).cache()
     half = emb.filter(col("vec_id") < 40)
     rest = emb.filter(col("vec_id") >= 40)
-    idx = IVFIndex(str(tmp_path / "ivf_crash"))
-    idx.build(spark, half, n_cells=N_CELLS)
+    idx = built(tmp_path / "ivf_crash", below=40)
 
     real_merge = merge_mod.ParquetMergeTarget.merge
     calls = {"n": 0}
@@ -221,7 +241,7 @@ def test_crashed_upsert_replay_serves_no_duplicates(spark, tmp_path):
     assert any(r.neighbor_id >= 40 for r in got), "replayed batch never published"
 
 
-def test_crashed_rebuild_keeps_old_index_serving(spark, tmp_path):
+def test_crashed_rebuild_keeps_old_index_serving(spark, tmp_path, built):
     """A rebuild that dies before its generation pointer flips must leave
     the previous index fully intact and serving — never a wiped data dir
     with a dangling inventory."""
@@ -229,8 +249,7 @@ def test_crashed_rebuild_keeps_old_index_serving(spark, tmp_path):
 
     emb = _emb(spark)
     half = emb.filter(col("vec_id") < 40)
-    idx = IVFIndex(str(tmp_path / "ivf_genc"))
-    idx.build(spark, half, n_cells=N_CELLS)
+    idx = built(tmp_path / "ivf_genc", below=40)
 
     queries = emb.filter(col("vec_id") < N_QUERIES).select(
         col("vec_id").alias("qid"), "embedding"
@@ -262,13 +281,12 @@ def test_crashed_rebuild_keeps_old_index_serving(spark, tmp_path):
     assert any(r.neighbor_id >= 40 for r in got)
 
 
-def test_upsert_after_rebuild_lands_in_new_generation(spark, tmp_path):
+def test_upsert_after_rebuild_lands_in_new_generation(spark, tmp_path, built):
     """Post-rebuild upserts fold into the NEW generation's inventory and
     data (watermarks restart with the generation, per build()'s
     docstring) — and staleness filtering keeps working across them."""
     emb = _emb(spark)
-    idx = IVFIndex(str(tmp_path / "ivf_genup"))
-    idx.build(spark, emb.filter(col("vec_id") < 30), n_cells=N_CELLS)
+    idx = built(tmp_path / "ivf_genup", below=30)
     assert idx.upsert(spark, emb.filter((col("vec_id") >= 30) & (col("vec_id") < 40)), watermark=1)
     idx.build(spark, emb.filter(col("vec_id") < 50), n_cells=N_CELLS)  # rebuild: gen+1
 
@@ -286,7 +304,7 @@ def test_upsert_after_rebuild_lands_in_new_generation(spark, tmp_path):
     assert any(i >= 50 for i in ids) and any(i < 50 for i in ids)
 
 
-def test_crashed_upsert_retried_with_changed_content_leaves_no_orphan(spark, tmp_path):
+def test_crashed_upsert_retried_with_changed_content_leaves_no_orphan(spark, tmp_path, built):
     """Crash between the data write and the inventory merge, then retry
     the SAME batch with CHANGED content (re-crawl raced the retry): a
     vec_id whose retry landed in a different cell leaves an orphan
@@ -297,8 +315,7 @@ def test_crashed_upsert_retried_with_changed_content_leaves_no_orphan(spark, tmp
 
     emb = _emb(spark).cache()
     base = emb.filter(col("vec_id") < 40)
-    idx = IVFIndex(str(tmp_path / "ivf_retry"))
-    idx.build(spark, base, n_cells=N_CELLS)
+    idx = built(tmp_path / "ivf_retry", below=40)
 
     # craft two versions of vec 500 that land in DIFFERENT cells: each
     # copies a distinct existing vector whose cells differ.
@@ -366,13 +383,12 @@ def _seg_dirs_per_cell(idx):
     return out
 
 
-def test_compact_folds_segments_bit_identical(spark, tmp_path):
+def test_compact_folds_segments_bit_identical(spark, tmp_path, built):
     """compact() must bound the per-cell file pile to ONE segment while
     serving bit-identical query results, preserve the upsert watermark
     (replays still skip), and let the upsert stream resume."""
     emb = _emb(spark).cache()
-    idx = IVFIndex(str(tmp_path / "ivf_compact"))
-    idx.build(spark, emb.filter(col("vec_id") < 30), n_cells=N_CELLS)
+    idx = built(tmp_path / "ivf_compact", below=30)
     # a pile of upsert batches, including a supersede (vec 3 re-crawled
     # with vec 77's embedding → possibly different cell)
     idx.upsert(spark, emb.filter((col("vec_id") >= 30) & (col("vec_id") < 60)), watermark=1)
@@ -412,12 +428,11 @@ def test_compact_folds_segments_bit_identical(spark, tmp_path):
     assert any(r.neighbor_id == 95 for r in got)
 
 
-def test_crashed_compact_keeps_old_generation_serving(spark, tmp_path):
+def test_crashed_compact_keeps_old_generation_serving(spark, tmp_path, built):
     """A crash before the generation pointer flip must leave the
     pre-compaction index fully serving; a later compact() succeeds."""
     emb = _emb(spark).cache()
-    idx = IVFIndex(str(tmp_path / "ivf_compact_crash"))
-    idx.build(spark, emb.filter(col("vec_id") < 40), n_cells=N_CELLS)
+    idx = built(tmp_path / "ivf_compact_crash", below=40)
     idx.upsert(spark, emb.filter((col("vec_id") >= 40) & (col("vec_id") < 70)), watermark=1)
 
     queries = emb.filter(col("vec_id") < N_QUERIES).select(
@@ -455,14 +470,13 @@ def test_crashed_compact_keeps_old_generation_serving(spark, tmp_path):
     assert all(n == 1 for n in _seg_dirs_per_cell(idx).values())
 
 
-def test_compact_with_fully_superseded_cell_still_serves(spark, tmp_path):
+def test_compact_with_fully_superseded_cell_still_serves(spark, tmp_path, built):
     """Re-crawl EVERY member of one cell into other cells, then compact:
     the emptied cell's directory is legitimately gone, and a probe that
     ranks its (still-present) centroid highly must serve results instead
     of crashing on the missing path."""
     emb = _emb(spark).cache()
-    idx = IVFIndex(str(tmp_path / "ivf_emptycell"))
-    idx.build(spark, emb.filter(col("vec_id") < 40), n_cells=N_CELLS)
+    idx = built(tmp_path / "ivf_emptycell", below=40)
 
     inv = idx._inventory().read(spark)
     by_cell = {}
@@ -499,13 +513,12 @@ def test_compact_with_fully_superseded_cell_still_serves(spark, tmp_path):
     assert idx.pruned_files(spark, [victim]) == 0
 
 
-def test_delete_tombstones_vectors(spark, tmp_path):
+def test_delete_tombstones_vectors(spark, tmp_path, built):
     """delete() makes every copy of a vec_id invisible (inner staleness
     join), replays are no-ops, compaction reclaims the rows, and the id
     can be re-inserted afterwards."""
     emb = _emb(spark).cache()
-    idx = IVFIndex(str(tmp_path / "ivf_delete"))
-    idx.build(spark, emb.filter(col("vec_id") < 40), n_cells=N_CELLS)
+    idx = built(tmp_path / "ivf_delete", below=40)
 
     victims = spark.createDataFrame([(7,), (11,)], "vec_id long")
     assert idx.delete(spark, victims)

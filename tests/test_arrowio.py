@@ -1,11 +1,14 @@
-"""Gate-scoped driver-side parquet writes (functions/arrowio.py) must be
-read-path-identical to the distributed writer, preserve the _SUCCESS
-chunk-commit protocol, and fire ONLY inside a gate_shuffle scope."""
+"""The lane rule for maintained-state writes (functions/arrowio.py): the
+driver lane must be read-path-identical to the distributed writer for
+every writer that takes the rule, preserve the _SUCCESS chunk-commit
+protocol, and hand frames over its row or byte bound to the distributed
+lane."""
 
 from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from blockchain_etl_spark.functions.arrowio import write_parquet_driver
@@ -44,16 +47,15 @@ def test_arrow_miss_falls_back_to_distributed_writer(spark, tmp_path, monkeypatc
     """The Arrow-miss fallback contract: a schema that does not convert
     to Arrow (CalendarIntervalType) returns False from
     write_parquet_driver WITHOUT touching the target directory, and a
-    gate-scoped merge whose Arrow write misses lands in the
-    distributed writer with identical committed state (a miss silently
-    changes the write PATH, never the rows)."""
+    merge whose Arrow write misses lands in the distributed writer with
+    identical committed state (a miss silently changes the write PATH,
+    never the rows)."""
     # leg 1: a REAL conversion miss on the real function
     iv = spark.range(0, 7).selectExpr(
         "id AS k", "make_interval(0, 0, 0, CAST(id AS INT)) AS iv"
     )
     d = str(tmp_path / "miss")
-    with gate_shuffle(spark):
-        assert write_parquet_driver(iv, d) is False
+    assert write_parquet_driver(iv, d) is False
     assert not os.path.exists(d)  # a miss writes NOTHING
 
     # leg 2: caller routing on a miss — force the miss (no parquet-
@@ -69,12 +71,11 @@ def test_arrow_miss_falls_back_to_distributed_writer(spark, tmp_path, monkeypatc
         F.col("id").alias("k"), (F.col("id") * 2).alias("v")
     )
     t = ParquetMergeTarget(str(tmp_path / "miss_target"))
-    with gate_shuffle(spark):
-        t.merge_with(
-            spark, df,
-            lambda tg, u: merge_latest(tg, u, keys=["k"], order=["v"]),
-            watermark=1,
-        )
+    t.merge_with(
+        spark, df,
+        lambda tg, u: merge_latest(tg, u, keys=["k"], order=["v"]),
+        watermark=1,
+    )
     files = os.listdir(os.path.join(str(tmp_path / "miss_target"), "v=1"))
     assert "_SUCCESS" in files  # distributed commit protocol ran
     monkeypatch.undo()
@@ -91,19 +92,18 @@ def test_arrow_miss_falls_back_to_distributed_writer(spark, tmp_path, monkeypatc
 
 
 def test_rows_cap_falls_back_to_distributed_writer(spark, tmp_path, monkeypatch):
-    """A frame that overflows _DRIVER_ROWS_CAP is by definition not a
-    gate-bounded frame: write_parquet_driver must refuse (False) so the
-    caller keeps the distributed writer — the 'bounded gate corpus'
-    invariant enforced structurally, not by convention."""
+    """A frame that overflows _DRIVER_ROWS_CAP is not for the driver
+    lane: write_parquet_driver must refuse (False) so the caller keeps
+    the distributed writer — the bound enforced structurally, not by
+    convention."""
     import blockchain_etl_spark.functions.arrowio as arrowio
 
     monkeypatch.setattr(arrowio, "_DRIVER_ROWS_CAP", 50)
     big = spark.range(0, 51).select(F.col("id").alias("k"))
     ok = spark.range(0, 50).select(F.col("id").alias("k"))
     d_big, d_ok = str(tmp_path / "big"), str(tmp_path / "ok")
-    with gate_shuffle(spark):
-        assert arrowio.write_parquet_driver(big, d_big) is False
-        assert arrowio.write_parquet_driver(ok, d_ok) is True
+    assert arrowio.write_parquet_driver(big, d_big) is False
+    assert arrowio.write_parquet_driver(ok, d_ok) is True
     assert not os.path.exists(d_big)
     assert spark.read.parquet(d_ok).count() == 50
 
@@ -138,57 +138,11 @@ def test_gate_shuffle_restores_confs_when_pin_fails(spark, monkeypatch):
         assert "injected conf failure" in str(exc)
     monkeypatch.undo()
     assert {k: spark.conf.get(k) for k in keys} == before
-    assert not sess.gate_scope_active()
+    assert not sess._GATE_SHUFFLE_ACTIVE
     # and the session is NOT locked out: a later gate enters cleanly
     with gate_shuffle(spark):
-        assert sess.gate_scope_active()
-    assert not sess.gate_scope_active()
-
-
-def test_merge_target_uses_arrow_writer_only_in_gate_scope(spark, tmp_path):
-    t_out = ParquetMergeTarget(str(tmp_path / "outside"))
-    df = spark.range(0, 10).select(F.col("id").alias("k"), F.col("id").alias("v"))
-    t_out.merge_with(
-        spark, df, lambda t, u: merge_latest(t, u, keys=["k"], order=["v"]),
-        watermark=1,
-    )
-    # outside a gate: distributed writer (Spark part files + _SUCCESS)
-    files_out = os.listdir(os.path.join(str(tmp_path / "outside"), "v=1"))
-    assert "_SUCCESS" in files_out
-
-    t_in = ParquetMergeTarget(str(tmp_path / "inside"))
-    with gate_shuffle(spark):
-        t_in.merge_with(
-            spark, df, lambda t, u: merge_latest(t, u, keys=["k"], order=["v"]),
-            watermark=1,
-        )
-    files_in = os.listdir(os.path.join(str(tmp_path / "inside"), "v=1"))
-    assert files_in == ["part-00000.parquet"]
-    # identical state either way
-    a = sorted(t_out.read(spark).collect(), key=str)
-    b = sorted(t_in.read(spark).collect(), key=str)
-    assert a == b
-
-
-def test_driver_write_target_uses_arrow_writer_outside_gate(spark, tmp_path):
-    """A target tagged driver_write=True (structurally bounded state —
-    CMS cells/candidates) takes the Arrow write path on every merge,
-    gate scope or not, with state identical to the distributed writer."""
-    df = spark.range(0, 10).select(F.col("id").alias("k"), F.col("id").alias("v"))
-    t_dist = ParquetMergeTarget(str(tmp_path / "dist"))
-    t_drv = ParquetMergeTarget(str(tmp_path / "drv"), driver_write=True)
-    for t in (t_dist, t_drv):
-        t.merge_with(
-            spark, df, lambda tg, u: merge_latest(tg, u, keys=["k"], order=["v"]),
-            watermark=1,
-        )
-    assert "_SUCCESS" in os.listdir(os.path.join(str(tmp_path / "dist"), "v=1"))
-    assert os.listdir(os.path.join(str(tmp_path / "drv"), "v=1")) == [
-        "part-00000.parquet"
-    ]
-    a = sorted(t_dist.read(spark).collect(), key=str)
-    b = sorted(t_drv.read(spark).collect(), key=str)
-    assert a == b
+        assert sess._GATE_SHUFFLE_ACTIVE
+    assert not sess._GATE_SHUFFLE_ACTIVE
 
 
 def test_gate_and_non_gate_merge_sequences_interleave(spark, tmp_path):
@@ -255,23 +209,23 @@ def test_gate_scoped_chunk_write_keeps_commit_protocol(spark, tmp_path):
     assert ing.read_corpus(spark).count() == 80
 
 
-def test_fast_count_equals_spark_count(spark, tmp_path):
+def test_fast_count_equals_spark_count(spark, tmp_path, monkeypatch):
     """Footer-based fast_count must equal read().count() for BOTH write
-    paths (driver Arrow file inside a gate, Spark part files outside),
-    and corpus_row_count must equal read_corpus().count() — the
-    contract the zero-job audit report rests on."""
+    lanes (one driver Arrow file, or Spark part files), and
+    corpus_row_count must equal read_corpus().count() — the contract the
+    zero-job audit report rests on."""
     from blockchain_etl_spark.streaming.docs import DocIngest
 
     t = ParquetMergeTarget(str(tmp_path / "t"))
     assert t.fast_count() is None
     df = spark.range(0, 123).select(F.col("id").alias("k"), F.col("id").alias("v"))
-    with gate_shuffle(spark):  # v=1 via the driver Arrow writer
-        t.merge_with(
-            spark, df, lambda tg, u: merge_latest(tg, u, keys=["k"], order=["v"]),
-            watermark=1,
-        )
+    t.merge_with(  # v=1 via the driver Arrow writer
+        spark, df, lambda tg, u: merge_latest(tg, u, keys=["k"], order=["v"]),
+        watermark=1,
+    )
     assert t.fast_count() == t.read(spark).count() == 123
     # v=2 via the distributed writer (multiple part files)
+    _force_distributed(monkeypatch)
     t.merge_with(
         spark,
         spark.range(0, 200).select(F.col("id").alias("k"), F.col("id").alias("v")),
@@ -279,6 +233,8 @@ def test_fast_count_equals_spark_count(spark, tmp_path):
         watermark=2,
     )
     assert t.fast_count() == t.read(spark).count() == 200
+    assert _lanes(str(tmp_path / "t")) == {"driver", "distributed"}
+    monkeypatch.undo()
 
     docs = spark.range(0, 60).selectExpr(
         "id AS doc_id",
@@ -288,7 +244,259 @@ def test_fast_count_equals_spark_count(spark, tmp_path):
         "zulu one two three four five six seven eight nine ten') AS text",
     )
     ing = DocIngest(str(tmp_path / "lake"))
+    _force_distributed(monkeypatch)
     ing.process_batch(docs.filter(F.col("doc_id") < 30), 1)
-    with gate_shuffle(spark):
-        ing.process_batch(docs.filter(F.col("doc_id") >= 30), 2)
+    monkeypatch.undo()
+    ing.process_batch(docs.filter(F.col("doc_id") >= 30), 2)
     assert ing.corpus_row_count() == ing.read_corpus(spark).count() == 60
+
+
+# -- the lane rule, writer by writer ----------------------------------------
+
+
+def _force_distributed(monkeypatch):
+    """Route every state write to Spark's writer: no frame (not even an
+    empty one) fits a driver bound of 0 rows and -1 bytes."""
+    import blockchain_etl_spark.functions.arrowio as arrowio
+
+    monkeypatch.setattr(arrowio, "_DRIVER_ROWS_CAP", 0)
+    monkeypatch.setattr(arrowio, "_DRIVER_BYTES_CAP", -1)
+
+
+def _lanes(root: str) -> set:
+    """The lanes that wrote the parquet files under ``root``: the driver
+    lane writes exactly ``part-00000.parquet``, Spark's writer names its
+    files ``part-00000-<uuid>...``."""
+    return {
+        "driver" if name == "part-00000.parquet" else "distributed"
+        for _, _, files in os.walk(root)
+        for name in files
+        if name.endswith(".parquet")
+    }
+
+
+def _rows(df) -> list:
+    return [] if df is None else sorted(map(tuple, df.collect()), key=repr)
+
+
+def _schema(df):
+    return None if df is None else [(f.name, f.dataType) for f in df.schema.fields]
+
+
+def _kv(spark, lo, hi, mult=10):
+    return spark.range(lo, hi).select(
+        F.col("id").alias("k"),
+        (F.col("id") * mult).alias("v"),
+        F.when(F.col("id") % 2 == 0, F.concat(F.lit("s"), F.col("id").cast("string"))).alias("c"),
+    )
+
+
+def _run_merge(spark, root, step_lane, changelog):
+    t = ParquetMergeTarget(root)
+    keys = ["k"] if changelog else None
+    for wm, (lo, hi, mult) in enumerate([(0, 6, 10), (4, 9, 20), (8, 10, 30)], 1):
+        step_lane(wm)
+        t.merge(
+            spark, _kv(spark, lo, hi, mult), keys=["k"], order=["v"],
+            coalesce_cols=["c"], watermark=wm, changelog_keys=keys,
+        )
+    cur = t.read(spark)
+    out = {
+        "rows": _rows(cur), "schema": _schema(cur), "versions": t.versions(),
+        "watermark": t.watermark(),
+    }
+    if changelog:
+        out["changelog"] = [_rows(t.read_changelog(spark, v)) for v in t.versions()]
+    return out
+
+
+def _run_doc_chunks(spark, root, step_lane):
+    from blockchain_etl_spark.streaming.docs import DocIngest
+
+    docs = spark.range(0, 40).selectExpr(
+        "id AS doc_id",
+        "concat('alpha bravo charlie delta echo foxtrot golf hotel india "
+        "juliet kilo lima mike november oscar papa word', CAST(id AS STRING),"
+        " ' quebec romeo sierra tango uniform victor whiskey xray yankee "
+        "zulu one two three four five six seven eight nine ten') AS text",
+    )
+    ing = DocIngest(root)
+    for b in (1, 2):
+        step_lane(b)
+        ing.process_batch(docs.filter(F.col("doc_id") % 2 == b - 1), b)
+    chunk_files = {
+        b: sorted(
+            f for f in os.listdir(os.path.join(root, "docs", f"chunk={b}"))
+            if not f.startswith(".")
+        )
+        for b in (1, 2)
+    }
+    corpus = ing.read_corpus(spark)
+    return {
+        "rows": _rows(corpus), "schema": _schema(corpus),
+        "versions": ing._complete_chunks(), "watermark": ing.plane_watermarks(),
+        # the commit protocol _complete_chunks keys on, in either lane
+        "success": all("_SUCCESS" in fs for fs in chunk_files.values()),
+    }
+
+
+_IVM_STEPS = [
+    ([("k1", "a1", 1), ("k2", "a2", 2)], [("k1", "b1", 1)]),
+    ([("k1", "a1", -1), ("k3", "a3", 1)], [("k2", "b2", 1), ("k3", "b3", 1)]),
+    (None, [("k3", "b3", -1)]),
+]
+
+
+def _ivm_deltas(spark, da, db):
+    return (
+        spark.createDataFrame(da, ["k", "av", "__w"]) if da else None,
+        spark.createDataFrame(db, ["k", "bv", "__w"]) if db else None,
+    )
+
+
+def _run_ivm_view(spark, root, step_lane):
+    from blockchain_etl_spark.operators.ivm import IncrementalJoinView
+
+    v = IncrementalJoinView(root, join_keys=["k"], n_buckets=8)
+    for wm, (da, db) in enumerate(_IVM_STEPS):
+        step_lane(wm)
+        v.apply(spark, *_ivm_deltas(spark, da, db), watermark=wm)
+    m = v._manifest()
+    view = v.read(spark)
+    return {
+        "rows": _rows(view), "schema": _schema(view),
+        "versions": (m["segments"], m["buckets"]), "watermark": m["watermarks"],
+    }
+
+
+def _run_ivm_agg(spark, root, step_lane):
+    from blockchain_etl_spark.operators.ivm import IncrementalJoinAggregate
+
+    agg = IncrementalJoinAggregate(
+        root, join_keys=["k"], group_keys=["grp"], sum_cols=["qty"], n_buckets=4
+    )
+    steps = [
+        ([("k1", "g1", 3, 1), ("k2", "g2", 5, 1)], [("k1", "x", 1), ("k2", "y", 1)]),
+        ([("k1", "g1", 3, -1), ("k3", "g1", 7, 1)], [("k3", "z", 1)]),
+    ]
+    for wm, (da, db) in enumerate(steps):
+        step_lane(wm)
+        agg.apply(
+            spark,
+            spark.createDataFrame(da, "k string, grp string, qty long, __w long"),
+            spark.createDataFrame(db, "k string, bv string, __w long"),
+            watermark=wm,
+        )
+    out = agg.read(spark)
+    return {
+        "rows": _rows(out), "schema": _schema(out),
+        "versions": agg.agg.versions(), "watermark": agg.agg.watermark(),
+    }
+
+
+def _run_cms(spark, root, step_lane):
+    from blockchain_etl_spark.operators.cms_state import CMSTopKState
+
+    st = CMSTopKState(root, n_candidates=8)
+    ev = spark.range(0, 300).selectExpr("CAST(id % 37 AS BIGINT) AS user_id")
+    for wm in (1, 2):
+        step_lane(wm)
+        st.fold(spark, ev.filter(f"user_id % 2 = {wm - 1}"), watermark=wm)
+    cells, top = st.read_cells(spark), st.topk(spark, 5)
+    return {
+        "rows": (_rows(cells), _rows(top)), "schema": (_schema(cells), _schema(top)),
+        "versions": (st.cells.versions(), st.cand.versions()),
+        "watermark": (st.cells.watermark(), st.cand.watermark()),
+    }
+
+
+_WRITERS = {
+    "merge": lambda spark, root, lane: _run_merge(spark, root, lane, False),
+    "merge_changelog": lambda spark, root, lane: _run_merge(spark, root, lane, True),
+    "doc_chunks": _run_doc_chunks,
+    "ivm_view": _run_ivm_view,
+    "ivm_aggregate": _run_ivm_agg,
+    "cms": _run_cms,
+}
+
+
+@pytest.mark.parametrize("writer", sorted(_WRITERS))
+def test_route_equivalence(spark, tmp_path, monkeypatch, writer):
+    """Every writer that takes the lane rule commits the same state
+    whichever lane runs: forced distributed, the driver lane the rule
+    picks for these small frames, and (merge) the two lanes alternating
+    step by step on one target. Identical read-back rows, schema,
+    versions and watermarks; each run is checked to have used the lane
+    it was meant to."""
+
+    def forced(step):
+        _force_distributed(monkeypatch)
+
+    def default(step):
+        monkeypatch.undo()
+
+    def alternating(step):
+        (forced if step % 2 else default)(step)
+
+    lanes = {"distributed": forced, "driver": default}
+    if writer == "merge":
+        lanes["alternating"] = alternating
+    got = {}
+    for name, step_lane in lanes.items():
+        root = str(tmp_path / name)
+        got[name] = _WRITERS[writer](spark, root, step_lane)
+        monkeypatch.undo()
+        used = _lanes(root)
+        if name == "alternating":
+            assert used == {"driver", "distributed"}, used
+        else:
+            assert name in used, used
+            if name == "distributed":
+                assert used == {"distributed"}, used
+    first = got["distributed"]
+    for name, out in got.items():
+        assert out == first, (name, out, first)
+    assert first["rows"], first
+    if writer == "doc_chunks":
+        assert first["success"]
+
+
+def test_wide_rows_under_the_row_cap_fall_back_on_bytes(spark, tmp_path, monkeypatch):
+    """Ten rows are far under the row cap, but rows of 50 KB each put the
+    frame over the byte bound: the driver lane refuses it and the merge
+    lands on Spark's writer with the same rows."""
+    import blockchain_etl_spark.functions.arrowio as arrowio
+
+    monkeypatch.setattr(arrowio, "_DRIVER_BYTES_CAP", 100_000)
+    wide = spark.range(0, 10).select(
+        F.col("id").alias("k"), F.expr("repeat('x', 50000)").alias("v")
+    )
+    assert arrowio.collect_arrow_capped(wide.limit(1)) is not None
+    assert arrowio.collect_arrow_capped(wide) is None
+    assert arrowio.write_parquet_driver(wide, str(tmp_path / "d")) is False
+    assert not os.path.exists(str(tmp_path / "d"))
+    t = ParquetMergeTarget(str(tmp_path / "t"))
+    t.merge(spark, wide, keys=["k"], order=["k"], watermark=1)
+    assert _lanes(str(tmp_path / "t")) == {"distributed"}
+    assert _rows(t.read(spark)) == _rows(wide)
+
+
+def test_target_over_the_byte_bound_runs_no_collect(spark, tmp_path, monkeypatch):
+    """A merge target whose current version is already over the byte
+    bound on disk skips the driver lane without running anything: no
+    Arrow collect, straight to Spark's writer."""
+    import blockchain_etl_spark.functions.arrowio as arrowio
+
+    t = ParquetMergeTarget(str(tmp_path / "t"))
+    t.merge(spark, _kv(spark, 0, 50), keys=["k"], order=["v"], watermark=1)
+    v1 = os.path.join(str(tmp_path / "t"), "v=1")
+    assert _lanes(v1) == {"driver"}
+    monkeypatch.setattr(arrowio, "_DRIVER_BYTES_CAP", arrowio.dir_bytes(v1) - 1)
+
+    def no_collect(df):
+        raise AssertionError("collect attempted for an over-bound target")
+
+    monkeypatch.setattr(arrowio, "collect_arrow_capped", no_collect)
+    t.merge(spark, _kv(spark, 40, 60), keys=["k"], order=["v"], watermark=2)
+    assert _lanes(os.path.join(str(tmp_path / "t"), "v=2")) == {"distributed"}
+    assert t.current_version() == 2 and t.read(spark).count() == 60

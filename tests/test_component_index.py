@@ -6,6 +6,9 @@ policy (priority monotone, no pair straddling)."""
 
 from __future__ import annotations
 
+import shutil
+
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col
 
@@ -61,6 +64,26 @@ def _ingest(spark, mh, comp, rows, wm):
     docs = _batch(spark, rows)
     mh.upsert(spark, docs, watermark=wm)
     assert comp.upsert(spark, docs.select("doc_id"), watermark=wm)
+
+
+_B01 = [(0, _text(0)), (1, _text(0, 1))]
+
+
+@pytest.fixture(scope="module")
+def b01_root(spark, tmp_path_factory):
+    """The index pair after ingesting ``_B01`` at watermark 1, built once
+    per module; ``_copy_b01`` hands each test its own copy."""
+    root = tmp_path_factory.mktemp("comp_b01")
+    mh, comp = _mk(root, "b01")
+    _ingest(spark, mh, comp, _B01, wm=1)
+    return root
+
+
+def _copy_b01(b01_root, tmp_path, name):
+    # both indexes keep every path relative to their roots
+    for part in ("mh", "comp"):
+        shutil.copytree(b01_root / f"b01_{part}", tmp_path / f"{name}_{part}")
+    return _mk(tmp_path, name)
 
 
 def test_incremental_equals_batch_under_inserts(spark, tmp_path):
@@ -378,18 +401,17 @@ def test_coalesced_catchup_equals_sequential_upserts(spark, tmp_path):
     assert labels[50] < 50
 
 
-def test_coalesced_catchup_on_existing_state(spark, tmp_path):
+def test_coalesced_catchup_on_existing_state(spark, tmp_path, b01_root):
     """Catch-up on top of already-published state: stored components act
     as anchors, exactly as in sequential maintenance."""
-    seqs = [(1, [(0, _text(0)), (1, _text(0, 1))]),
+    seqs = [(1, _B01),
             (2, [(10, _text(5)), (2, _text(0))]),
             (3, [(11, _text(5)), (20, _text(9))])]
-    mh_s, comp_s = _mk(tmp_path, "seq2")
-    for wm, rows in seqs:
+    mh_s, comp_s = _copy_b01(b01_root, tmp_path, "seq2")
+    for wm, rows in seqs[1:]:
         _ingest(spark, mh_s, comp_s, rows, wm=wm)
 
-    mh_c, comp_c = _mk(tmp_path, "coal2")
-    _ingest(spark, mh_c, comp_c, seqs[0][1], wm=1)  # published base state
+    mh_c, comp_c = _copy_b01(b01_root, tmp_path, "coal2")  # published base state
     for wm, rows in seqs[1:]:
         mh_c.upsert(spark, _batch(spark, rows), watermark=wm)
     assert comp_c.upsert_coalesced(
@@ -400,11 +422,10 @@ def test_coalesced_catchup_on_existing_state(spark, tmp_path):
     assert _maintained(spark, comp_c) == _ground_truth(spark, mh_c)
 
 
-def test_coalesced_catchup_skips_replayed_batches(spark, tmp_path):
-    seqs = [(1, [(0, _text(0)), (1, _text(0, 1))]), (2, [(2, _text(0))])]
-    mh, comp = _mk(tmp_path, "repl")
-    for wm, rows in seqs:
-        _ingest(spark, mh, comp, rows, wm=wm)
+def test_coalesced_catchup_skips_replayed_batches(spark, tmp_path, b01_root):
+    seqs = [(1, _B01), (2, [(2, _text(0))])]
+    mh, comp = _copy_b01(b01_root, tmp_path, "repl")
+    _ingest(spark, mh, comp, seqs[1][1], wm=2)
     before = _splits(spark, comp)
     # everything at or below the stored watermark: a no-op
     assert not comp.upsert_coalesced(
@@ -414,11 +435,8 @@ def test_coalesced_catchup_skips_replayed_batches(spark, tmp_path):
     assert _splits(spark, comp) == before
 
 
-def test_coalesced_catchup_rejects_non_inserts(spark, tmp_path):
-    import pytest
-
-    mh, comp = _mk(tmp_path, "rej")
-    _ingest(spark, mh, comp, [(0, _text(0)), (1, _text(0, 1))], wm=1)
+def test_coalesced_catchup_rejects_non_inserts(spark, tmp_path, b01_root):
+    mh, comp = _copy_b01(b01_root, tmp_path, "rej")
     # re-crawl of an indexed id must be rejected (needs per-step text)
     mh.upsert(spark, _batch(spark, [(0, _text(5))]), watermark=2)
     with pytest.raises(ValueError, match="insert-only"):
@@ -471,7 +489,7 @@ def test_coalesced_prefix_of_backlog_raises(spark, tmp_path):
 
 def test_distributed_fallback_equals_driver_union_find(spark, tmp_path, monkeypatch):
     """_propagate_with_singletons has two routes: driver union-find when
-    the fold's subgraph collects under _DRIVER_UF_CAP, distributed
+    the fold's subgraph collects under _GRAPH_DRIVER_CAP, distributed
     propagate_min_labels above it. The fallback must stay alive and
     bit-identical: run the SAME multi-batch history (merges, family
     joins, a re-crawl) with the cap monkeypatched to -1 — every fold
@@ -479,6 +497,7 @@ def test_distributed_fallback_equals_driver_union_find(spark, tmp_path, monkeypa
     which must never fire) — and the final labels must equal both the
     fast-path run's labels and the batch ground truth."""
     from blockchain_etl_spark.operators import component_index as ci
+    from blockchain_etl_spark.operators import components as components_mod
 
     history = [
         [(0, _text(0)), (1, _text(0, 1)), (10, _text(5)), (11, _text(5))],
@@ -503,13 +522,13 @@ def test_distributed_fallback_equals_driver_union_find(spark, tmp_path, monkeypa
         return real_uf(nodes, edges)
 
     monkeypatch.setattr(ci, "_driver_union_find", spy)
-    monkeypatch.setattr(ci, "_DRIVER_UF_CAP", -1)
+    monkeypatch.setattr(components_mod, "_GRAPH_DRIVER_CAP", -1)
     slow, truth_slow = run("uf_dist")
     assert calls == [], "cap=-1 must force the distributed branch"
     assert slow == truth_slow == fast
 
     # and with the cap restored, the same history DOES take the fast path
-    monkeypatch.setattr(ci, "_DRIVER_UF_CAP", 200_000)
+    monkeypatch.setattr(components_mod, "_GRAPH_DRIVER_CAP", 200_000)
     again, _ = run("uf_fast2")
     assert calls, "default cap must route bounded folds to the union-find"
     assert again == fast

@@ -12,6 +12,7 @@ import itertools
 
 import pytest
 
+import blockchain_etl_spark.operators.components as components_mod
 import blockchain_etl_spark.plans.olap as olap_mod
 from blockchain_etl_spark.plans.olap import part_kcore_census, part_triangle_count
 
@@ -142,7 +143,7 @@ def test_graph_driver_fast_path_equals_distributed(spark, monkeypatch):
         "default cap must route the bounded graph driver-side"
     )
 
-    monkeypatch.setattr(olap_mod, "_GRAPH_DRIVER_CAP", -1)
+    monkeypatch.setattr(components_mod, "_GRAPH_DRIVER_CAP", -1)
     calls.clear()
     slow = run()
     assert calls == [], "cap=-1 must force the distributed branch"
@@ -190,7 +191,7 @@ def test_kcore_driver_peel_equals_distributed(spark, monkeypatch, seed, k):
         )
 
     fast = run()
-    monkeypatch.setattr(olap_mod, "_GRAPH_DRIVER_CAP", -1)
+    monkeypatch.setattr(components_mod, "_GRAPH_DRIVER_CAP", -1)
     slow = run()
     assert slow == fast == _brute_kcore(
         _edges_from(rows, 1), k, olap_mod._KCORE_ROUNDS

@@ -4,7 +4,10 @@ determinism (same corpus in → identical codes out)."""
 
 from __future__ import annotations
 
+import shutil
+
 import pyspark.sql.functions as F
+import pytest
 from pyspark.sql import Window
 from pyspark.sql.functions import broadcast, col
 
@@ -44,6 +47,29 @@ def _exact_topk(spark):
         .filter(col("rank") <= K)
         .select("qid", "vec_id")
     )
+
+
+@pytest.fixture(scope="module")
+def built(spark, tmp_path_factory):
+    """``built(path, below)``: an IVFPQIndex at ``path``, a copy of the
+    4-cell index over the sf0.001 vectors with vec_id < ``below``. Each distinct
+    build runs once per module; the index keeps every path relative to
+    its root, so a copy serves as the original."""
+    root = tmp_path_factory.mktemp("pq_built")
+    cache = {}
+
+    def copy(path, below):
+        if below not in cache:
+            cache[below] = str(root / f"below_{below}")
+            emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+            IVFPQIndex(cache[below]).build(
+                spark, emb.select("vec_id", "embedding").filter(col("vec_id") < below),
+                n_cells=4,
+            )
+        shutil.copytree(cache[below], str(path))
+        return IVFPQIndex(str(path))
+
+    return copy
 
 
 def test_query_recall_and_pruning(spark, tmp_path):
@@ -103,7 +129,7 @@ def test_rerank_store_agrees_with_codes_partitioning(spark, tmp_path):
     assert cc == vv and len(cc) == 200
 
 
-def test_crashed_rebuild_serves_previous_generation(spark, tmp_path):
+def test_crashed_rebuild_serves_previous_generation(spark, tmp_path, built):
     """A rebuild that dies before the generation pointer flips (e.g. after
     writing new centroids/codebook but before the stores complete) must
     leave the previous index serving identical results — never a hybrid of
@@ -114,8 +140,7 @@ def test_crashed_rebuild_serves_previous_generation(spark, tmp_path):
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").select("vec_id", "embedding")
     half = emb.filter(_col("vec_id") < 40)
-    idx = IVFPQIndex(str(tmp_path / "pq_gen"))
-    idx.build(spark, half, n_cells=4)
+    idx = built(tmp_path / "pq_gen", below=40)
 
     queries = emb.filter(_col("vec_id") < 5).select(_col("vec_id").alias("qid"), "embedding")
     before = {(r.qid, r.neighbor_id, r.rank) for r in idx.query(spark, queries, k=3, probes=4).collect()}
@@ -195,11 +220,10 @@ def test_upsert_folds_new_vectors_and_supersedes(spark, tmp_path):
     assert d7 == [0], d7
 
 
-def test_pq_compact_folds_segments_bit_identical(spark, tmp_path):
+def test_pq_compact_folds_segments_bit_identical(spark, tmp_path, built):
     sf0 = "/root/testdata/sf0.001"
     emb = spark.read.parquet(f"{sf0}/embeddings.parquet").select("vec_id", "embedding").cache()
-    idx = IVFPQIndex(str(tmp_path / "pq_compact"))
-    idx.build(spark, emb.filter(col("vec_id") < 50), n_cells=4)
+    idx = built(tmp_path / "pq_compact", below=50)
     idx.upsert(spark, emb.filter((col("vec_id") >= 50) & (col("vec_id") < 100)), watermark=1)
     idx.upsert(spark, emb.filter((col("vec_id") >= 100) & (col("vec_id") < 150)), watermark=2)
     donor = emb.filter(col("vec_id") == 120).select(
@@ -234,11 +258,10 @@ def test_pq_compact_folds_segments_bit_identical(spark, tmp_path):
     assert any(r.neighbor_id == 180 for r in got)
 
 
-def test_pq_crashed_compact_serves_old_generation(spark, tmp_path):
+def test_pq_crashed_compact_serves_old_generation(spark, tmp_path, built):
     sf0 = "/root/testdata/sf0.001"
     emb = spark.read.parquet(f"{sf0}/embeddings.parquet").select("vec_id", "embedding").cache()
-    idx = IVFPQIndex(str(tmp_path / "pq_compact_crash"))
-    idx.build(spark, emb.filter(col("vec_id") < 50), n_cells=4)
+    idx = built(tmp_path / "pq_compact_crash", below=50)
     idx.upsert(spark, emb.filter((col("vec_id") >= 50) & (col("vec_id") < 90)), watermark=1)
 
     queries = emb.filter(col("vec_id") < 5).select(col("vec_id").alias("qid"), "embedding")
@@ -272,14 +295,13 @@ def test_pq_crashed_compact_serves_old_generation(spark, tmp_path):
     assert after == before
 
 
-def test_pq_compact_with_fully_superseded_cell_still_serves(spark, tmp_path):
+def test_pq_compact_with_fully_superseded_cell_still_serves(spark, tmp_path, built):
     """Same emptied-cell scenario as the IVF index: after every member of
     a cell is re-crawled elsewhere and compact() drops the empty
     directory, probes ranking that centroid must not crash."""
     sf0 = "/root/testdata/sf0.001"
     emb = spark.read.parquet(f"{sf0}/embeddings.parquet").select("vec_id", "embedding").cache()
-    idx = IVFPQIndex(str(tmp_path / "pq_emptycell"))
-    idx.build(spark, emb.filter(col("vec_id") < 40), n_cells=4)
+    idx = built(tmp_path / "pq_emptycell", below=40)
 
     inv = idx._inventory().read(spark)
     by_cell = {}
@@ -305,11 +327,10 @@ def test_pq_compact_with_fully_superseded_cell_still_serves(spark, tmp_path):
     assert idx.pruned_files(spark, [victim]) == 0
 
 
-def test_pq_delete_tombstones_vectors(spark, tmp_path):
+def test_pq_delete_tombstones_vectors(spark, tmp_path, built):
     sf0 = "/root/testdata/sf0.001"
     emb = spark.read.parquet(f"{sf0}/embeddings.parquet").select("vec_id", "embedding").cache()
-    idx = IVFPQIndex(str(tmp_path / "pq_delete"))
-    idx.build(spark, emb.filter(col("vec_id") < 40), n_cells=4)
+    idx = built(tmp_path / "pq_delete", below=40)
 
     assert idx.delete(spark, spark.createDataFrame([(7,)], "vec_id long"))
     queries = emb.filter(col("vec_id") < 5).select(col("vec_id").alias("qid"), "embedding")

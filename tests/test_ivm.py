@@ -407,46 +407,6 @@ def test_legacy_manifest_without_bucket_lists_still_joins(spark, ivm):
     assert got[(3, "a3x", "b3")] == 1, got
 
 
-def test_driver_write_route_equals_distributed(spark, tmp_path):
-    """Round-14 driver-write path: the fused Arrow collect+write route and
-    the distributed checkpoint+write route must produce identical view
-    state, identical manifests (same segment/bucket structure) and an
-    identical on-disk layout class (hive-style __bucket dirs readable by
-    the same _read_store)."""
-    from blockchain_etl_spark.operators.ivm import IncrementalJoinView
-
-    steps = [
-        (
-            [("k1", "a1", 1), ("k2", "a2", 2)],
-            [("k1", "b1", 1)],
-        ),
-        (
-            [("k1", "a1", -1), ("k3", "a3", 1)],
-            [("k2", "b2", 1), ("k3", "b3", 1)],
-        ),
-        (
-            None,
-            [("k3", "b3", -1)],
-        ),
-    ]
-    views = {}
-    manifests = {}
-    for route, flag in (("driver", True), ("dist", False)):
-        v = IncrementalJoinView(
-            str(tmp_path / route), join_keys=["k"], n_buckets=8, driver_write=flag
-        )
-        assert v.driver_write is flag
-        for wm, (da, db) in enumerate(steps):
-            dfa = spark.createDataFrame(da, ["k", "av", _W]) if da else None
-            dfb = spark.createDataFrame(db, ["k", "bv", _W]) if db else None
-            v.apply(spark, dfa, dfb, watermark=wm)
-        views[route] = _view_counter(v.read(spark))
-        m = v._manifest()
-        manifests[route] = (m["segments"], m["buckets"], m["watermarks"])
-    assert views["driver"] == views["dist"]
-    assert manifests["driver"] == manifests["dist"]
-
-
 def test_driver_write_cap_overflow_falls_back(spark, tmp_path, monkeypatch):
     """A delta past the arrowio cap must take the distributed writer and
     still commit the identical state."""
@@ -461,9 +421,7 @@ def test_driver_write_cap_overflow_falls_back(spark, tmp_path, monkeypatch):
         )
         is None
     )
-    v = IncrementalJoinView(
-        str(tmp_path / "jv"), join_keys=["k"], n_buckets=4, driver_write=True
-    )
+    v = IncrementalJoinView(str(tmp_path / "jv"), join_keys=["k"], n_buckets=4)
     dfa = spark.createDataFrame(
         [("k1", "a1", 1), ("k2", "a2", 1), ("k3", "a3", 1)], ["k", "av", _W]
     )

@@ -311,3 +311,48 @@ def test_fanout_tasks_run_in_the_callers_job_group(spark):
         for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
             sc.setLocalProperty(key, None)
     assert seen == {n: ("follower-batch", {"follower"}) for n in ("a", "b", "c")}
+
+
+def test_ivm_and_lexical_fanout_run_in_the_callers_job_group(spark, tmp_path, monkeypatch):
+    """The IVM segment writes and the lexical postings/doclen merges fan
+    out on driver threads too; like the ingests' tasks, they run under
+    the caller's job group."""
+    from blockchain_etl_spark.operators.ivm import IncrementalJoinView
+    from blockchain_etl_spark.operators.lexical_index import LexicalIndex
+    from blockchain_etl_spark.operators.merge import ParquetMergeTarget
+
+    sc = spark.sparkContext
+    seen = []
+    real_segment = IncrementalJoinView._write_segment
+    real_merge = ParquetMergeTarget.merge_with
+
+    def spy_segment(self, df, store, *args, **kwargs):
+        seen.append((store, sc.getLocalProperty("spark.jobGroup.id")))
+        return real_segment(self, df, store, *args, **kwargs)
+
+    def spy_merge(self, *args, **kwargs):
+        seen.append((os.path.basename(self.path), sc.getLocalProperty("spark.jobGroup.id")))
+        return real_merge(self, *args, **kwargs)
+
+    monkeypatch.setattr(IncrementalJoinView, "_write_segment", spy_segment)
+    monkeypatch.setattr(ParquetMergeTarget, "merge_with", spy_merge)
+    sc.setJobGroup("maintenance", "fan-out test")
+    try:
+        IncrementalJoinView(str(tmp_path / "ivm"), join_keys=["k"], n_buckets=4).apply(
+            spark,
+            spark.createDataFrame([("k1", "a1")], ["k", "av"]),
+            spark.createDataFrame([("k1", "b1")], ["k", "bv"]),
+            watermark=0,
+        )
+        LexicalIndex(str(tmp_path / "lex")).upsert(
+            spark,
+            spark.createDataFrame([(1, "alpha bravo"), (2, "bravo charlie")], ["doc_id", "text"]),
+            watermark=1,
+        )
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert sorted(seen) == sorted(
+        (name, "maintenance")
+        for name in ("a_state", "b_state", "view", "postings", "doclen")
+    )
