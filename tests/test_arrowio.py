@@ -404,7 +404,7 @@ def _run_cms(spark, root, step_lane):
         st.fold(spark, ev.filter(f"user_id % 2 = {wm - 1}"), watermark=wm)
     cells, top = st.read_cells(spark), st.topk(spark, 5)
     return {
-        "rows": (_rows(cells), _rows(top)), "schema": (_schema(cells), _schema(top)),
+        "rows": _rows(cells) + _rows(top), "schema": (_schema(cells), _schema(top)),
         "versions": (st.cells.versions(), st.cand.versions()),
         "watermark": (st.cells.watermark(), st.cand.watermark()),
     }
