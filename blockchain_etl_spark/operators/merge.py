@@ -274,18 +274,13 @@ class ParquetMergeTarget:
         if watermark is not None and watermark <= self._meta().get("watermark", -1):
             return target
         merged = fold(target, updates)
-        cur_v = self.current_version()
-        next_v = cur_v + 1
+        next_v = self.current_version() + 1
         # the size rule (functions/arrowio.py) picks the lane: a small
         # fold runs as one Arrow collect and a driver-side file write,
         # skipping the Hadoop commit protocol that dominates small
-        # writes; a state already over the byte bound on disk goes
-        # straight to Spark's writer
-        arrowio.write_parquet(
-            merged,
-            os.path.join(self.path, f"v={next_v}"),
-            state_dir=os.path.join(self.path, f"v={cur_v}") if cur_v else None,
-        )
+        # writes; a fold that reads more than the byte bound (its current
+        # version, on a lake-sized target) goes straight to Spark's writer
+        arrowio.write_parquet(merged, os.path.join(self.path, f"v={next_v}"))
         if changelog_keys is not None:
             # The v=N+1 write above IS the fold's materialization: diff
             # the COMMITTED files against the old state instead of

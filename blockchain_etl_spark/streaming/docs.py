@@ -156,7 +156,14 @@ class DocIngest:
             else None
         )
 
-    def process_batch(self, batch: DataFrame, batch_id: int) -> None:
+    def process_batch(
+        self, batch: DataFrame, batch_id: int, batch_bytes: "float | None" = None
+    ) -> None:
+        """Admit one crawl batch. ``batch_bytes``: an upper bound on the
+        bytes ``batch`` reads, for a batch whose plan hides its files (a
+        foreachBatch microbatch); default ``arrowio.input_bytes(batch)``.
+        Chunk and quarantine rows are a subset of the batch's, so it
+        bounds their writes before any collect (functions/arrowio.py)."""
         spark = batch.sparkSession
         if batch_id <= self.hashes.watermark():
             # REPLAY of a fully-committed batch: the hash inventory already
@@ -183,6 +190,7 @@ class DocIngest:
                 "crashed batch's replay — run doctor() (or replay batch "
                 f"{mx} from the source) before ingesting new batches"
             )
+        read = arrowio.input_bytes(batch) if batch_bytes is None else batch_bytes
         q = quality_features(batch)
         good = q.filter(
             (col("n_tokens") >= MIN_TOKENS) & (col("distinct_fp") >= MIN_DISTINCT_FP)
@@ -223,6 +231,7 @@ class DocIngest:
                 ),
                 os.path.join(self.out_dir, "quarantine", f"chunk={batch_id}"),
                 success_marker=True,
+                read_bytes=read,
             )
             firsts = firsts.join(flagged.select("doc_id"), ["doc_id"], "left_anti")
         # chunk write is overwrite-idempotent; replays rewrite the same dir.
@@ -235,6 +244,7 @@ class DocIngest:
             fresh.drop("h", "n_tokens", "distinct_fp"),
             os.path.join(self.out_dir, "docs", f"chunk={batch_id}"),
             success_marker=True,
+            read_bytes=read,
         )
         self._fold_planes(
             spark, fresh, batch_id, screen_evidence=self.quarantine_threshold is None
@@ -694,9 +704,22 @@ class DocIngest:
             .option("maxFilesPerTrigger", 1)  # one crawl file per microbatch
             .parquet(input_dir)
         )
+        # a microbatch's plan does not show its file: bound every batch
+        # by the largest crawl file pending
+        import glob as _glob
+
+        matches = _glob.glob(input_dir)
+        crawl_files = [m for m in matches if os.path.isfile(m)] + [
+            os.path.join(root, name)
+            for m in matches
+            for root, _, names in os.walk(m)
+            for name in names
+            if not name.startswith(("_", "."))
+        ]
+        largest = max(map(arrowio.file_bytes, crawl_files), default=0)
         q = (
             stream.writeStream.foreachBatch(
-                lambda batch, epoch: self.process_batch(batch, base + epoch)
+                lambda batch, epoch: self.process_batch(batch, base + epoch, largest)
             )
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)

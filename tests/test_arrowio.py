@@ -145,9 +145,10 @@ def test_gate_shuffle_restores_confs_when_pin_fails(spark, monkeypatch):
     assert not sess._GATE_SHUFFLE_ACTIVE
 
 
-def test_gate_and_non_gate_merge_sequences_interleave(spark, tmp_path):
-    """A target written inside a gate must keep merging cleanly outside
-    one (and vice versa) — versions, watermark and rows all agree."""
+def test_gate_and_non_gate_merge_sequences_interleave(spark, tmp_path, monkeypatch):
+    """A target merged inside a gate scope (its confs pinned) on the
+    driver lane must keep merging cleanly outside one on Spark's writer,
+    and back: versions, watermark and rows all agree."""
     t = ParquetMergeTarget(str(tmp_path / "mixed"))
 
     def upd(lo, hi, wm, gated):
@@ -162,11 +163,13 @@ def test_gate_and_non_gate_merge_sequences_interleave(spark, tmp_path):
                     watermark=wm,
                 )
         else:
+            _force_distributed(monkeypatch)
             t.merge_with(
                 spark, df,
                 lambda tg, u: merge_latest(tg, u, keys=["k"], order=["v"]),
                 watermark=wm,
             )
+            monkeypatch.undo()
 
     upd(0, 5, 1, gated=True)
     upd(5, 10, 2, gated=False)
@@ -174,13 +177,16 @@ def test_gate_and_non_gate_merge_sequences_interleave(spark, tmp_path):
     assert t.current_version() == 3
     assert t.watermark() == 3
     assert t.read(spark).count() == 12
+    assert _lanes(os.path.join(str(tmp_path / "mixed"), "v=2")) == {"distributed"}
+    assert _lanes(os.path.join(str(tmp_path / "mixed"), "v=3")) == {"driver"}
 
 
-def test_gate_scoped_chunk_write_keeps_commit_protocol(spark, tmp_path):
-    """Inside a gate, DocIngest chunk writes go through the Arrow writer —
-    which must still leave the _SUCCESS marker _complete_chunks keys on
+def test_gate_scoped_chunk_write_keeps_commit_protocol(spark, tmp_path, monkeypatch):
+    """A DocIngest chunk write on the driver lane inside a gate scope
+    must still leave the _SUCCESS marker _complete_chunks keys on
     (regression: the first Arrow-write cut dropped it and every chunk
-    became invisible crash debris, corpus watermark -1)."""
+    became invisible crash debris, corpus watermark -1), and the lake
+    must keep working on Spark's writer outside the gate afterwards."""
     from blockchain_etl_spark.streaming.docs import DocIngest
 
     docs = spark.range(0, 40).selectExpr(
@@ -200,11 +206,14 @@ def test_gate_scoped_chunk_write_keeps_commit_protocol(spark, tmp_path):
     assert ing.plane_watermarks()["corpus_chunks"] == 1
     rep = ing.audit()
     assert rep["consistent"], rep
-    # and the lake keeps working OUTSIDE the gate afterwards
+    # and the lake keeps working OUTSIDE the gate, on the other lane
+    _force_distributed(monkeypatch)
     ing.process_batch(
         docs.selectExpr("doc_id + 100 AS doc_id", "concat(text, ' more') AS text"),
         2,
     )
+    monkeypatch.undo()
+    assert _lanes(os.path.join(str(tmp_path / "lake"), "docs", "chunk=2")) == {"distributed"}
     assert ing._complete_chunks() == [1, 2]
     assert ing.read_corpus(spark).count() == 80
 
@@ -481,22 +490,70 @@ def test_wide_rows_under_the_row_cap_fall_back_on_bytes(spark, tmp_path, monkeyp
     assert _rows(t.read(spark)) == _rows(wide)
 
 
+def _no_collect(spark, monkeypatch, refused=lambda df: True):
+    """Fail the test if a frame ``refused`` picks is collected."""
+    cls = type(spark.range(1))  # the session's DataFrame class
+    real = cls.toArrow
+
+    def to_arrow(df):
+        assert not refused(df), ("collect attempted", df.columns)
+        return real(df)
+
+    monkeypatch.setattr(cls, "toArrow", to_arrow)
+
+
 def test_target_over_the_byte_bound_runs_no_collect(spark, tmp_path, monkeypatch):
-    """A merge target whose current version is already over the byte
-    bound on disk skips the driver lane without running anything: no
-    Arrow collect, straight to Spark's writer."""
+    """A merge whose fold reads a current version already over the byte
+    bound (uncompressed, from the parquet footers) skips the driver lane
+    without running anything: no Arrow collect, straight to Spark's
+    writer."""
     import blockchain_etl_spark.functions.arrowio as arrowio
 
     t = ParquetMergeTarget(str(tmp_path / "t"))
     t.merge(spark, _kv(spark, 0, 50), keys=["k"], order=["v"], watermark=1)
     v1 = os.path.join(str(tmp_path / "t"), "v=1")
     assert _lanes(v1) == {"driver"}
-    monkeypatch.setattr(arrowio, "_DRIVER_BYTES_CAP", arrowio.dir_bytes(v1) - 1)
-
-    def no_collect(df):
-        raise AssertionError("collect attempted for an over-bound target")
-
-    monkeypatch.setattr(arrowio, "collect_arrow_capped", no_collect)
+    state = arrowio.input_bytes(t.read(spark))
+    assert state > 0
+    monkeypatch.setattr(arrowio, "_DRIVER_BYTES_CAP", state - 1)
+    _no_collect(spark, monkeypatch)
     t.merge(spark, _kv(spark, 40, 60), keys=["k"], order=["v"], watermark=2)
     assert _lanes(os.path.join(str(tmp_path / "t"), "v=2")) == {"distributed"}
+    monkeypatch.undo()
     assert t.current_version() == 2 and t.read(spark).count() == 60
+
+
+def test_chunk_batch_over_the_byte_bound_runs_no_collect(spark, tmp_path, monkeypatch):
+    """A crawl batch far under the row cap whose file is over the byte
+    bound: the chunk write reads the crawl file's size before any job and
+    takes Spark's writer, so the chunk rows are never collected on the
+    driver. Both ways a batch arrives: read directly (its plan shows the
+    file; the chunk frame is a lazy localCheckpoint, whose plan does
+    not), and as a streaming microbatch, whose plan shows no file. The
+    lake commits the same rows as ever."""
+    import blockchain_etl_spark.functions.arrowio as arrowio
+    from blockchain_etl_spark.streaming.docs import DocIngest
+
+    crawl = str(tmp_path / "crawl")
+    spark.range(0, 40).selectExpr(
+        "id AS doc_id",
+        "concat('alpha bravo charlie delta echo foxtrot golf hotel india "
+        "juliet kilo lima mike november oscar papa word', CAST(id AS STRING),"
+        " ' quebec romeo sierra tango uniform victor whiskey xray yankee "
+        "zulu one two three four five six seven eight nine ten') AS text",
+    ).coalesce(1).write.parquet(crawl)
+    batch = spark.read.parquet(crawl)
+    monkeypatch.setattr(arrowio, "_DRIVER_BYTES_CAP", arrowio.input_bytes(batch) - 1)
+    _no_collect(spark, monkeypatch, refused=lambda df: "text" in df.columns)
+    direct = DocIngest(str(tmp_path / "direct"))
+    direct.process_batch(batch, 1)
+    streamed = DocIngest(str(tmp_path / "streamed"))
+    streamed.run_stream(spark, crawl, batch.schema)
+    monkeypatch.undo()
+    assert len(_rows(batch)) == 40
+    for ing in (direct, streamed):
+        (b,) = ing._complete_chunks()
+        chunk = os.path.join(ing.out_dir, "docs", f"chunk={b}")
+        assert _lanes(chunk) == {"distributed"}
+        assert "_SUCCESS" in os.listdir(chunk)
+        assert _rows(ing.read_corpus(spark)) == _rows(batch)
