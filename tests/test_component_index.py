@@ -495,7 +495,8 @@ def test_distributed_fallback_equals_driver_union_find(spark, tmp_path, monkeypa
     joins, a re-crawl) with the cap monkeypatched to -1 — every fold
     takes the distributed branch (proven by spying the union-find helper,
     which must never fire) — and the final labels must equal both the
-    fast-path run's labels and the batch ground truth."""
+    fast-path run's labels and the batch ground truth. The same spy shows
+    that the fast-path run, at a 200000 cap, does take the union-find."""
     from blockchain_etl_spark.operators import component_index as ci
     from blockchain_etl_spark.operators import components as components_mod
 
@@ -511,9 +512,6 @@ def test_distributed_fallback_equals_driver_union_find(spark, tmp_path, monkeypa
             _ingest(spark, mh, comp, rows, wm=wm)
         return _maintained(spark, comp), _ground_truth(spark, mh)
 
-    fast, truth_fast = run("uf_fast")
-    assert fast == truth_fast
-
     calls = []
     real_uf = ci._driver_union_find
 
@@ -522,13 +520,13 @@ def test_distributed_fallback_equals_driver_union_find(spark, tmp_path, monkeypa
         return real_uf(nodes, edges)
 
     monkeypatch.setattr(ci, "_driver_union_find", spy)
+    monkeypatch.setattr(components_mod, "_GRAPH_DRIVER_CAP", 200_000)
+    fast, truth_fast = run("uf_fast")
+    assert fast == truth_fast
+    assert calls, "a 200000 cap must route bounded folds to the union-find"
+
+    calls.clear()
     monkeypatch.setattr(components_mod, "_GRAPH_DRIVER_CAP", -1)
     slow, truth_slow = run("uf_dist")
     assert calls == [], "cap=-1 must force the distributed branch"
     assert slow == truth_slow == fast
-
-    # and with the cap restored, the same history DOES take the fast path
-    monkeypatch.setattr(components_mod, "_GRAPH_DRIVER_CAP", 200_000)
-    again, _ = run("uf_fast2")
-    assert calls, "default cap must route bounded folds to the union-find"
-    assert again == fast
