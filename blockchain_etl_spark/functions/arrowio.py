@@ -1,9 +1,15 @@
-"""The one lane rule for maintained-state writes: driver or distributed.
+"""The one lane rule for maintained-state writes and graph routes:
+driver or distributed.
 
 Every versioned merge (operators/merge.py), DocIngest chunk write
 (streaming/docs.py) and IVM segment write (operators/ivm.py) asks this
 module which lane its frame takes, whatever the load and whether or not
-a query gate is running:
+a query gate is running. So does every graph route (the union-find in
+operators/components.py, the triangle census, LPA sweeps and k-core peel
+in plans/olap.py): it hands its lazily checkpointed subgraph to
+``collect_arrow_capped`` with ``max_rows=_GRAPH_DRIVER_CAP``, solves it
+on the driver when a table comes back, and otherwise runs its
+distributed loop over the same checkpoint. For a write:
 
 - **driver lane** — ``DataFrame.toArrow()`` through a ``LIMIT`` of
   ``_DRIVER_ROWS_CAP + 1`` (one collect-style job executing the fold
@@ -81,21 +87,29 @@ def input_bytes(df: DataFrame) -> float:
     return total
 
 
-def collect_arrow_capped(df: DataFrame, read_bytes: "float | None" = None):
+def collect_arrow_capped(
+    df: DataFrame,
+    read_bytes: "float | None" = None,
+    max_rows: "int | None" = None,
+):
     """``df`` → a ``pyarrow.Table``, or None when the frame is not for
     the driver lane: the files it reads are over ``_DRIVER_BYTES_CAP``
     (checked before any job), its schema doesn't round-trip through
-    Arrow, or the LIMIT-guarded collect is over ``_DRIVER_ROWS_CAP`` rows
-    or ``_DRIVER_BYTES_CAP`` bytes. At most one execution of the lineage
+    Arrow, or the LIMIT-guarded collect is over ``max_rows`` rows or
+    ``_DRIVER_BYTES_CAP`` bytes. At most one execution of the lineage
     (the limit rides the same job), so a caller that gets a table back
     has already paid the fold exactly once. ``read_bytes``: the bytes
     ``df`` is built from, for a caller that knows them better than
     ``input_bytes(df)`` can (its plan hides its files); default
-    ``input_bytes(df)``. Both caps are read at call time."""
+    ``input_bytes(df)``. ``max_rows``: the row bound, default
+    ``_DRIVER_ROWS_CAP`` (the graph routes pass ``_GRAPH_DRIVER_CAP``).
+    The caps are read at call time."""
     import pyarrow.lib
     from pyspark.errors import PySparkTypeError
 
-    capped = df.limit(_DRIVER_ROWS_CAP + 1)
+    if max_rows is None:
+        max_rows = _DRIVER_ROWS_CAP
+    capped = df.limit(max_rows + 1)
     # input_bytes optimizes ``capped``'s plan; the collect reuses it
     read = input_bytes(capped) if read_bytes is None else read_bytes
     if read > _DRIVER_BYTES_CAP:
@@ -112,11 +126,11 @@ def collect_arrow_capped(df: DataFrame, read_bytes: "float | None" = None):
         # distributed writer would fail identically).
         _log.info("toArrow() miss (%s): distributed lane", type(exc).__name__)
         return None
-    if tbl.num_rows > _DRIVER_ROWS_CAP or tbl.nbytes > _DRIVER_BYTES_CAP:
+    if tbl.num_rows > max_rows or tbl.nbytes > _DRIVER_BYTES_CAP:
         _log.info(
             "frame (%d rows, %d bytes) is over the driver bound "
             "(%d rows, %d bytes): distributed lane",
-            tbl.num_rows, tbl.nbytes, _DRIVER_ROWS_CAP, _DRIVER_BYTES_CAP,
+            tbl.num_rows, tbl.nbytes, max_rows, _DRIVER_BYTES_CAP,
         )
         return None
     return tbl

@@ -69,96 +69,6 @@ def _fresh_split(c):
     return F.when(b < 900, "train").when(b < 950, "val").otherwise("test")
 
 
-# Above this many collected rows, the maintenance subgraph falls back to
-# distributed propagation. The incremental fold's graph is |batch| +
-# touched anchors BY DESIGN (module docstring) — a few thousand rows at
-# gate scale, bounded by the crawl batch in production — so it usually
-# fits the same budget as a broadcast side and a driver union-find
-# replaces an O(diameter)-round job loop with two collect jobs. The cap
-# keeps the path safe when a caller feeds a genuinely huge batch.
-# union-find fast path shared with the batch propagation: the cap and
-# solver now live beside the distributed loop (operators/components.py);
-# re-exported here because tests and the fold route reference them as
-# module attributes of this file.
-from . import components as _components  # noqa: E402
-from .components import _driver_union_find  # noqa: E402
-
-
-def _propagate_with_singletons(nodes: DataFrame, edges: DataFrame) -> DataFrame:
-    """Min-label propagation restricted to EDGE ENDPOINTS — the per-round
-    shuffles move only the near-dup subgraph, never every singleton in
-    ``nodes`` (which is the vast majority of any real corpus batch). Edge
-    endpoints outside ``nodes`` (anchor labels) ride along; ``nodes``
-    members without edges label themselves outside the loop.
-
-    Fast path: the fold's subgraph is bounded (batch + touched anchors),
-    so when it collects under _GRAPH_DRIVER_CAP rows the components are
-    solved with a driver-side union-find — the same class of move as
-    broadcasting a bounded join side, replacing the O(diameter) round
-    loop (one Spark job per round) with two bounded collects. Labels are
-    identical by construction (min reachable id); the distributed loop
-    remains the fallback for oversized batches and the cold corpus build
-    (plans/pipeline.py uses propagate_min_labels directly)."""
-    spark = nodes.sparkSession
-    # Checkpoint BEFORE sizing: a bare limit(cap).collect() would run
-    # CollectLimit's escalating partial waves, each recomputing the
-    # band-join lineage from scratch. ONE union-of-aggregates job
-    # materializes both checkpoints (fold jobs are the gates' cost
-    # floor — two separate counts would pay two scheduling round
-    # trips); the collects below then read cached blocks.
-    e = edges.select("src", "dst").localCheckpoint(eager=False)
-    n_nodes = nodes.select("doc_id").localCheckpoint(eager=False)
-    sizes = (
-        e.agg(F.count(F.lit(1)).alias("n"))
-        .unionAll(n_nodes.agg(F.count(F.lit(1)).alias("n")))
-        .collect()
-    )
-    cap = _components._GRAPH_DRIVER_CAP
-    if sizes[0].n <= cap and sizes[1].n <= cap:
-        from ..functions.localframe import local_df
-
-        # ONE tagged collect for both bounded frames (the checkpoints
-        # are already materialized by the sizes job, but each collect
-        # still pays a scheduling round trip — the gates' cost unit)
-        both = (
-            e.select(col("src"), col("dst"))
-            .unionByName(
-                n_nodes.select(
-                    col("doc_id").alias("src"),
-                    F.lit(None).cast("long").alias("dst"),
-                )
-            )
-            .collect()
-        )
-        edge_rows = [(r[0], r[1]) for r in both if r[1] is not None]
-        node_rows = [r[0] for r in both if r[1] is None]
-        labeled = _driver_union_find(node_rows, edge_rows)
-        # Arrow path (local_df), NOT createDataFrame(list): a plain-list
-        # local relation executes through a Python-worker scan stage that
-        # costs seconds per materialization in the fold's downstream
-        # joins; the Arrow-converted frame is JVM-side at execution.
-        out = local_df(spark, labeled, "doc_id long, label long").coalesce(1)
-        return out.localCheckpoint(eager=False)
-    edges, nodes = e, n_nodes
-    endpoints = (
-        edges.select(col("src").alias("doc_id"))
-        .unionByName(edges.select(col("dst").alias("doc_id")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    # batch-sized subgraph: clamp the loop frames (see propagate_min_labels)
-    labels_p = propagate_min_labels(
-        endpoints, edges, id_col="doc_id", loop_partitions=8,
-        # the same cap as above: endpoints can be bounded even when the
-        # batch node set overflowed it
-        driver_cap=cap,
-    )
-    singles = nodes.join(endpoints, ["doc_id"], "left_anti").select(
-        "doc_id", col("doc_id").alias("label")
-    )
-    return labels_p.unionByName(singles).localCheckpoint(eager=False)
-
-
 class ComponentIndex:
     """Persisted (doc_id, label, split) component table maintained beside
     a MinHashIndex — the split rides the SAME state rows as the label, so
@@ -438,7 +348,7 @@ class ComponentIndex:
             edges = lsh_candidate_pairs(
                 bands_all.join(F.broadcast(batch_ids), ["doc_id"])
             ).select(col("doc_a").alias("src"), col("doc_b").alias("dst"))
-            new_labels = _propagate_with_singletons(batch_ids, edges)
+            new_labels = propagate_min_labels(batch_ids, edges, loop_partitions=8)
             return self._merged_state(new_labels, label_pairs=None, prev=None)
 
         # prev is parquet-backed — consumers re-scan the published
@@ -531,7 +441,7 @@ class ComponentIndex:
         edges = (
             edges_m.unionByName(e_mapped) if edges_m is not None else e_mapped
         ).localCheckpoint(eager=False)
-        labels_g = _propagate_with_singletons(in_doc_grain, edges)
+        labels_g = propagate_min_labels(in_doc_grain, edges, loop_partitions=8)
 
         # label map for ANCHOR nodes (labels of untouched components that
         # merged into something): old label → new label

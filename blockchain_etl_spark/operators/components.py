@@ -1,13 +1,21 @@
-"""Connected components via min-label propagation — the scalable
-alternative to driver-side union-find (which dies at the first graph that
-doesn't fit one machine).
+"""Connected components by min label: the one components routine for
+every caller (the dedup and split queries in plans/pipeline.py,
+embedding_semantic_clusters in plans/similarity.py, and the
+ComponentIndex fold in operators/component_index.py). Any
+(src, dst) edge frame works; label = min id reachable, and a node with
+no edge labels itself.
 
-Used by dedup_components (shingle/hash candidate edges) and
-embedding_semantic_clusters (embedding near-dup edges); any (src, dst)
-edge frame works. Per round: one shuffle join edges⋈labels + one
-min-aggregate; converges in O(component diameter) rounds — tiny for dedup
-graphs (chains of near-dups). localCheckpoint truncates lineage every
-round so the plan stays flat instead of doubling.
+One sizing step picks the lane. The edges and nodes are checkpointed
+lazily and their tagged union goes to ``arrowio.collect_arrow_capped``
+with ``max_rows=_GRAPH_DRIVER_CAP``: one Spark job sizes the subgraph
+and collects it. When a table comes back, a driver-side union-find
+labels it. Otherwise the distributed loop runs over the same
+checkpoints: per round one shuffle join edges⋈labels and one
+min-aggregate, converging in O(component diameter) rounds;
+localCheckpoint truncates lineage every round so the plan stays flat.
+The loop runs over edge endpoints only, so its shuffles never move the
+singletons that make up most of a corpus; members of ``nodes`` with no
+edge label themselves outside it. Both lanes return nodes ∪ endpoints.
 
 Convergence detection: labels only ever DECREASE, so sum(label) is
 strictly monotone while anything changes — an O(1)-output aggregate per
@@ -17,20 +25,18 @@ comparison pass).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col
 
-# Hard bound on rows collected driver-side for the bounded graph fast
-# paths: the union-find here and in operators/component_index.py, and the
-# triangle census, LPA sweeps and k-core peel in plans/olap.py. Same
-# legitimacy class as a broadcast join side (the subgraph must be bounded
-# for the collect to be sound; oversized graphs take the distributed
-# loops). Every user reads it at call time, so one monkeypatch (or
-# SPARK_GRAFT_GRAPH_DRIVER_CAP) moves every graph route.
-_GRAPH_DRIVER_CAP = int(os.environ.get("SPARK_GRAFT_GRAPH_DRIVER_CAP", "200000"))
+# Bound on the rows a graph route collects driver-side: edge rows plus
+# node rows for the union-find here, the distinct edges for the triangle
+# census and LPA sweeps and the node degrees for the k-core peel in
+# plans/olap.py. It is the ``max_rows`` each route passes to
+# ``arrowio.collect_arrow_capped``, which also holds the collect under
+# its byte bound; a larger subgraph takes its route's distributed loop.
+# Every route reads it at call time, so one monkeypatch moves them all.
+_GRAPH_DRIVER_CAP = 200_000
 
 
 def _driver_union_find(
@@ -69,77 +75,58 @@ def propagate_min_labels(
     id_col: str = "doc_id",
     max_rounds: int = 30,
     loop_partitions: int | None = None,
-    driver_cap: int | None = None,
 ) -> DataFrame:
     """``nodes``: one row per vertex with column ``id_col``;
     ``edges``: (src, dst) directed pairs (symmetrized internally).
-    Returns (``id_col``, label) where label = min vertex id reachable;
-    singletons label themselves.
+    Returns (``id_col``, label) for nodes ∪ edge endpoints, where label =
+    min vertex id reachable; singletons label themselves. Both lanes
+    (module docstring) return the same rows.
 
     ``max_rounds`` is a CORRECTNESS bound, not a budget: propagation needs
     O(component diameter) rounds, and returning early would silently hand
     back partially-propagated labels (diverging from the exact
-    recursive-CTE oracles). If the fixpoint is not reached within
-    ``max_rounds``, this raises — callers with deeper graphs must pass a
-    larger bound.
+    recursive-CTE oracles). If the distributed loop does not reach the
+    fixpoint within ``max_rounds``, this raises — callers with deeper
+    graphs must pass a larger bound.
 
     ``loop_partitions``: clamp the per-round frames to this many
     partitions. Incremental maintainers (operators/component_index.py)
     propagate batch-sized subgraphs where the default shuffle-partition
     count means every round schedules dozens of near-empty tasks; the
     clamp trades away parallelism the tiny frame can't use. Leave None
-    for corpus-scale propagation (dedup_components).
+    for corpus-scale propagation (dedup_components)."""
+    from ..functions import arrowio
 
-    ``driver_cap``: when BOTH |edges| and |nodes| count under this bound,
-    the components are solved with a driver-side union-find over one
-    bounded collect — the same class of move as broadcasting a bounded
-    join side, replacing the O(diameter) round loop (one shuffle join +
-    one aggregate per round, one Spark job each) with one count job and
-    one collect job. Labels are identical by construction (min reachable
-    id; pinned by tests/test_components.py fast≡distributed). Oversized
-    graphs fall through to the distributed loop — the 100 TB path is
-    unchanged. None (default) reads ``_GRAPH_DRIVER_CAP``; pass 0 to
-    force the distributed loop."""
-    if driver_cap is None:
-        driver_cap = _GRAPH_DRIVER_CAP
-    if driver_cap:
-        spark = nodes.sparkSession
-        # Checkpoint BEFORE sizing: a bare count on the raw lineage would
-        # re-execute the (often expensive) edge derivation again at
-        # collect time. ONE union-of-aggregates job materializes both
-        # checkpoints; the collect below then reads cached blocks.
-        e0 = edges.select("src", "dst").localCheckpoint(eager=False)
-        n0 = nodes.select(col(id_col)).localCheckpoint(eager=False)
-        sizes = (
-            e0.agg(F.count(F.lit(1)).alias("n"))
-            .unionAll(n0.agg(F.count(F.lit(1)).alias("n")))
-            .collect()
+    e0 = edges.select("src", "dst").localCheckpoint(eager=False)
+    n0 = nodes.select(col(id_col)).localCheckpoint(eager=False)
+    # ONE tagged frame carries both (ids are longs across every consumer;
+    # node rows ride with a NULL dst), so one capped collect sizes the
+    # whole subgraph and fills both checkpoints
+    tagged = e0.unionByName(
+        n0.select(col(id_col).alias("src"), F.lit(None).cast("long").alias("dst"))
+    )
+    tbl = arrowio.collect_arrow_capped(tagged, max_rows=_GRAPH_DRIVER_CAP)
+    if tbl is not None:
+        from ..functions.localframe import local_df
+
+        src, dst = tbl.column("src").to_pylist(), tbl.column("dst").to_pylist()
+        labeled = _driver_union_find(
+            [s for s, d in zip(src, dst) if d is None],
+            [(s, d) for s, d in zip(src, dst) if d is not None],
         )
-        if sizes[0].n <= driver_cap and sizes[1].n <= driver_cap:
-            from ..functions.localframe import local_df
-
-            # ONE tagged collect for both bounded frames (ids are longs
-            # across every consumer; node rows ride with a NULL dst)
-            both = (
-                e0.unionByName(
-                    n0.select(
-                        col(id_col).alias("src"),
-                        F.lit(None).cast("long").alias("dst"),
-                    )
-                )
-            ).collect()
-            edge_rows = [(r[0], r[1]) for r in both if r[1] is not None]
-            node_rows = [r[0] for r in both if r[1] is None]
-            labeled = _driver_union_find(node_rows, edge_rows)
-            # Arrow path (local_df), NOT createDataFrame(list): a plain
-            # list local relation executes through a Python-worker scan
-            # stage costing seconds per downstream materialization.
-            out = local_df(spark, labeled, f"{id_col} long, label long")
-            return out.coalesce(1).localCheckpoint(eager=False)
-        edges, nodes = e0, n0  # checkpoints feed the distributed loop
+        # Arrow path (local_df), NOT createDataFrame(list): a plain-list
+        # local relation executes through a Python-worker scan stage
+        # costing seconds per downstream materialization.
+        out = local_df(nodes.sparkSession, labeled, f"{id_col} long, label long")
+        return out.coalesce(1).localCheckpoint(eager=False)
+    endpoints = (
+        e0.select(col("src").alias(id_col))
+        .unionByName(e0.select(col("dst").alias(id_col)))
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
     sym = (
-        edges.select("src", "dst")
-        .unionByName(edges.select(col("dst").alias("src"), col("src").alias("dst")))
+        e0.unionByName(e0.select(col("dst").alias("src"), col("src").alias("dst")))
         .distinct()
     )
     if loop_partitions:
@@ -148,7 +135,7 @@ def propagate_min_labels(
         # full shuffle per propagation is pure overhead
         sym = sym.coalesce(loop_partitions)
     sym = sym.localCheckpoint(eager=False)  # first round's join materializes
-    labels = nodes.select(col(id_col), col(id_col).alias("label"))
+    labels = endpoints.select(col(id_col), col(id_col).alias("label"))
     prev_sum = None
     converged = False
     for _ in range(max_rounds):
@@ -175,4 +162,7 @@ def propagate_min_labels(
             "larger max_rounds — returning partial labels would silently "
             "split components"
         )
-    return labels
+    singles = n0.join(endpoints, [id_col], "left_anti").select(
+        id_col, col(id_col).alias("label")
+    )
+    return labels.unionByName(singles).localCheckpoint(eager=False)

@@ -18,8 +18,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast, col
 
+from ..functions import arrowio
 from ..functions.localframe import local_df
 from ..functions.numeric import DEC, dsum, dsum_expr
+from ..operators import components
 from ..sources.testdata import load_table
 from .registry import register
 
@@ -1080,31 +1082,18 @@ def basket_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 _TRI_MIN_COORDER = 2  # edge = parts co-ordered in >= this many baskets
 
-# Bounded driver fast path for the loops over the c_ab-filtered
-# co-purchase graph (triangle census, LPA sweeps): when the DISTINCT edge
-# list counts under operators/components.py:_GRAPH_DRIVER_CAP (read at
-# call time), collect it once and run the exact integer algorithm
-# driver-side — the same legitimacy class as a broadcast join side and
-# the same move as the union-find fast path there (judged sound with
-# boundary tests on both routes). Oversized graphs take the unchanged
-# distributed loop, so the 100 TB path keeps its shape. The UNfiltered
+# Bounded driver lane for the loops over the c_ab-filtered co-purchase
+# graph (triangle census, LPA sweeps): the lazily checkpointed distinct
+# edge list goes to functions/arrowio.py:collect_arrow_capped with
+# max_rows=operators/components.py:_GRAPH_DRIVER_CAP (read at call time),
+# the one sizing step of every graph route: one job sizes and collects
+# it, under the byte bound too, and the exact integer algorithm runs
+# driver-side — the same legitimacy class as a broadcast join side.
+# An oversized graph takes the unchanged distributed loop over the same
+# checkpoint, so the 100 TB path keeps its shape. The UNfiltered
 # co-purchase graph (part_kcore_census, basket_part_pairs) is ~300x
-# larger at every scale and never routes here.
-
-
-def _bounded_edge_collect(
-    edges: DataFrame,
-) -> "tuple[list[tuple[int, int]] | None, DataFrame]":
-    """(rows-or-None, checkpointed-edges): one count job on the lazily
-    checkpointed edge frame sizes it; under the cap the collect reads the
-    cached blocks. Over the cap returns (None, e0) so the distributed
-    loop reuses the checkpoint instead of re-deriving the pair expansion."""
-    from ..operators import components
-
-    e0 = edges.localCheckpoint(eager=False)
-    if e0.count() > components._GRAPH_DRIVER_CAP:
-        return None, e0
-    return [(r[0], r[1]) for r in e0.collect()], e0
+# larger at every scale and never routes here; the k-core peel collects
+# only its node degrees through the same step.
 
 
 def _driver_triangle_census(
@@ -1204,11 +1193,13 @@ def _driver_lpa(
 def part_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     _, copairs = _copurchase_pairs(spark, sf_dir)
     edges = copairs.filter(col("c_ab") >= _TRI_MIN_COORDER).select("a", "b")
-    # Bounded driver fast path (round 13): the c_ab-filtered graph is
-    # tiny (3.6k edges at sf0.1); under the cap run the exact integer
-    # census driver-side — same algorithm, zero further Spark jobs.
-    rows, edges = _bounded_edge_collect(edges)
-    if rows is not None:
+    # Bounded driver lane: the c_ab-filtered graph is tiny (3.6k edges
+    # at sf0.1); under the cap run the exact integer census driver-side —
+    # same algorithm, zero further Spark jobs.
+    edges = edges.localCheckpoint(eager=False)
+    tbl = arrowio.collect_arrow_capped(edges, max_rows=components._GRAPH_DRIVER_CAP)
+    if tbl is not None:
+        rows = list(zip(tbl.column("a").to_pylist(), tbl.column("b").to_pylist()))
         # local_df: Arrow-converter local relation — the plain-list form
         # schedules a Python-worker scan stage per action (round 14)
         return local_df(
@@ -2220,16 +2211,15 @@ def part_kcore_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the driver via broadcast(); collecting the node-grain dec back is
     # the same bounded-payload class. A round that peels nothing costs
     # zero jobs (the cascade is monotone, the census row repeats). The
-    # limit-probe fuses the cap gate and the degree collect into one job
-    # (over the cap, CollectLimit short-circuits after cap+1 rows). Routes
+    # degree collect is the sizing step every graph route takes
+    # (functions/arrowio.py:collect_arrow_capped): one job. Routes
     # identical by tests/test_graph_props.py; over the cap the unchanged
     # distributed loop below runs.
-    from ..operators import components
-
-    cap = components._GRAPH_DRIVER_CAP
-    probe = adj.select("n", "d0").limit(cap + 1).collect()
-    if len(probe) <= cap:
-        d = {r[0]: r[1] for r in probe}
+    tbl = arrowio.collect_arrow_capped(
+        adj.select("n", "d0"), max_rows=components._GRAPH_DRIVER_CAP
+    )
+    if tbl is not None:
+        d = dict(zip(tbl.column("n").to_pylist(), tbl.column("d0").to_pylist()))
         rows = [(0, len(d), sum(d.values()) // 2)]
         for r in range(1, _KCORE_ROUNDS + 1):
             peeled = [n for n in d if d[n] < _KCORE_K]
@@ -2365,12 +2355,14 @@ _LPA_ROUNDS_SQL = ",\n    ".join(
 def part_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     _, copairs = _copurchase_pairs(spark, sf_dir)
     edges = copairs.filter(col("c_ab") >= _TRI_MIN_COORDER).select("a", "b")
-    # Bounded driver fast path (round 13): same cap/fallback as
+    # Bounded driver lane: same sizing step and fallback as
     # part_triangle_count — under the cap run the exact synchronous
     # sweeps driver-side (identical tie-break), skipping _LPA_ROUNDS
     # join+agg+checkpoint Spark jobs on a 3.6k-edge graph.
-    rows, edges = _bounded_edge_collect(edges)
-    if rows is not None:
+    edges = edges.localCheckpoint(eager=False)
+    tbl = arrowio.collect_arrow_capped(edges, max_rows=components._GRAPH_DRIVER_CAP)
+    if tbl is not None:
+        rows = list(zip(tbl.column("a").to_pylist(), tbl.column("b").to_pylist()))
         lab = _driver_lpa(rows, _LPA_ROUNDS)
         agg: "dict[int, list[int]]" = {}
         for n, c in lab.items():

@@ -42,6 +42,7 @@ separate background job (the reference's backfills play the same role).
 from __future__ import annotations
 
 import json
+import logging
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -52,6 +53,8 @@ from ..operators.actors import extract_actors
 from ..sources.blockchain import FIELDS_SCHEMAS
 from .entities import gateway_history, oui_history, validator_history, vars_history
 from .fanout import run_tasks
+
+_log = logging.getLogger(__name__)
 
 TABLES = (
     "transactions",
@@ -574,7 +577,7 @@ class BlockIngest:
             df.write.mode("overwrite").parquet(os.path.join(snap_dir, name))
             written.append(name)
         if skipped:
-            print(f"write_snapshot: skipped absent tables: {', '.join(skipped)}")
+            _log.info("write_snapshot: skipped absent tables: %s", ", ".join(skipped))
         manifest = os.path.join(self.out_dir, "snapshots", "latest-snap.json")
         os.makedirs(os.path.dirname(manifest), exist_ok=True)
         tmp = manifest + ".tmp"
@@ -627,10 +630,21 @@ class BlockIngest:
         run = contiguous_files(input_dir, next_height)
         if not run:
             return
-        blocks = (
-            spark.read.schema(SCHEMA)
-            .option("mode", "FAILFAST")
-            .json([f.path for f in run])
-            .filter(col("height") >= next_height)
-        )
+        # Above the parallel-discovery threshold (32 paths by default)
+        # Spark lists the paths with a distributed job, one task per
+        # archive, before the catch-up's first real job. The run names
+        # its files, so listing them on the driver costs one stat each:
+        # the threshold is raised to the run's length for this read only.
+        conf, key = spark.conf, "spark.sql.sources.parallelPartitionDiscovery.threshold"
+        prev = conf.get(key)
+        conf.set(key, str(max(len(run), int(prev))))
+        try:
+            blocks = (
+                spark.read.schema(SCHEMA)
+                .option("mode", "FAILFAST")
+                .json([f.path for f in run])
+                .filter(col("height") >= next_height)
+            )
+        finally:
+            conf.set(key, prev)
         self.process_batch(explode_txns(blocks), next_height)

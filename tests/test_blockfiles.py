@@ -287,6 +287,41 @@ def test_follower_nothing_new_runs_no_spark_job(spark, chain, tmp_path, monkeypa
     assert ing.sync_height() == 40
 
 
+def test_follower_lists_a_long_run_without_a_job(spark, chain, tmp_path, monkeypatch):
+    """A catch-up over 40 archives runs as many Spark jobs before
+    ``process_batch`` as one over 20: the run's paths are listed on the
+    driver, not by the distributed listing job Spark starts above its
+    parallel-discovery threshold (32 paths), and the session's threshold
+    is left as it was."""
+    from blockchain_etl_spark.streaming.ingest import BlockIngest
+
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    before = spark.conf.get(key)
+    sc = spark.sparkContext
+    batches = []
+    monkeypatch.setattr(
+        BlockIngest, "process_batch", lambda self, batch, batch_id: batches.append(batch)
+    )
+
+    def catch_up_jobs(n):
+        d = str(tmp_path / f"feed{n}")
+        os.makedirs(d)
+        for h in range(1, n + 1):
+            _write_chain_archive(d, chain, h, h)
+        group = f"catch-up-{n}"
+        sc.setJobGroup(group, "catch-up listing")
+        try:
+            BlockIngest(str(tmp_path / f"out{n}")).run_blockfiles_stream(spark, d)
+            return len(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            for k in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(k, None)
+
+    assert catch_up_jobs(40) == catch_up_jobs(20)
+    assert spark.conf.get(key) == before
+    assert len(batches) == 2
+
+
 def test_follower_start_height(spark, chain, tmp_path, monkeypatch):
     """``start_height`` picks the first height on a fresh lake (where the
     order check then refuses a start past genesis) and is ignored at or

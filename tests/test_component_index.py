@@ -488,16 +488,15 @@ def test_coalesced_prefix_of_backlog_raises(spark, tmp_path):
 
 
 def test_distributed_fallback_equals_driver_union_find(spark, tmp_path, monkeypatch):
-    """_propagate_with_singletons has two routes: driver union-find when
-    the fold's subgraph collects under _GRAPH_DRIVER_CAP, distributed
-    propagate_min_labels above it. The fallback must stay alive and
+    """The fold's propagate_min_labels has two lanes: driver union-find
+    when the fold's subgraph collects under _GRAPH_DRIVER_CAP, the
+    distributed loop above it. The fallback must stay alive and
     bit-identical: run the SAME multi-batch history (merges, family
     joins, a re-crawl) with the cap monkeypatched to -1 — every fold
     takes the distributed branch (proven by spying the union-find helper,
     which must never fire) — and the final labels must equal both the
     fast-path run's labels and the batch ground truth. The same spy shows
     that the fast-path run, at a 200000 cap, does take the union-find."""
-    from blockchain_etl_spark.operators import component_index as ci
     from blockchain_etl_spark.operators import components as components_mod
 
     history = [
@@ -513,13 +512,13 @@ def test_distributed_fallback_equals_driver_union_find(spark, tmp_path, monkeypa
         return _maintained(spark, comp), _ground_truth(spark, mh)
 
     calls = []
-    real_uf = ci._driver_union_find
+    real_uf = components_mod._driver_union_find
 
     def spy(nodes, edges):
         calls.append(len(edges))
         return real_uf(nodes, edges)
 
-    monkeypatch.setattr(ci, "_driver_union_find", spy)
+    monkeypatch.setattr(components_mod, "_driver_union_find", spy)
     monkeypatch.setattr(components_mod, "_GRAPH_DRIVER_CAP", 200_000)
     fast, truth_fast = run("uf_fast")
     assert fast == truth_fast

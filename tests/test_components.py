@@ -1,11 +1,14 @@
 """propagate_min_labels: correctness bound on rounds — partial labels must
 never be returned silently (they would split components and diverge from
-the exact recursive-CTE oracles)."""
+the exact recursive-CTE oracles). The equality of the driver and
+distributed lanes is pinned for every graph route by
+tests/test_graph_props.py::test_graph_route_equivalence."""
 
 from __future__ import annotations
 
 import pytest
 
+from blockchain_etl_spark.operators import components
 from blockchain_etl_spark.operators.components import propagate_min_labels
 
 
@@ -23,42 +26,13 @@ def test_converges_on_chain(spark):
     assert {r["label"] for r in labels.collect()} == {0}
 
 
-def test_raises_instead_of_returning_partial_labels(spark):
+def test_raises_instead_of_returning_partial_labels(spark, monkeypatch):
     # a 12-node chain needs ~log-diameter+1 rounds; 2 rounds cannot reach
     # the fixpoint CHECK (which needs one extra unchanged round) — the
     # operator must refuse rather than hand back split components.
-    # driver_cap=0 forces the distributed loop (the union-find fast path
-    # has no round bound to violate).
+    # A cap of -1 forces the distributed loop (the driver union-find has
+    # no round bound to violate).
+    monkeypatch.setattr(components, "_GRAPH_DRIVER_CAP", -1)
     nodes, edges = _chain(spark, 12)
     with pytest.raises(RuntimeError, match="fixpoint"):
-        propagate_min_labels(nodes, edges, max_rounds=2, driver_cap=0)
-
-
-def test_union_find_fast_path_equals_distributed_loop(spark):
-    """The driver union-find route (default: subgraph under driver_cap)
-    must return row-identical labels to the distributed propagation it
-    replaces — same node set (nodes ∪ edge endpoints), same min-reachable
-    label, including endpoints absent from ``nodes`` and isolated
-    self-labelled nodes."""
-    nodes = spark.createDataFrame(
-        [(i,) for i in range(8)], "doc_id long"
-    )  # 0..7; 50+51 appear only as edge endpoints
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (5, 6), (50, 51), (51, 1)], "src long, dst long"
-    )
-    fast = propagate_min_labels(nodes, edges)  # cap 200k -> union-find
-    dist = propagate_min_labels(nodes, edges, driver_cap=0)  # loop
-    rows_f = sorted((r["doc_id"], r["label"]) for r in fast.collect())
-    rows_d = sorted((r["doc_id"], r["label"]) for r in dist.collect())
-    assert rows_f == rows_d
-    # the merged chain 50-51-1-2-3 labels to 1 (min id); singletons self
-    assert (50, 1) in rows_f and (3, 1) in rows_f and (0, 0) in rows_f
-
-
-def test_driver_cap_boundary_takes_distributed_route(spark):
-    # cap below |edges| must fall through to the distributed loop and
-    # still produce identical labels
-    nodes, edges = _chain(spark, 10)
-    labels = propagate_min_labels(nodes, edges, driver_cap=1)
-    assert {r["label"] for r in labels.collect()} == {0}
-    assert labels.count() == 10
+        propagate_min_labels(nodes, edges, max_rounds=2)

@@ -178,6 +178,15 @@ def no_lexical_lake(spark, tmp_path_factory):
     return path
 
 
+@pytest.fixture(scope="module")
+def lexical_crash_lake(spark, tmp_path_factory, batch1_lake):
+    """Batch 2 crashed at the lexical plane's commit and left un-healed,
+    the starting state of three tests (each works on its own copy)."""
+    path = tmp_path_factory.mktemp("lexical_crash") / "lake"
+    _ingest(spark, path, batch1_lake, crash_at=("lexical", "upsert"))
+    return path
+
+
 # one crash point between every adjacent pair of plane commits, in the
 # _fold_planes order (the chunk write precedes them all; the quarantine
 # write and gated evidence fold precede the chunk write)
@@ -195,9 +204,13 @@ CRASH_POINTS = [
 
 @pytest.mark.parametrize("point", CRASH_POINTS, ids=[p[0] for p in CRASH_POINTS])
 def test_crash_between_plane_commits_heals_to_golden(
-    spark, tmp_path, golden, batch1_lake, point
+    spark, tmp_path, golden, batch1_lake, point, request
 ):
-    ing = _ingest(spark, tmp_path / "lake", batch1_lake, crash_at=point)
+    if point == ("lexical", "upsert"):
+        lake = request.getfixturevalue("lexical_crash_lake")
+        ing = _copy_lake(lake, tmp_path / "lake")
+    else:
+        ing = _ingest(spark, tmp_path / "lake", batch1_lake, crash_at=point)
     rep = ing.audit()
     assert not rep["consistent"]
     assert rep["target"] == 2
@@ -210,10 +223,8 @@ def test_crash_between_plane_commits_heals_to_golden(
     assert ing.doctor(spark) == []
 
 
-def test_new_batch_on_divergent_planes_is_refused(spark, tmp_path, batch1_lake):
-    ing = _ingest(
-        spark, tmp_path / "lake", batch1_lake, crash_at=("lexical", "upsert")
-    )
+def test_new_batch_on_divergent_planes_is_refused(spark, tmp_path, lexical_crash_lake):
+    ing = _copy_lake(lexical_crash_lake, tmp_path / "lake")
     _, b2, _ = _corpus(spark)
     b3 = b2.withColumn("doc_id", col("doc_id") + 100)
     # a NEW batch id would advance the stragglers past the crashed batch
@@ -227,15 +238,13 @@ def test_new_batch_on_divergent_planes_is_refused(spark, tmp_path, batch1_lake):
     assert ing.audit()["consistent"]
 
 
-def test_lost_chunk_after_crash_reads_as_ahead(spark, tmp_path, batch1_lake):
+def test_lost_chunk_after_crash_reads_as_ahead(spark, tmp_path, lexical_crash_lake):
     """If the crashed batch's chunk dir is ALSO lost, the committed
     planes are simply AHEAD of a corpus that no longer holds the batch —
     doctor has nothing to roll forward and the source replay (same
     batch id) converges, rewriting the chunk and catching up the
     stragglers through their guards."""
-    ing = _ingest(
-        spark, tmp_path / "lake", batch1_lake, crash_at=("lexical", "upsert")
-    )
+    ing = _copy_lake(lexical_crash_lake, tmp_path / "lake")
     shutil.rmtree(tmp_path / "lake" / "docs" / "chunk=2")
     rep = ing.audit()
     assert not rep["consistent"] and not rep["stragglers"]

@@ -14,6 +14,8 @@ import pytest
 
 import blockchain_etl_spark.operators.components as components_mod
 import blockchain_etl_spark.plans.olap as olap_mod
+from blockchain_etl_spark.functions import arrowio
+from blockchain_etl_spark.operators.components import propagate_min_labels
 from blockchain_etl_spark.plans.olap import part_kcore_census, part_triangle_count
 
 
@@ -104,52 +106,6 @@ def test_triangle_census_matches_brute_force(spark, seed):
     assert got.gcc_ppm == expect_gcc, seed
 
 
-def test_graph_driver_fast_path_equals_distributed(spark, monkeypatch):
-    """part_triangle_count / part_label_propagation route through a
-    bounded driver fast path when the c_ab-filtered edge list counts
-    under _GRAPH_DRIVER_CAP (same legitimacy pattern as the union-find
-    fast path, tests/test_component_index.py). Both routes must stay
-    alive and row-identical: the default cap must take the driver branch
-    (proven by spying the driver helpers), cap=-1 must force the
-    distributed loops, and the results must match exactly."""
-    from blockchain_etl_spark.plans.olap import part_label_propagation
-
-    rows = _rand_baskets("fastpath", 60, 18, 6)
-    li = spark.createDataFrame(rows, ["l_orderkey", "l_partkey"])
-    monkeypatch.setattr(olap_mod, "load_table", lambda spark, sf_dir, name: li)
-
-    def run():
-        tri = [tuple(r) for r in part_triangle_count(spark, "ignored").collect()]
-        lpa = sorted(
-            tuple(r) for r in part_label_propagation(spark, "ignored").collect()
-        )
-        return tri, lpa
-
-    calls = []
-    real_tri, real_lpa = olap_mod._driver_triangle_census, olap_mod._driver_lpa
-
-    def spy_tri(edge_rows):
-        calls.append(("tri", len(edge_rows)))
-        return real_tri(edge_rows)
-
-    def spy_lpa(edge_rows, rounds):
-        calls.append(("lpa", len(edge_rows)))
-        return real_lpa(edge_rows, rounds)
-
-    monkeypatch.setattr(olap_mod, "_driver_triangle_census", spy_tri)
-    monkeypatch.setattr(olap_mod, "_driver_lpa", spy_lpa)
-    fast = run()
-    assert {c[0] for c in calls} == {"tri", "lpa"}, (
-        "default cap must route the bounded graph driver-side"
-    )
-
-    monkeypatch.setattr(components_mod, "_GRAPH_DRIVER_CAP", -1)
-    calls.clear()
-    slow = run()
-    assert calls == [], "cap=-1 must force the distributed branch"
-    assert slow == fast
-
-
 @pytest.mark.parametrize("seed,k", [("g1", 2), ("g2", 3), ("hubby", 4)])
 def test_kcore_census_matches_brute_force(spark, seed, k):
     rows = _rand_baskets(seed, 50, 12, 5)
@@ -170,29 +126,141 @@ def test_kcore_census_matches_brute_force(spark, seed, k):
     assert got == expected, (seed, k)
 
 
-@pytest.mark.parametrize("seed,k", [("g1", 2), ("hubby", 4)])
-def test_kcore_driver_peel_equals_distributed(spark, monkeypatch, seed, k):
-    """part_kcore_census holds its node-grain degree state on the driver
-    when |V| counts under _GRAPH_DRIVER_CAP (the edges stay distributed in
-    the checkpointed adjacency — only <= |V|-row frames cross the driver
-    boundary, the same class as the broadcast peeled frontier the
-    distributed loop ships). Both routes must stay alive and
-    row-identical: cap=-1 forces the distributed incremental-degree
-    loop."""
-    rows = _rand_baskets(seed, 50, 12, 5)
-    li = spark.createDataFrame(rows, ["l_orderkey", "l_partkey"])
-    monkeypatch.setattr(olap_mod, "load_table", lambda s, d, n: li)
-    monkeypatch.setattr(olap_mod, "_KCORE_K", k)
+# --------------------------------------------------------- route equivalence
+#
+# Every graph route sizes its subgraph through ONE step,
+# arrowio.collect_arrow_capped(max_rows=_GRAPH_DRIVER_CAP): a table back
+# means the driver lane, None the route's distributed loop over the same
+# checkpoint. Each route below runs twice, at the default cap and at -1,
+# and both runs must return identical rows.
+
+
+def _components_route(spark, monkeypatch, tmp_path):
+    # 0..7 are the nodes; 50, 51 join them only as edge endpoints, and
+    # the component 60-61 has no member in ``nodes`` at all
+    nodes = spark.createDataFrame([(i,) for i in range(8)], "doc_id long")
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (5, 6), (50, 51), (51, 1), (60, 61)],
+        "src long, dst long",
+    )
 
     def run():
-        return sorted(
-            (r.round, r.n_nodes, r.n_edges)
-            for r in part_kcore_census(spark, "ignored").collect()
+        return sorted(tuple(r) for r in propagate_min_labels(nodes, edges).collect())
+
+    def check(rows):
+        assert rows == sorted(
+            [(0, 0), (1, 1), (2, 1), (3, 1), (4, 4), (5, 5), (6, 5), (7, 7),
+             (50, 1), (51, 1), (60, 60), (61, 60)]
         )
 
-    fast = run()
+    return run, check
+
+
+def _component_index_route(spark, monkeypatch, tmp_path):
+    # one bootstrap fold (two near-dup families and a singleton); the
+    # anchor-label folds of later batches keep their lane pin in
+    # tests/test_component_index.py::test_distributed_fallback_equals_driver_union_find
+    from tests.test_component_index import (
+        _ground_truth,
+        _ingest,
+        _maintained,
+        _mk,
+        _text,
+    )
+
+    batch = [(0, _text(0)), (1, _text(0, 1)), (10, _text(5)), (11, _text(5)),
+             (30, _text(9))]
+    runs = []
+
+    def run():
+        mh, comp = _mk(tmp_path, f"run{len(runs)}")
+        runs.append(mh)
+        _ingest(spark, mh, comp, batch, wm=1)
+        return sorted(_maintained(spark, comp))
+
+    def check(rows):
+        assert set(rows) == _ground_truth(spark, runs[0])
+
+    return run, check
+
+
+def _baskets_route(fn_name, seed, n_orders, n_items, max_basket, k=None):
+    def make(spark, monkeypatch, tmp_path):
+        rows = _rand_baskets(seed, n_orders, n_items, max_basket)
+        li = spark.createDataFrame(rows, ["l_orderkey", "l_partkey"])
+        monkeypatch.setattr(olap_mod, "load_table", lambda s, d, n: li)
+        if k is not None:
+            monkeypatch.setattr(olap_mod, "_KCORE_K", k)
+
+        def run():
+            return sorted(
+                tuple(r) for r in getattr(olap_mod, fn_name)(spark, "ignored").collect()
+            )
+
+        def check(got):
+            if fn_name == "part_kcore_census":
+                want = _brute_kcore(_edges_from(rows, 1), k, olap_mod._KCORE_ROUNDS)
+                assert got == want, (seed, k)
+            elif fn_name == "part_triangle_count":
+                n, m, t, w = _brute_triangles(
+                    _edges_from(rows, olap_mod._TRI_MIN_COORDER)
+                )
+                assert got[0][:4] == (n, m, t, w)
+            else:
+                assert got, "the basket graph has communities of >= 3 parts"
+
+        return run, check
+
+    return make
+
+
+_ROUTES = {
+    "components": _components_route,
+    "component_index": _component_index_route,
+    "triangles": _baskets_route("part_triangle_count", "fastpath", 60, 18, 6),
+    "lpa": _baskets_route("part_label_propagation", "fastpath", 60, 18, 6),
+    "kcore-g1-2": _baskets_route("part_kcore_census", "g1", 50, 12, 5, k=2),
+    "kcore-hubby-4": _baskets_route("part_kcore_census", "hubby", 50, 12, 5, k=4),
+}
+
+
+@pytest.mark.parametrize("route", list(_ROUTES))
+def test_graph_route_equivalence(spark, monkeypatch, tmp_path, route):
+    """Each graph route returns the same rows on both lanes: at the
+    default cap every sizing step takes the driver lane in ONE Spark
+    job (a job group around each ``collect_arrow_capped`` call, read
+    through ``statusTracker``), and at cap -1 every one returns None and
+    the route's distributed loop runs. Calls without ``max_rows`` are
+    state writes, not graph sizing, and are not counted."""
+    run, check = _ROUTES[route](spark, monkeypatch, tmp_path)
+    sc = spark.sparkContext
+    real = arrowio.collect_arrow_capped
+    sizing = []
+
+    def spy(df, read_bytes=None, max_rows=None):
+        if max_rows is None:
+            return real(df, read_bytes=read_bytes)
+        group = f"graph-sizing-{route}-{len(sizing)}"
+        sc.setJobGroup(group, "graph route sizing")
+        try:
+            tbl = real(df, read_bytes=read_bytes, max_rows=max_rows)
+        finally:
+            for key in (
+                "spark.jobGroup.id",
+                "spark.job.description",
+                "spark.job.interruptOnCancel",
+            ):
+                sc.setLocalProperty(key, None)
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        sizing.append(("driver" if tbl is not None else "distributed", jobs))
+        return tbl
+
+    monkeypatch.setattr(arrowio, "collect_arrow_capped", spy)
+    driver = run()
+    assert sizing and all(s == ("driver", 1) for s in sizing), sizing
+    sizing.clear()
     monkeypatch.setattr(components_mod, "_GRAPH_DRIVER_CAP", -1)
-    slow = run()
-    assert slow == fast == _brute_kcore(
-        _edges_from(rows, 1), k, olap_mod._KCORE_ROUNDS
-    ), (seed, k)
+    distributed = run()
+    assert sizing and all(lane == "distributed" for lane, _ in sizing), sizing
+    assert distributed == driver
+    check(driver)
