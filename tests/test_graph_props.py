@@ -3,7 +3,9 @@ part_kcore_census against brute-force Python references on seeded random
 basket topologies. The sf oracles prove ENGINE parity on one dataset;
 these prove the ALGORITHMS (degree orientation, fixed-round peel) on
 arbitrary graphs — including shapes the synthetic corpus never produces
-(hubs, disconnected cliques, cascades deeper than one round)."""
+(hubs, disconnected cliques, cascades deeper than one round). The
+route-equivalence test at the end runs every graph route on both of its
+lanes, driver and distributed."""
 
 from __future__ import annotations
 
