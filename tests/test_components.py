@@ -36,3 +36,43 @@ def test_raises_instead_of_returning_partial_labels(spark, monkeypatch):
     nodes, edges = _chain(spark, 12)
     with pytest.raises(RuntimeError, match="fixpoint"):
         propagate_min_labels(nodes, edges, max_rounds=2)
+
+
+def test_union_find_fast_path_equals_distributed_loop(spark, monkeypatch):
+    """The driver union-find route (default: subgraph under the cap)
+    must return row-identical labels to the distributed propagation it
+    replaces — same node set (nodes ∪ edge endpoints), same min-reachable
+    label, including endpoints absent from ``nodes`` and isolated
+    self-labelled nodes."""
+    nodes = spark.createDataFrame(
+        [(i,) for i in range(8)], "doc_id long"
+    )  # 0..7; 50+51 appear only as edge endpoints
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (5, 6), (50, 51), (51, 1)], "src long, dst long"
+    )
+    fast = propagate_min_labels(nodes, edges)  # cap 200k -> union-find
+    rows_f = sorted((r["doc_id"], r["label"]) for r in fast.collect())
+    monkeypatch.setattr(components, "_GRAPH_DRIVER_CAP", -1)  # loop
+    dist = propagate_min_labels(nodes, edges)
+    rows_d = sorted((r["doc_id"], r["label"]) for r in dist.collect())
+    assert rows_f == rows_d
+    # the merged chain 50-51-1-2-3 labels to 1 (min id); singletons self
+    assert (50, 1) in rows_f and (3, 1) in rows_f and (0, 0) in rows_f
+
+
+def test_driver_cap_boundary_takes_distributed_route(spark, monkeypatch):
+    # a cap below the tagged subgraph's rows must fall through to the
+    # distributed loop and still produce identical labels
+    monkeypatch.setattr(components, "_GRAPH_DRIVER_CAP", 1)
+    calls = []
+    real = components._driver_union_find
+    monkeypatch.setattr(
+        components,
+        "_driver_union_find",
+        lambda *a, **k: calls.append(1) or real(*a, **k),
+    )
+    nodes, edges = _chain(spark, 10)
+    labels = propagate_min_labels(nodes, edges)
+    assert {r["label"] for r in labels.collect()} == {0}
+    assert labels.count() == 10
+    assert not calls
