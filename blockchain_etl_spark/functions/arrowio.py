@@ -1,10 +1,11 @@
-"""The one lane rule for maintained-state writes and graph routes:
-driver or distributed.
+"""The one lane rule for every file the follower, the maintained-state
+writers and the graph routes commit: driver or distributed.
 
-Every versioned merge (operators/merge.py), DocIngest chunk write
-(streaming/docs.py) and IVM segment write (operators/ivm.py) asks this
-module which lane its frame takes, whatever the load and whether or not
-a query gate is running. So does every graph route (the union-find in
+Every versioned merge and changelog segment (operators/merge.py),
+follower table write, compaction bucket and snapshot table
+(streaming/ingest.py), DocIngest chunk write (streaming/docs.py) and IVM
+segment write (operators/ivm.py) asks this module which lane its frame
+takes, whatever the load and whether or not a query gate is running. So does every graph route (the union-find in
 operators/components.py, the triangle census, LPA sweeps and k-core peel
 in plans/olap.py): it hands its lazily checkpointed subgraph to
 ``collect_arrow_capped`` with ``max_rows=_GRAPH_DRIVER_CAP``, solves it
@@ -13,28 +14,32 @@ distributed loop over the same checkpoint. For a write:
 
 - **driver lane** — ``DataFrame.toArrow()`` through a ``LIMIT`` of
   ``_DRIVER_ROWS_CAP + 1`` (one collect-style job executing the fold
-  lineage) plus one pyarrow file write. No write job, no Hadoop commit
-  protocol (``_temporary`` staging and renames), whose fixed few hundred
-  ms per commit dominate small state writes. The read path is
-  byte-identical (``spark.read.parquet`` on the directory).
-- **distributed lane** — Spark's parquet writer. Taken with no collect
-  when the files the frame reads are over ``_DRIVER_BYTES_CAP`` (found
-  from the plan's input files and their parquet footers, no job: a merge
-  reads its target's current version, a chunk write is bounded by its
-  crawl file); after the collect when the frame is over
-  ``_DRIVER_ROWS_CAP`` rows or ``_DRIVER_BYTES_CAP`` Arrow bytes; and
-  when its schema does not convert to Arrow.
+  lineage) plus one pyarrow file write, renamed into place. No write
+  job, no Hadoop commit protocol (``_temporary`` staging and renames),
+  whose fixed few hundred ms per commit dominate small state writes. The
+  read path is byte-identical (``spark.read.parquet`` on the directory).
+- **distributed lane** — Spark's parquet writer under the session's
+  committer. Taken with no collect when the files the frame reads are over
+  ``_DRIVER_BYTES_CAP`` (found from the plan's input files and their
+  parquet footers, no job: a merge reads its target's current version,
+  a follower or chunk write is bounded by its source batch); after the
+  collect when the frame is over ``_DRIVER_ROWS_CAP`` rows or
+  ``_DRIVER_BYTES_CAP`` Arrow bytes; and when its schema does not
+  convert to Arrow.
 
 The decision is made from sizes alone, so the path a test or a benchmark
 times is the path a production load of the same size runs. Rows a plan
 already holds in memory (cached or checkpointed frames, local relations)
 are not counted before the collect: a frame built from those, or one
 that a join or an explode makes larger than its inputs, is bounded only
-by the row cap until the collect has run and its bytes are known.
+by the row cap until the collect has run and its bytes are known. The
+JSON pointers that publish those files flip through ``publish_json``.
 """
 
 from __future__ import annotations
 
+import glob
+import json
 import logging
 import os
 import shutil
@@ -85,6 +90,21 @@ def input_bytes(df: DataFrame) -> float:
             return float("inf")
         total += file_bytes(unquote(u.path))
     return total
+
+
+def largest_file_bytes(pattern: str) -> int:
+    """``file_bytes`` of the largest data file under ``pattern`` (a glob
+    of files or directories), no job: the bound of a one-file streaming
+    microbatch, whose plan shows no file to ``input_bytes``."""
+    matches = glob.glob(pattern)
+    files = [m for m in matches if os.path.isfile(m)] + [
+        os.path.join(root, name)
+        for m in matches
+        for root, _, names in os.walk(m)
+        for name in names
+        if not name.startswith(("_", "."))
+    ]
+    return max(map(file_bytes, files), default=0)
 
 
 def collect_arrow_capped(
@@ -144,15 +164,14 @@ def write_parquet_driver(
 ) -> bool:
     """Overwrite ``directory`` with ``df``'s rows as ONE parquet file on
     the driver lane. Returns False, writing nothing, when
-    ``collect_arrow_capped`` refuses the frame. The target directory is
-    replaced atomically enough for the merge targets' publish model (the
-    version pointer flip is the real commit; an orphan directory above
-    the pointer is already ignored by readers). ``success_marker``: also
-    write the ``_SUCCESS`` file Spark's committer leaves, LAST, after the
-    data file, preserving the chunk-commit protocol
-    DocIngest._complete_chunks relies on (a crash mid-write leaves a
-    marker-less dir = in-flight debris, exactly as with the distributed
-    writer). ``read_bytes``: as in ``collect_arrow_capped``."""
+    ``collect_arrow_capped`` refuses the frame. The file is written under
+    a hidden name (readers skip a leading ``.``) and renamed once whole,
+    so a crash mid-file leaves no torn file a reader sees (a
+    ``blockrange=`` directory has no version pointer to hide one).
+    ``success_marker``: also write the ``_SUCCESS`` file Spark's
+    committer leaves, LAST, preserving the chunk-commit protocol
+    DocIngest._complete_chunks relies on. ``read_bytes``: as in
+    ``collect_arrow_capped``."""
     import pyarrow.parquet as pq
 
     tbl = collect_arrow_capped(df, read_bytes=read_bytes)
@@ -160,7 +179,9 @@ def write_parquet_driver(
         return False
     shutil.rmtree(directory, ignore_errors=True)
     os.makedirs(directory, exist_ok=True)
-    pq.write_table(tbl, os.path.join(directory, "part-00000.parquet"))
+    tmp = os.path.join(directory, ".part-00000.parquet.tmp")
+    pq.write_table(tbl, tmp)
+    os.replace(tmp, os.path.join(directory, "part-00000.parquet"))
     if success_marker:
         with open(os.path.join(directory, "_SUCCESS"), "w"):
             pass
@@ -205,3 +226,14 @@ def write_table_partitioned(tbl, directory: str, part_col: str) -> "list[int]":
         os.makedirs(d, exist_ok=True)
         pq.write_table(sub, os.path.join(d, "part-00000.parquet"))
     return vals
+
+
+def publish_json(path: str, obj) -> None:
+    """Write ``obj`` as JSON to ``path`` through a temp file renamed over
+    it, so readers see the old document or the new one: the commit point
+    of every versioned layout (on an object store, a conditional put)."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+    os.replace(tmp, path)

@@ -5,8 +5,8 @@ ComponentIndex fold in operators/component_index.py). Any
 (src, dst) edge frame works; label = min id reachable, and a node with
 no edge labels itself.
 
-One sizing step picks the lane. The edges and nodes are checkpointed
-lazily and their tagged union goes to ``arrowio.collect_arrow_capped``
+One sizing step picks the lane. The edges and the nodes (if any) are
+checkpointed lazily and their tagged union goes to ``arrowio.collect_arrow_capped``
 with ``max_rows=_GRAPH_DRIVER_CAP``: one Spark job sizes the subgraph
 and collects it. When a table comes back, a driver-side union-find
 labels it. Otherwise the distributed loop runs over the same
@@ -15,7 +15,8 @@ min-aggregate, converging in O(component diameter) rounds;
 localCheckpoint truncates lineage every round so the plan stays flat.
 The loop runs over edge endpoints only, so its shuffles never move the
 singletons that make up most of a corpus; members of ``nodes`` with no
-edge label themselves outside it. Both lanes return nodes ∪ endpoints.
+edge label themselves outside it. Both lanes return nodes ∪ endpoints;
+a caller that needs no singletons passes ``nodes=None``.
 
 Convergence detection: labels only ever DECREASE, so sum(label) is
 strictly monotone while anything changes — an O(1)-output aggregate per
@@ -70,13 +71,13 @@ def _driver_union_find(
 
 
 def propagate_min_labels(
-    nodes: DataFrame,
+    nodes: "DataFrame | None",
     edges: DataFrame,
     id_col: str = "doc_id",
     max_rounds: int = 30,
     loop_partitions: int | None = None,
 ) -> DataFrame:
-    """``nodes``: one row per vertex with column ``id_col``;
+    """``nodes``: one row per vertex with column ``id_col``, or None;
     ``edges``: (src, dst) directed pairs (symmetrized internally).
     Returns (``id_col``, label) for nodes ∪ edge endpoints, where label =
     min vertex id reachable; singletons label themselves. Both lanes
@@ -98,13 +99,14 @@ def propagate_min_labels(
     from ..functions import arrowio
 
     e0 = edges.select("src", "dst").localCheckpoint(eager=False)
-    n0 = nodes.select(col(id_col)).localCheckpoint(eager=False)
-    # ONE tagged frame carries both (ids are longs across every consumer;
-    # node rows ride with a NULL dst), so one capped collect sizes the
-    # whole subgraph and fills both checkpoints
-    tagged = e0.unionByName(
-        n0.select(col(id_col).alias("src"), F.lit(None).cast("long").alias("dst"))
-    )
+    tagged = e0
+    if nodes is not None:
+        # ONE tagged frame carries both (node rows ride with a NULL dst),
+        # so one capped collect sizes the subgraph and fills both
+        n0 = nodes.select(col(id_col)).localCheckpoint(eager=False)
+        tagged = e0.unionByName(
+            n0.select(col(id_col).alias("src"), F.lit(None).cast("long").alias("dst"))
+        )
     tbl = arrowio.collect_arrow_capped(tagged, max_rows=_GRAPH_DRIVER_CAP)
     if tbl is not None:
         from ..functions.localframe import local_df
@@ -117,7 +119,7 @@ def propagate_min_labels(
         # Arrow path (local_df), NOT createDataFrame(list): a plain-list
         # local relation executes through a Python-worker scan stage
         # costing seconds per downstream materialization.
-        out = local_df(nodes.sparkSession, labeled, f"{id_col} long, label long")
+        out = local_df(edges.sparkSession, labeled, f"{id_col} long, label long")
         return out.coalesce(1).localCheckpoint(eager=False)
     endpoints = (
         e0.select(col("src").alias(id_col))
@@ -162,7 +164,10 @@ def propagate_min_labels(
             "larger max_rounds — returning partial labels would silently "
             "split components"
         )
-    singles = n0.join(endpoints, [id_col], "left_anti").select(
-        id_col, col(id_col).alias("label")
-    )
-    return labels.unionByName(singles).localCheckpoint(eager=False)
+    if nodes is not None:
+        labels = labels.unionByName(
+            n0.join(endpoints, [id_col], "left_anti").select(
+                id_col, col(id_col).alias("label")
+            )
+        )
+    return labels.localCheckpoint(eager=False)

@@ -21,6 +21,8 @@ from __future__ import annotations
 import json
 import os
 
+from ..functions import arrowio
+
 
 class GenerationalLayout:
     """Mixin: requires a ``self.path`` root attribute."""
@@ -46,11 +48,8 @@ class GenerationalLayout:
         return os.path.join(self._gen_dir(self._gen()), name)
 
     def _publish_gen(self, gen: int) -> None:
-        os.makedirs(self.path, exist_ok=True)
-        tmp = self._gen_pointer + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"gen": gen}, f)
-        os.replace(tmp, self._gen_pointer)  # the rebuild's single commit point
+        # the rebuild's single commit point
+        arrowio.publish_json(self._gen_pointer, {"gen": gen})
 
     def _retire_gen(self, gen: int, legacy_stores: "tuple[str, ...]") -> None:
         """Best-effort reclaim of a superseded generation: readers in

@@ -55,6 +55,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col
 
+from ..functions import arrowio
+
 _W = "__w"
 _BUCKET = "__bucket"
 
@@ -130,9 +132,7 @@ class IncrementalJoinView:
         write does not schedule a duplicate distinct+collect job."""
         out = os.path.join(self.path, store, f"seg={seg}")
         if not isinstance(df, DataFrame):
-            from ..functions.arrowio import write_table_partitioned
-
-            return write_table_partitioned(df, out, _BUCKET)
+            return arrowio.write_table_partitioned(df, out, _BUCKET)
         df.write.mode("overwrite").partitionBy(_BUCKET).parquet(out)
         if buckets is not None:
             return sorted(int(b) for b in buckets)
@@ -256,11 +256,9 @@ class IncrementalJoinView:
         # driver bound takes the distributed lane: checkpoint, then one
         # bucket-list job that doubles as the emptiness guard (a
         # consolidated delta is empty exactly when its bucket list is).
-        from ..functions.arrowio import collect_arrow_capped
-
         def collect_side(d):
             """(join frame, or None when empty; write payload; buckets)"""
-            tbl = collect_arrow_capped(d)
+            tbl = arrowio.collect_arrow_capped(d)
             if tbl is not None:
                 buckets = sorted({int(v) for v in tbl.column(_BUCKET).to_pylist()})
                 return (spark.createDataFrame(tbl) if buckets else None), tbl, buckets
@@ -323,19 +321,15 @@ class IncrementalJoinView:
 
         run_tasks(spark, [(w[0], lambda w=w: write(*w)) for w in writes])
 
-        os.makedirs(self.path, exist_ok=True)
         wms = dict(m["watermarks"])
         if watermark_a is not None and had_a:
             wms["a"] = int(watermark_a)
         if watermark_b is not None and had_b:
             wms["b"] = int(watermark_b)
-        tmp = self._manifest_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(
-                {"watermarks": wms, "next_seg": seg + 1, "segments": wrote, "buckets": bmap},
-                f,
-            )
-        os.replace(tmp, self._manifest_path)  # publish: atomic pointer flip
+        arrowio.publish_json(  # publish: atomic pointer flip
+            self._manifest_path,
+            {"watermarks": wms, "next_seg": seg + 1, "segments": wrote, "buckets": bmap},
+        )
         return True
 
     # -- reads -------------------------------------------------------------
@@ -397,18 +391,15 @@ class IncrementalJoinView:
                 continue
             new_buckets[store] = {str(seg): self._write_segment(folded, store, seg)}
             new_segments[store] = [seg]
-        tmp = self._manifest_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(
-                {
-                    "watermarks": m["watermarks"],
-                    "next_seg": seg + 1,
-                    "segments": new_segments,
-                    "buckets": new_buckets,
-                },
-                f,
-            )
-        os.replace(tmp, self._manifest_path)
+        arrowio.publish_json(
+            self._manifest_path,
+            {
+                "watermarks": m["watermarks"],
+                "next_seg": seg + 1,
+                "segments": new_segments,
+                "buckets": new_buckets,
+            },
+        )
 
     def vacuum(self) -> "dict[str, list[int]]":
         """Delete every ``seg=N`` directory the manifest no longer

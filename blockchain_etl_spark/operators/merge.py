@@ -100,8 +100,9 @@ class ParquetMergeTarget:
     Layout: ``<path>/v=<n>/`` data directories plus ``<path>/_current.json``
     holding the live version — readers always see a complete table, and a
     replayed merge simply writes the next version (idempotent at the
-    pipeline level because merge_latest is deterministic). Each version
-    is written through the lane functions/arrowio.py picks from its size.
+    pipeline level because merge_latest is deterministic). Each version,
+    and each CDC changelog segment, is written through the lane
+    functions/arrowio.py picks from its size.
     """
 
     def __init__(self, path: str):
@@ -292,8 +293,6 @@ class ParquetMergeTarget:
             # write-audit-publish guarantee as before.
             new = self._read_written(spark, merged, next_v)
             self._write_changelog(target, new, list(changelog_keys), next_v)
-        os.makedirs(self.path, exist_ok=True)
-        tmp = self._pointer + ".tmp"
         meta = {"version": next_v}
         if watermark is not None:
             meta["watermark"] = watermark
@@ -306,9 +305,7 @@ class ParquetMergeTarget:
             prior = self._meta().get("watermark")
             if prior is not None:
                 meta["watermark"] = prior
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, self._pointer)  # publish: atomic pointer flip
+        arrowio.publish_json(self._pointer, meta)  # publish: atomic pointer flip
         return self._read_written(spark, merged, next_v)
 
     def _read_written(
@@ -366,9 +363,10 @@ class ParquetMergeTarget:
                 # updates would be un-subtractable.
                 col("__before"),
             ).filter(col("__op").isNotNull())
-        out.select(*keys, "__op", col("__row.*"), "__before").write.mode(
-            "overwrite"
-        ).parquet(os.path.join(self.path, "changelog", f"v={version}"))
+        arrowio.write_parquet(
+            out.select(*keys, "__op", col("__row.*"), "__before"),
+            os.path.join(self.path, "changelog", f"v={version}"),
+        )
 
     def read_changelog(self, spark: SparkSession, version: int) -> DataFrame | None:
         p = os.path.join(self.path, "changelog", f"v={version}")

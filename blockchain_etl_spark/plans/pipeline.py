@@ -287,13 +287,7 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     # near-dup subgraph, not 100 TB of singleton labels)
     from ..operators.components import propagate_min_labels
 
-    edges = _dedup_edges(spark, sf_dir).localCheckpoint()  # endpoints + rounds
-    nodes = (
-        edges.select(col("src").alias("doc_id"))
-        .unionByName(edges.select(col("dst").alias("doc_id")))
-        .distinct()
-    )
-    labels = propagate_min_labels(nodes, edges, id_col="doc_id")
+    labels = propagate_min_labels(None, _dedup_edges(spark, sf_dir), id_col="doc_id")
     return (
         labels.groupBy(col("label").alias("component_id"))
         .agg(F.count(F.lit(1)).alias("n_docs"), F.min("doc_id").alias("keep_doc_id"))
@@ -2020,15 +2014,9 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # audit inner-joins on pair endpoints); propagating and bucketing over
     # the edge-induced node set instead of the whole corpus leaves every
     # audited value unchanged and cuts all node-grain work from |corpus|
-    # to |endpoints|
-    endpoints = (
-        e.select(col("doc_a").alias("doc_id"))
-        .unionByName(e.select(col("doc_b").alias("doc_id")))
-        .distinct()
-        .localCheckpoint()  # consumers: propagation + naive bucket map
-    )
+    # to |endpoints|: with no nodes, the labels cover the endpoints alone
     labels = propagate_min_labels(
-        endpoints,
+        None,
         e.select(col("doc_a").alias("src"), col("doc_b").alias("dst")),
         id_col="doc_id",
     )
@@ -2043,7 +2031,7 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     # BOTH schemes' buckets ride ONE endpoint-grain map (labels covers
-    # every endpoint by construction — propagation ran over `endpoints` —
+    # every endpoint and nothing else: propagation ran over the edges alone —
     # so naive's md5(doc_id) bucket over labels.doc_id IS the naive map),
     # BROADCAST into a single pair-grain pass: the audit was 4 shuffled
     # pair-grain joins + 2 aggregates (2 schemes x 2 endpoints); it is

@@ -1213,13 +1213,7 @@ def embedding_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # clusters of >1 only contain edge endpoints — propagate over the
     # near-dup subgraph, not the whole corpus (see dedup_components)
-    pairs = pairs.localCheckpoint()  # endpoints + propagation both consume
-    nodes = (
-        pairs.select(col("src").alias("vec_id"))
-        .unionByName(pairs.select(col("dst").alias("vec_id")))
-        .distinct()
-    )
-    labels = propagate_min_labels(nodes, pairs, id_col="vec_id")
+    labels = propagate_min_labels(None, pairs, id_col="vec_id")
     return (
         labels.groupBy(col("label").alias("cluster_id"))
         .agg(F.count(F.lit(1)).alias("n_vecs"), F.min("vec_id").alias("keep_vec_id"))

@@ -12,6 +12,10 @@ per-machine:
 - Arrow enabled for the few Pandas-UDF paths (multimodal stubs), never the
   relational hot path.
 - Session timezone pinned UTC so timestamp semantics match the oracle.
+- No committer override: Spark's parquet writer commits with Spark's
+  default (FileOutputCommitter v1); small state writes skip it through
+  the driver lane (functions/arrowio.py). A deployment whose store needs
+  another committer sets it with ``--conf`` or ``spark-defaults.conf``.
 """
 
 from __future__ import annotations
@@ -40,20 +44,6 @@ def get_spark(app_name: str = "blockchain-etl-spark", master: str | None = None)
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
-        # FileOutputCommitter algorithm 2: task commits rename straight to
-        # the destination; job commit only drops _SUCCESS. The v1 two-phase
-        # rename costs a full extra sequential rename pass per commit,
-        # which dominates the maintained-state operators' many small
-        # versioned writes (measured round 14: 30 small overwrites 23.3s
-        # -> 13.5s on local[8]). Safe under this engine's publish model —
-        # every maintained target commits via an atomic manifest/pointer
-        # flip and ignores orphan files, so v2's weaker mid-job-failure
-        # guarantees are not load-bearing. Parameterized for deployments
-        # whose object store needs a store-specific committer instead.
-        .config(
-            "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version",
-            os.environ.get("SPARK_GRAFT_COMMITTER_ALGO", "2"),
-        )
         .config(
             "spark.sql.warehouse.dir",
             os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/spark-graft-warehouse"),

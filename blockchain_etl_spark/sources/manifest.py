@@ -39,6 +39,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import arrowio
+
 _MANIFEST = "_zonemap.json"
 
 
@@ -107,10 +109,7 @@ def update_manifest(table_dir: str, stats_cols: list[str]) -> dict:
     for r, full in rel.items():
         if r not in manifest["files"]:
             manifest["files"][r] = _file_stats(full, stats_cols)
-    tmp = mpath + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
-    os.replace(tmp, mpath)
+    arrowio.publish_json(mpath, manifest)
     return manifest
 
 

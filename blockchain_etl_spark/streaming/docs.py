@@ -694,11 +694,7 @@ class DocIngest:
                 base = json.load(f)["base"]
         else:
             base = self.hashes.watermark() + 1
-            os.makedirs(ckpt, exist_ok=True)
-            tmp = base_file + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump({"base": base}, f)
-            os.replace(tmp, base_file)
+            arrowio.publish_json(base_file, {"base": base})
         stream = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)  # one crawl file per microbatch
@@ -706,17 +702,7 @@ class DocIngest:
         )
         # a microbatch's plan does not show its file: bound every batch
         # by the largest crawl file pending
-        import glob as _glob
-
-        matches = _glob.glob(input_dir)
-        crawl_files = [m for m in matches if os.path.isfile(m)] + [
-            os.path.join(root, name)
-            for m in matches
-            for root, _, names in os.walk(m)
-            for name in names
-            if not name.startswith(("_", "."))
-        ]
-        largest = max(map(arrowio.file_bytes, crawl_files), default=0)
+        largest = arrowio.largest_file_bytes(input_dir)
         q = (
             stream.writeStream.foreachBatch(
                 lambda batch, epoch: self.process_batch(batch, base + epoch, largest)

@@ -24,6 +24,10 @@ Reference semantics being emulated (and how):
   (streaming/fanout.py). Every task runs to completion before a failure is
   re-raised; the handlers that succeeded stay committed, the watermark does
   not move, and the replay of the range converges.
+- One lane rule: every file the follower commits (tables, inventories,
+  changelogs, compaction buckets, snapshots) takes functions/arrowio.py's
+  driver or distributed lane; the table writes are bounded before any
+  collect by the bytes of the files the batch reads.
 - One offset: the archive follower (``run_blockfiles_stream``) runs no
   streaming query. The sync watermark is its only offset: each call reads
   the contiguous run of landed archives above it in one batch and ingests
@@ -49,6 +53,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col
 
+from ..functions import arrowio
 from ..operators.actors import extract_actors
 from ..sources.blockchain import FIELDS_SCHEMAS
 from .entities import gateway_history, oui_history, validator_history, vars_history
@@ -248,16 +253,17 @@ class BlockIngest:
             return 0
 
     def _write_sync_height(self, height: int) -> None:
-        os.makedirs(os.path.dirname(self._sync_path), exist_ok=True)
-        tmp = self._sync_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"height": height}, f)
-        os.replace(tmp, self._sync_path)
+        arrowio.publish_json(self._sync_path, {"height": height})
 
     # -- batch processing ---------------------------------------------
-    def process_batch(self, batch: DataFrame, batch_id: int) -> None:
+    def process_batch(
+        self, batch: DataFrame, batch_id: int, batch_bytes: "float | None" = None
+    ) -> None:
         """foreachBatch body: order-check, derive, commit every handler,
-        advance the watermark last.
+        advance the watermark last. ``batch_bytes`` bounds the 10 table
+        writes before any collect, as in ``DocIngest.process_batch``;
+        default ``arrowio.input_bytes(batch)``, taken before the cache
+        (a cached plan shows no file).
 
         The 10 table writes and the inventory merges (``accounts`` plus
         ``INVENTORIES``, each followed by its stats view when
@@ -270,6 +276,7 @@ class BlockIngest:
         converges, since each table write overwrites its own
         ``blockrange=`` directory and each merge skips itself on its own
         watermark."""
+        read = arrowio.input_bytes(batch) if batch_bytes is None else batch_bytes
         batch = batch.cache()
         try:
             # the probe scans every partition, so it also fills the cache:
@@ -295,7 +302,7 @@ class BlockIngest:
                 (
                     name,
                     lambda df=df, path=os.path.join(self.out_dir, name, rng): (
-                        df.write.mode("overwrite").parquet(path)
+                        arrowio.write_parquet(df, path, read_bytes=read)
                     ),
                 )
                 for name, df in tables.items()
@@ -533,7 +540,7 @@ class BlockIngest:
             if os.path.isdir(bucket_dir):
                 bucket_df = bucket_df.unionByName(spark.read.parquet(bucket_dir))
             tmp = bucket_dir + ".tmp"
-            bucket_df.write.mode("overwrite").parquet(tmp)
+            arrowio.write_parquet(bucket_df, tmp)
             with open(os.path.join(tmp, "_folded_ranges.json"), "w") as f:
                 json.dump(sorted(folded | set(new_names)), f)
             if os.path.isdir(bucket_dir):
@@ -574,16 +581,14 @@ class BlockIngest:
                 # mid-write) must surface, not silently thin the snapshot.
                 skipped.append(name)
                 continue
-            df.write.mode("overwrite").parquet(os.path.join(snap_dir, name))
+            arrowio.write_parquet(df, os.path.join(snap_dir, name))
             written.append(name)
         if skipped:
             _log.info("write_snapshot: skipped absent tables: %s", ", ".join(skipped))
-        manifest = os.path.join(self.out_dir, "snapshots", "latest-snap.json")
-        os.makedirs(os.path.dirname(manifest), exist_ok=True)
-        tmp = manifest + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"height": height, "dir": snap_dir, "tables": written}, f)
-        os.replace(tmp, manifest)
+        arrowio.publish_json(
+            os.path.join(self.out_dir, "snapshots", "latest-snap.json"),
+            {"height": height, "dir": snap_dir, "tables": written},
+        )
         return snap_dir
 
     # -- streaming wrapper (S1) ---------------------------------------
@@ -591,14 +596,18 @@ class BlockIngest:
         """Consume a file stream of transaction rows with availableNow
         semantics: every pending file is processed in bounded microbatches,
         then the query stops — the batch-first, streaming-second design
-        (SURVEY §7.1)."""
+        (SURVEY §7.1). Each microbatch is bounded by the largest pending
+        file (its plan shows none)."""
+        largest = arrowio.largest_file_bytes(input_dir)
         stream = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)  # reference block_sync batching
             .parquet(input_dir)
         )
         q = (
-            stream.writeStream.foreachBatch(self.process_batch)
+            stream.writeStream.foreachBatch(
+                lambda batch, epoch: self.process_batch(batch, epoch, largest)
+            )
             .option("checkpointLocation", os.path.join(self.out_dir, "_checkpoint"))
             .trigger(availableNow=True)
             .start()

@@ -99,11 +99,11 @@ def test_build_query_prune_and_recall(spark, tmp_path, built):
     assert recall >= 0.5, recall
 
 
-def test_build_is_deterministic(spark, tmp_path):
-    emb = _emb(spark)
-    a, b = IVFIndex(str(tmp_path / "a")), IVFIndex(str(tmp_path / "b"))
-    a.build(spark, emb, n_cells=N_CELLS)
-    b.build(spark, emb, n_cells=N_CELLS)
+def test_build_is_deterministic(spark, tmp_path, built):
+    # two independent builds over every vector: the module's shared one
+    # and a fresh one
+    a, b = built(tmp_path / "a"), IVFIndex(str(tmp_path / "b"))
+    b.build(spark, _emb(spark), n_cells=N_CELLS)
     def rows(path):
         return {
             tuple(tuple(v) if isinstance(v, list) else v for v in r)

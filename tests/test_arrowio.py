@@ -419,7 +419,48 @@ def _run_cms(spark, root, step_lane):
     }
 
 
+def _txns(spark):
+    from pyspark.sql import Row
+
+    from blockchain_etl_spark.sources.blockchain import SCHEMAS
+    from tests.fixtures_blockchain import gen_transactions
+
+    _, txns = gen_transactions()
+    return spark.createDataFrame([Row(**t) for t in txns], SCHEMAS["transactions"])
+
+
+def _run_follower(spark, root, step_lane):
+    """Two follower batches with inventories and their stats views, then
+    a compaction of two tables and a snapshot over the mixed layout."""
+    from blockchain_etl_spark.streaming.ingest import INVENTORIES, TABLES, BlockIngest
+
+    txns = _txns(spark)
+    ing = BlockIngest(root, maintain_inventories=True, maintain_stats=True)
+    for b, part in enumerate((F.col("block") <= 60, F.col("block") > 60)):
+        step_lane(b)
+        ing.process_batch(txns.filter(part), b)
+    step_lane(2)
+    for name in ("transactions", "rewards"):
+        ing.compact(spark, name, blocks_per_bucket=50)
+    snap = ing.write_snapshot(spark, 90)
+    tables = {name: ing.read_table(spark, name) for name in TABLES}
+    inventories = ("accounts", *INVENTORIES)
+    targets = [ing.inventory_target(n) for n in inventories]
+    return {
+        "rows": (
+            {name: _rows(df) for name, df in tables.items()},
+            {n: _rows(spark.read.parquet(os.path.join(snap, n))) for n in TABLES},
+            {n: _rows(ing.read_inventory(spark, n)) for n in inventories},
+            _rows(ing.stats_inventory(spark)),
+        ),
+        "schema": {name: _schema(df) for name, df in tables.items()},
+        "versions": [t.versions() for t in targets],
+        "watermark": (ing.sync_height(), [t.watermark() for t in targets]),
+    }
+
+
 _WRITERS = {
+    "follower": _run_follower,
     "merge": lambda spark, root, lane: _run_merge(spark, root, lane, False),
     "merge_changelog": lambda spark, root, lane: _run_merge(spark, root, lane, True),
     "doc_chunks": _run_doc_chunks,
@@ -436,7 +477,7 @@ def test_route_equivalence(spark, tmp_path, monkeypatch, writer):
     picks for these small frames, and (merge) the two lanes alternating
     step by step on one target. Identical read-back rows, schema,
     versions and watermarks; each run is checked to have used the lane
-    it was meant to."""
+    it was meant to, and that lane alone for every file it wrote."""
 
     def forced(step):
         _force_distributed(monkeypatch)
@@ -459,9 +500,7 @@ def test_route_equivalence(spark, tmp_path, monkeypatch, writer):
         if name == "alternating":
             assert used == {"driver", "distributed"}, used
         else:
-            assert name in used, used
-            if name == "distributed":
-                assert used == {"distributed"}, used
+            assert used == {name}, used
     first = got["distributed"]
     for name, out in got.items():
         assert out == first, (name, out, first)
@@ -557,3 +596,75 @@ def test_chunk_batch_over_the_byte_bound_runs_no_collect(spark, tmp_path, monkey
         assert _lanes(chunk) == {"distributed"}
         assert "_SUCCESS" in os.listdir(chunk)
         assert _rows(ing.read_corpus(spark)) == _rows(batch)
+
+
+def test_driver_write_failing_mid_file_leaves_no_visible_file(spark, tmp_path, monkeypatch):
+    """A driver-lane write that dies part-way through its file (disk
+    full, killed process) leaves no ``part-00000.parquet`` behind: a
+    ``blockrange=`` directory has no version pointer to hide a torn
+    file, so readers of the table must see the committed ranges only."""
+    import pyarrow.parquet as pq
+
+    table = str(tmp_path / "transactions")
+    assert write_parquet_driver(spark.range(0, 5), os.path.join(table, "blockrange=1-5"))
+
+    def torn(tbl, where, *args, **kwargs):
+        with open(where, "wb") as f:
+            f.write(b"PAR1 torn")
+        raise OSError("disk full")
+
+    monkeypatch.setattr(pq, "write_table", torn)
+    torn_dir = os.path.join(table, "blockrange=6-9")
+    with pytest.raises(OSError, match="disk full"):
+        write_parquet_driver(spark.range(5, 9), torn_dir)
+    monkeypatch.undo()
+    assert not os.path.exists(os.path.join(torn_dir, "part-00000.parquet"))
+    back = spark.read.option("basePath", table).parquet(
+        os.path.join(table, "blockrange=*")
+    )
+    assert sorted(r.id for r in back.collect()) == list(range(5))
+
+
+def test_follower_batch_over_the_byte_bound_runs_no_collect(spark, tmp_path, monkeypatch):
+    """A follower batch far under the row cap whose source files are over
+    the byte bound: its 10 table writes read the source's size before any
+    job and take Spark's writer, so no table is collected on the driver.
+    Both ways a batch arrives: a catch-up over landed block archives (the
+    batch's plan shows the files, until it is cached), and a streaming
+    microbatch over parquet files, whose plan shows none. Each lake holds
+    the same tables as the batch derivation."""
+    import blockchain_etl_spark.functions.arrowio as arrowio
+    from blockchain_etl_spark.sources.blockchain import SCHEMAS
+    from blockchain_etl_spark.streaming.ingest import TABLES, BlockIngest, derive_tables
+    from tests.fixtures_blockchain import gen_transactions
+    from tests.test_blockfiles import _write_chain_archive
+
+    blocks, txn_rows = gen_transactions()
+    by_height: dict = {}
+    for t in txn_rows:
+        by_height.setdefault(t["block"], []).append(t)
+    chain = (by_height, {b["height"]: b["time"] for b in blocks}, txn_rows)
+    archives = str(tmp_path / "archives")
+    os.makedirs(archives)
+    _write_chain_archive(archives, chain, 1, 60)
+    txns = _txns(spark).filter(F.col("block") <= 60)
+    crawl = str(tmp_path / "crawl")
+    txns.coalesce(1).write.parquet(os.path.join(crawl, "chunk=0"))
+
+    for arrival in ("archives", "stream"):
+        ing = BlockIngest(str(tmp_path / arrival))
+        source = archives if arrival == "archives" else crawl + "/chunk=*"
+        monkeypatch.setattr(
+            arrowio, "_DRIVER_BYTES_CAP", arrowio.largest_file_bytes(source) - 1
+        )
+        _no_collect(spark, monkeypatch)
+        if arrival == "archives":
+            ing.run_blockfiles_stream(spark, archives)
+        else:
+            ing.run_stream(spark, source, SCHEMAS["transactions"])
+        monkeypatch.undo()
+        assert ing.sync_height() == 60
+        want = derive_tables(txns)
+        for name in TABLES:
+            assert _lanes(os.path.join(ing.out_dir, name)) == {"distributed"}, name
+            assert _rows(ing.read_table(spark, name)) == _rows(want[name]), name

@@ -384,9 +384,10 @@ def test_coalesced_catchup_equals_sequential_upserts(spark, tmp_path):
     for wm, rows in ((1, b1), (2, b2), (3, b3)):
         _ingest(spark, mh_s, comp_s, rows, wm=wm)
 
+    # the component index only reads the MinHash index, so the signature
+    # state the three upserts leave is the sequential run's: copy it
+    shutil.copytree(tmp_path / "seq_mh", tmp_path / "coal_mh")
     mh_c, comp_c = _mk(tmp_path, "coal")
-    for wm, rows in ((1, b1), (2, b2), (3, b3)):
-        mh_c.upsert(spark, _batch(spark, rows), watermark=wm)
     assert comp_c.upsert_coalesced(
         spark,
         [(wm, _batch(spark, rows).select("doc_id"))
@@ -411,9 +412,11 @@ def test_coalesced_catchup_on_existing_state(spark, tmp_path, b01_root):
     for wm, rows in seqs[1:]:
         _ingest(spark, mh_s, comp_s, rows, wm=wm)
 
-    mh_c, comp_c = _copy_b01(b01_root, tmp_path, "coal2")  # published base state
-    for wm, rows in seqs[1:]:
-        mh_c.upsert(spark, _batch(spark, rows), watermark=wm)
+    # the published base state's labels, and the signatures the
+    # sequential run's upserts left (the component index only reads them)
+    shutil.copytree(b01_root / "b01_comp", tmp_path / "coal2_comp")
+    shutil.copytree(tmp_path / "seq2_mh", tmp_path / "coal2_mh")
+    mh_c, comp_c = _mk(tmp_path, "coal2")
     assert comp_c.upsert_coalesced(
         spark,
         [(wm, _batch(spark, rows).select("doc_id")) for wm, rows in seqs[1:]],

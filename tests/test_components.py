@@ -76,3 +76,29 @@ def test_driver_cap_boundary_takes_distributed_route(spark, monkeypatch):
     assert {r["label"] for r in labels.collect()} == {0}
     assert labels.count() == 10
     assert not calls
+
+
+def test_no_nodes_collects_exactly_the_edge_rows(spark, monkeypatch):
+    """With ``nodes=None`` the capped collect carries the edge rows and
+    nothing else, so the graph cap counts edges alone; both lanes still
+    label every endpoint."""
+    from blockchain_etl_spark.functions import arrowio
+
+    seen = []
+    real = arrowio.collect_arrow_capped
+
+    def spy(df, *a, **k):
+        tbl = real(df, *a, **k)
+        seen.append(None if tbl is None else sorted(zip(*tbl.to_pydict().values())))
+        return tbl
+
+    monkeypatch.setattr(arrowio, "collect_arrow_capped", spy)
+    edge_rows = [(1, 2), (2, 3), (5, 6), (50, 51), (51, 1)]
+    edges = spark.createDataFrame(edge_rows, "src long, dst long")
+    fast = sorted(tuple(r) for r in propagate_min_labels(None, edges).collect())
+    assert seen == [sorted(edge_rows)]
+    monkeypatch.setattr(components, "_GRAPH_DRIVER_CAP", len(edge_rows) - 1)
+    dist = sorted(tuple(r) for r in propagate_min_labels(None, edges).collect())
+    assert seen[1:] == [None]
+    want = [(1, 1), (2, 1), (3, 1), (5, 5), (6, 5), (50, 1), (51, 1)]
+    assert fast == dist == want
