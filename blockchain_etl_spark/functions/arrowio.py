@@ -5,12 +5,13 @@ Every versioned merge and changelog segment (operators/merge.py),
 follower table write, compaction bucket and snapshot table
 (streaming/ingest.py), DocIngest chunk write (streaming/docs.py) and IVM
 segment write (operators/ivm.py) asks this module which lane its frame
-takes, whatever the load and whether or not a query gate is running. So does every graph route (the union-find in
-operators/components.py, the triangle census, LPA sweeps and k-core peel
-in plans/olap.py): it hands its lazily checkpointed subgraph to
-``collect_arrow_capped`` with ``max_rows=_GRAPH_DRIVER_CAP``, solves it
-on the driver when a table comes back, and otherwise runs its
-distributed loop over the same checkpoint. For a write:
+takes, whatever the load and whether or not a query gate is running. So
+does every graph route (the union-find in operators/components.py, the
+triangle census, LPA sweeps and k-core peel in plans/olap.py): it
+hands its lazily checkpointed subgraph to ``collect_arrow_capped`` with
+``max_rows=_GRAPH_DRIVER_CAP``, solves it on the driver when a table
+comes back, and otherwise runs its distributed loop over the same
+checkpoint. For a write:
 
 - **driver lane** — ``DataFrame.toArrow()`` through a ``LIMIT`` of
   ``_DRIVER_ROWS_CAP + 1`` (one collect-style job executing the fold

@@ -6,13 +6,14 @@ ComponentIndex fold in operators/component_index.py). Any
 no edge labels itself.
 
 One sizing step picks the lane. The edges and the nodes (if any) are
-checkpointed lazily and their tagged union goes to ``arrowio.collect_arrow_capped``
-with ``max_rows=_GRAPH_DRIVER_CAP``: one Spark job sizes the subgraph
-and collects it. When a table comes back, a driver-side union-find
-labels it. Otherwise the distributed loop runs over the same
-checkpoints: per round one shuffle join edges⋈labels and one
-min-aggregate, converging in O(component diameter) rounds;
-localCheckpoint truncates lineage every round so the plan stays flat.
+checkpointed lazily and their tagged union goes to
+``arrowio.collect_arrow_capped`` with ``max_rows=_GRAPH_DRIVER_CAP``:
+one Spark job sizes the subgraph and collects it. When a table comes
+back, a driver-side union-find labels it. Otherwise the distributed
+loop runs over the same checkpoints: per round one shuffle join
+edges⋈labels and one min-aggregate, converging in O(component diameter)
+rounds; localCheckpoint truncates lineage every round so the plan stays
+flat.
 The loop runs over edge endpoints only, so its shuffles never move the
 singletons that make up most of a corpus; members of ``nodes`` with no
 edge label themselves outside it. Both lanes return nodes ∪ endpoints;
