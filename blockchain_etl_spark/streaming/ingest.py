@@ -648,12 +648,12 @@ class BlockIngest:
         prev = conf.get(key)
         conf.set(key, str(max(len(run), int(prev))))
         try:
-            blocks = (
-                spark.read.schema(SCHEMA)
-                .option("mode", "FAILFAST")
-                .json([f.path for f in run])
-                .filter(col("height") >= next_height)
-            )
+            blocks = spark.read.schema(SCHEMA).option("mode", "FAILFAST").json([f.path for f in run])
         finally:
             conf.set(key, prev)
+        # Only a first archive that straddles next_height holds consumed
+        # blocks. The filter's literal is inlined into generated code, so
+        # applying it on every catch-up compiles fresh classes each time.
+        if run[0].lo < next_height:
+            blocks = blocks.filter(col("height") >= next_height)
         self.process_batch(explode_txns(blocks), next_height)

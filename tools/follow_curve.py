@@ -9,6 +9,11 @@ inventories maintained, the production follower configuration:
 2. the burst: ``size`` more blocks land as 20-block archives and one timed
    catch-up ingests them as ONE microbatch.
 
+Each timed catch-up also records its Janino compiles (Spark's
+``CodegenMetrics``) and the JVM's JIT compilation milliseconds
+(``CompilationMXBean``), the fixed cost a microbatch pays when generated
+classes are not reused.
+
 Sizes are interleaved within each rep, so a slow spell of the host hits
 every size alike. One untimed burst before the reps pays the session's
 first-use cost (JIT, code generation). From the per-size medians the tool
@@ -42,8 +47,17 @@ MAINNET_BLOCKS = 1_526_437  # BASELINE.md, mainnet scale anchor
 PER_ARCHIVE = 20  # blocks per landed archive
 
 
-def _catch_up(spark, size: int, seed: int) -> float:
-    """Seconds for one timed ``size``-block catch-up on a fresh lake."""
+def _compile_counters(spark) -> "tuple[int, int]":
+    """(Janino compiles, JIT milliseconds) so far in the session's JVM."""
+    jvm = spark.sparkContext._jvm
+    janino = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    jit = jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
+    return janino.getCount(), jit.getTotalCompilationTime()
+
+
+def _catch_up(spark, size: int, seed: int) -> "tuple[float, int, int]":
+    """Seconds, Janino compiles and JIT milliseconds for one timed
+    ``size``-block catch-up on a fresh lake."""
     from blockchain_etl_spark.sources.blockfiles import list_block_files
     from blockchain_etl_spark.streaming.ingest import BlockIngest
     from perfbench.datagen import write_block_archives
@@ -59,12 +73,14 @@ def _catch_up(spark, size: int, seed: int) -> float:
         ing.run_blockfiles_stream(spark, feed)
         for f in rest:
             shutil.copy(f.path, feed)
+        c0 = _compile_counters(spark)
         t0 = time.perf_counter()
         ing.run_blockfiles_stream(spark, feed)
         dt = time.perf_counter() - t0
+        c1 = _compile_counters(spark)
         if ing.sync_height() != PER_ARCHIVE + size:
             raise RuntimeError(f"catch-up of {size} blocks stopped at {ing.sync_height()}")
-        return dt
+        return dt, c1[0] - c0[0], c1[1] - c0[1]
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -101,11 +117,19 @@ def main(argv: "list[str] | None" = None) -> int:
     try:
         _catch_up(spark, PER_ARCHIVE, args.seed)  # session warm-up
         times: dict[int, list[float]] = {s: [] for s in sizes}
+        compiles: dict[int, list[int]] = {s: [] for s in sizes}
+        jit_ms: dict[int, list[int]] = {s: [] for s in sizes}
         for rep in range(args.reps):
             for size in sizes:
-                dt = _catch_up(spark, size, args.seed)
+                dt, n_compiles, n_jit_ms = _catch_up(spark, size, args.seed)
                 times[size].append(dt)
-                print(f"rep {rep + 1} size {size}: {dt:.2f}s", file=sys.stderr)
+                compiles[size].append(n_compiles)
+                jit_ms[size].append(n_jit_ms)
+                print(
+                    f"rep {rep + 1} size {size}: {dt:.2f}s, {n_compiles} compiles, "
+                    f"JIT {n_jit_ms} ms",
+                    file=sys.stderr,
+                )
     finally:
         spark.stop()
 
@@ -118,6 +142,8 @@ def main(argv: "list[str] | None" = None) -> int:
                 "blocks": size,
                 "seconds": [round(t, 3) for t in times[size]],
                 "median_s": round(med, 3),
+                "janino_compiles": compiles[size],
+                "jit_ms": jit_ms[size],
                 "blocks_per_s": round(bps, 2),
                 "mainnet_catch_up_h": round(MAINNET_BLOCKS / bps / 3600, 1),
             }
